@@ -93,13 +93,11 @@ object LogCorpus {
     * narrowest possible payload (vs the 15 parsed columns), the range
     * exchange keys on the 8-byte BIGINT (vs worst-case shared-prefix
     * string compares), its output supplies the parse's data-parallelism,
-    * and the post-sort parse is [[LogParser.parseSepFree]]'s single regex
-    * run per row — the corpus is printable-ASCII, separator-free by
-    * construction. At 100 TB the sort disappears entirely (replaced by a
+    * and the post-sort parse is one [[graft.functions.ClfParse]] kernel
+    * call per row. At 100 TB the sort disappears entirely (replaced by a
     * partitioned write); it exists for the oracle hash gate. */
   def parsedValidVolume(spark: SparkSession): DataFrame =
-    LogParser.parseSepFree(corpus(spark).orderBy("line_id"), Seq("line_id"))
-      .where(col("host") =!= "")
+    LogParser.validLines(corpus(spark).orderBy("line_id"), Seq("line_id"))
       .select(col("line_id"), col("raw"), col("host"), col("day"), col("month"), col("year"),
         col("hour"), col("minute"), col("second"), col("timezone"),
         col("date").cast("long").as("ts_sec"),
@@ -117,9 +115,9 @@ object LogCorpus {
     * dead-letter stream is materialized ONCE, at ingest: it IS the
     * dead-letter queue (reference StreamingJob.scala:145–147 — the
     * reject side of the parse split), and every downstream audit reads
-    * the DLQ table rather than re-running the reject regex over the
-    * whole corpus. The build pass is one regex-match run per line
-    * (q37's reject predicate verbatim) behind the `_SUCCESS` build-once
+    * the DLQ table rather than re-running the reject predicate over the
+    * whole corpus. The build pass is one kernel match per line
+    * (q38's reject predicate verbatim) behind the `_SUCCESS` build-once
     * gate; the DuckDB oracle re-derives the rejects from the RAW corpus
     * every verify run, so the artifact is re-gated, never trusted.
     * (r18, verdict task 1b — this and the raw-line repartition were the
@@ -129,7 +127,7 @@ object LogCorpus {
     ensure(spark)
     if (!graft.sources.Artifacts.isBuilt(spark, DeadPath))
       corpus(spark)
-        .where(!col("value").rlike(LogParser.Pattern))
+        .where(!LogParser.matched(col("value")))
         .select(col("line_id"), col("value").as("raw"))
         .write.mode("overwrite").parquet(DeadPath)
     spark.read.parquet(DeadPath).orderBy("line_id")
@@ -147,7 +145,9 @@ object LogCorpus {
     * seconds-as-millis value (`ts_ref_millis` = `ts_sec` — the bug IS
     * that the epoch-seconds number is used as a millis count, so the
     * oracle states the equality outright; DuckDB lateral alias
-    * references make that a one-liner). */
+    * references make that a one-liner). `try_strptime` states the
+    * parse's date contract: a regex-valid line with an impossible date
+    * stays valid with a NULL `ts_sec`. */
   private def validParseSql(relation: String, idCols: Seq[String], orderCol: String,
       refBuggy: Boolean): String = {
     val ids = idCols.map(_ + ", ").mkString
@@ -166,7 +166,7 @@ object LogCorpus {
        |  CAST(g.minute AS INT) AS minute,
        |  CAST(g.second AS INT) AS second,
        |  g.timezone AS timezone,
-       |  CAST(FLOOR(EPOCH(strptime(
+       |  CAST(FLOOR(EPOCH(try_strptime(
        |    g.day || '/' || g.month || '/' || g.year || ' ' ||
        |    g.hour || ':' || g.minute || ':' || g.second || ' ' || g.timezone,
        |    '%d/%b/%Y %H:%M:%S %z'))) AS BIGINT) AS ts_sec,$refCol
@@ -179,10 +179,10 @@ object LogCorpus {
        |SELECT * FROM p ORDER BY $orderCol""".stripMargin
   }
 
-  /** DuckDB twin of [[parsedValidVolume]]: the same regex (RE2 and
-    * java.util.regex agree on this pattern class). DuckDB's positional
-    * regexp_extract caps at group 9, so all 13 groups come out in one
-    * shot via the named-struct variant. */
+  /** DuckDB twin of [[parsedValidVolume]]: the regex the Spark kernel
+    * reproduces (RE2 and java.util.regex agree on this pattern class).
+    * DuckDB's positional regexp_extract caps at group 9, so all 13
+    * groups come out in one shot via the named-struct variant. */
   def validOracleSql: String =
     validParseSql(FromCorpus, Seq("line_id"), "line_id", refBuggy = false)
 

@@ -2,6 +2,9 @@ package graft.clf
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+
+import graft.functions.ClfParse
 
 /** Common Log Format schema + parser — the reference's native input domain.
   *
@@ -12,11 +15,23 @@ import org.apache.spark.sql.functions._
   * negative offsets, HTTP version only 1.0/V1.0, no spaces in paths,
   * bytes is 1–9 digits or `-` (null).
   *
-  * Parsing is pure column expressions (regexp_extract × groups + guarded
-  * to_timestamp) — NOT a Scala UDF: the reference's row-at-a-time
-  * `parseLogline` map (StreamingJob.scala:112–138) would put a Ser/De
-  * barrier in the plan; this version stays inside whole-stage codegen and
-  * lets the validity filter push into the scan.
+  * Parsing is ONE codegen'd kernel call per line,
+  * [[graft.functions.ClfParse]] (`graft_clf_parse`): a single byte scan
+  * that reproduces the pattern's accept set and its 13 groups and
+  * computes the event time as arithmetic on the digits — no regex, no
+  * string split, no date formatter. It is NOT a Scala UDF: the
+  * reference's row-at-a-time `parseLogline` map (StreamingJob.scala:
+  * 112–138) would put a Ser/De barrier in the plan, while the kernel
+  * stays inside whole-stage codegen. Its reference form — the same
+  * fields as `rlike` + one `regexp_extract` per group + `try_cast` +
+  * `try_to_timestamp` column expressions — lives with the specs
+  * (`ClfReference`), which hold the kernel equal to it on all 16
+  * columns.
+  *
+  * A line the pattern accepts is valid even when its date is impossible
+  * (`31/Feb`, month `Foo`, hour `25`): it keeps its fields with `date`
+  * and `date_ref_buggy` null, and event-time windows skip it. The regex
+  * alone decides valid vs dead letter.
   */
 object LogParser {
 
@@ -36,106 +51,44 @@ object LogParser {
       date: java.sql.Timestamp, httpMethod: String, ressource: String,
       httpVersion: String, httpReplyCode: Int, replyBytes: Option[Int])
 
-  /** Group separator for the single-pass extraction — a control char that
-    * cannot appear in CLF lines (hosts/paths/tokens are printable ASCII;
-    * the corpus generator and the NASA trace contain none). */
-  private val Sep = ""
+  /** The pattern's match bit for a `value` column: true on a valid line,
+    * false on a dead letter, null on a NULL line (as `rlike`). */
+  def matched(value: Column): Column = clfParse(value).getField("m")
 
-  /** value:string → the 15-column LogLine schema. Unparseable lines keep
-    * `raw` and get null/sentinel fields (reference StreamingJob.scala:135:
-    * LogLine(raw = line)).
-    *
-    * Single-pass extraction: 13 separate `regexp_extract(v, P, i)` calls
-    * each re-run the full 13-group match (codegen CSE can't merge them —
-    * the group index differs), which dominated the 1.57M-line parse. One
-    * `regexp_replace` rewrites a matching line to all 13 groups
-    * ``-joined, `split` fans them out, and every field references
-    * the SAME subexpression — whole-stage codegen evaluates the regex
-    * once per row. `rlike` (the second and last regex run) stays the
-    * match authority, so valid/dead-letter classification is exactly the
-    * reference's regex semantics even for pathological inputs where the
-    * replace trick would mis-split. */
-  def parse(lines: DataFrame): DataFrame = {
-    val v = col("value")
-    // Stage 1 computes the match bit and the group array ONCE per row
-    // behind a projection boundary: both are referenced 13+ times below,
-    // and CollapseProject declines to inline non-cheap expressions with
-    // multiple references, so the regex runs exactly twice per row
-    // regardless of how many fields stage 2 derives.
-    fields(lines.select(
-      v.as("raw"),
-      v.rlike(Pattern).as("m"),
-      split(regexp_replace(v, Pattern, (1 to 13).map("$" + _).mkString(Sep)), Sep).as("g")))
-  }
+  private def clfParse(value: Column): Column =
+    ColumnBridge.of(ClfParse(ColumnBridge.expr(value)))
 
-  /** ONE-regex-per-row variant of [[parse]] for inputs guaranteed free of
-    * the `` group separator (any corpus of printable-ASCII lines —
-    * [[graft.clf.LogCorpus]] by construction, the NASA trace in fact).
-    * Under that precondition the replace trick is itself the match
-    * authority: an anchored pattern either rewrites the whole line to 13
-    * ``-joined groups (`size(g) = 13`) or leaves it untouched
-    * (`size(g) = 1`), so the separate `rlike` run — half the regex cost of
-    * the 1.57M-line parse — is redundant. [[parse]] keeps `rlike` for
-    * inputs that could smuggle the separator. */
-  def parseSepFree(lines: DataFrame, passthrough: Seq[String] = Nil): DataFrame = {
-    val v = col("value")
-    val keep = passthrough.map(col)
-    fields(lines
-      .select(keep ++ Seq(
-        v.as("raw"),
-        split(regexp_replace(v, Pattern, (1 to 13).map("$" + _).mkString(Sep)), Sep).as("g")): _*)
-      .select(keep ++ Seq(col("raw"), (size(col("g")) === 13).as("m"), col("g")): _*),
-      passthrough)
-  }
+  /** The 16 LogLine columns: `raw`, then the kernel's fields after `m`. */
+  private val Fields: Seq[String] = "raw" +: ClfParse.Schema.fieldNames.toSeq.tail
 
-  /** Stage 2 shared by the parse variants: staged must carry `raw`, the
-    * match bit `m`, and the 13-group array `g`; `passthrough` columns are
-    * retained ahead of the parsed fields. */
-  private def fields(staged: DataFrame, passthrough: Seq[String] = Nil): DataFrame = {
-    val matched = col("m")
-    // "" on no match — the regexp_extract contract downstream code keys on
-    def grp(i: Int): Column = when(matched, element_at(col("g"), i)).otherwise(lit(""))
-    def intGrp(i: Int): Column = nullif(grp(i), lit("")).try_cast("int")
-    val tsStr = concat_ws(" ",
-      concat_ws("/", element_at(col("g"), 2), element_at(col("g"), 3), element_at(col("g"), 4)),
-      concat_ws(":", element_at(col("g"), 5), element_at(col("g"), 6), element_at(col("g"), 7)),
-      element_at(col("g"), 8))
-    // Intended semantics: a real UTC instant. Guarded by `matched` so
-    // garbage lines yield null instead of an ANSI parse error.
-    val ts = to_timestamp(when(matched, tsStr), "dd/MMM/yyyy HH:mm:ss Z")
-    staged.select(passthrough.map(col) ++ Seq(
-      col("raw"),
-      grp(1).as("host"),
-      intGrp(2).as("day"),
-      grp(3).as("month"),
-      intGrp(4).as("year"),
-      intGrp(5).as("hour"),
-      intGrp(6).as("minute"),
-      intGrp(7).as("second"),
-      grp(8).as("timezone"),
-      ts.as("date"),
-      // Output parity with the reference's seconds-as-millis bug
-      // (StreamingJob.scala:125–126, SURVEY.md §0): epoch-seconds value
-      // interpreted as milliseconds.
-      timestamp_millis(unix_timestamp(ts)).as("date_ref_buggy"),
-      grp(9).as("httpMethod"),
-      grp(10).as("ressource"),
-      grp(11).as("httpVersion"),
-      intGrp(12).as("httpReplyCode"),
-      intGrp(13).as("replyBytes")): _*)
-  }
+  /** `passthrough` columns, `raw`, and every field of the kernel's struct
+    * (the match bit `m` first), from ONE kernel call per row. The struct
+    * is spread by a generator over its one-element array, not by a
+    * projection: a filter on a field (`m` below, or a caller's
+    * `host = …`) is never pushed beneath a Generate, whereas through a
+    * projection the optimizer would inline the kernel into the filter
+    * and run it a second time per row. */
+  private def kernel(lines: DataFrame, passthrough: Seq[String]): DataFrame =
+    lines.select(passthrough.map(col) ++ Seq(
+      col("value").as("raw"), inline(array(clfParse(col("value"))))): _*)
 
-  /** Valid rows (reference parseLoglines, StreamingJob.scala:141–143). */
-  def validLines(lines: DataFrame): DataFrame =
-    parse(lines).where(col("host") =!= "")
+  private def fields(staged: DataFrame, passthrough: Seq[String]): DataFrame =
+    staged.select((passthrough ++ Fields).map(col): _*)
+
+  /** value:string → the 16-column LogLine schema. Unparseable lines keep
+    * `raw` and get ""/null fields (reference StreamingJob.scala:135:
+    * LogLine(raw = line)). */
+  def parse(lines: DataFrame): DataFrame = fields(kernel(lines, Nil), Nil)
+
+  /** Valid rows (reference parseLoglines, StreamingJob.scala:141–143);
+    * `passthrough` columns of `lines` ride ahead of the parsed ones. */
+  def validLines(lines: DataFrame, passthrough: Seq[String] = Nil): DataFrame =
+    fields(kernel(lines, passthrough).where(col("m")), passthrough)
 
   /** Dead-letter stream of unparseable raw lines (reference
-    * checkInvalidLoglineParsing, StreamingJob.scala:145–147). Equivalent
-    * to `parse(...).where(host === "")` — host is `\S+` so it is empty
-    * iff the regex did not match — but skips the group extraction: one
-    * regex run per line is the whole cost. */
+    * checkInvalidLoglineParsing, StreamingJob.scala:145–147). */
   def deadLetters(lines: DataFrame): DataFrame =
-    lines.where(!col("value").rlike(Pattern)).select(col("value").as("raw"))
+    lines.where(!matched(col("value"))).select(col("value").as("raw"))
 
   /** Single-pass alternative to the valid/dead-letter double scan: the
     * valid rows flow through while an `observe` metric counts total and
@@ -143,11 +96,11 @@ object LogParser {
     * metric from the listener or `Observation` after an action. */
   def validLinesObserved(lines: DataFrame): DataFrame = {
     graft.operators.Diagnostics.install(lines.sparkSession)
-    parse(lines)
+    fields(kernel(lines, Nil)
       .observe("clf_parse",
         count(lit(1)).as("n_lines"),
         sum(when(col("host") === "", 1L).otherwise(0L)).as("n_dead_letters"))
-      .where(col("host") =!= "")
+      .where(col("m")), Nil)
   }
 
   /** q37: the fixture corpus through [[validLines]], projected to the

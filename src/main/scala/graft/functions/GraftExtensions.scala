@@ -96,6 +96,13 @@ object GraftExtensions {
       (children: Seq[Expression]) =>
         RandomSignProject(children.head,
           foldableInt("graft_random_sign_project", "dims", children, 2, 1))),
+    (FunctionIdentifier("graft_clf_parse"),
+      new ExpressionInfo(classOf[ClfParse].getName, "graft_clf_parse"),
+      (children: Seq[Expression]) => {
+        if (children.length != 1) throw new IllegalArgumentException(
+          s"graft_clf_parse: expected 1 argument, got ${children.length}")
+        ClfParse(children.head)
+      }),
     (FunctionIdentifier("graft_quantize_i8"),
       new ExpressionInfo(classOf[Int8Quantize].getName, "graft_quantize_i8"),
       (children: Seq[Expression]) => Int8Quantize(children(0), children(1))),

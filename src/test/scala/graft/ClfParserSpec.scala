@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
-import graft.clf.LogParser
+import graft.clf.{LogAnalysisJob, LogParser}
 
 class ClfParserSpec extends SparkSpec {
   import spark.implicits._
@@ -97,6 +97,32 @@ class ClfParserSpec extends SparkSpec {
       functions.floorAvgLong(coalesce(col("replyBytes"), lit(0)))).head().getLong(0)
     // bytes: 1839, 0, null->0, 999999999, 77 → sum=1000001915, n=5 → floor = 200000383
     assert(avg === 200000383L)
+  }
+
+  test("a regex-valid line with an impossible date stays valid with a null date; the analytics skip it") {
+    // ANSI to_timestamp used to fail the whole job on any of these
+    val impossible = Seq(
+      "bad1.example.com - - [31/Feb/1995:00:00:01 -0400] \"GET /x HTTP/1.0\" 200 10",
+      "bad2.example.com - - [01/Foo/1995:00:00:01 -0400] \"GET /x HTTP/1.0\" 200 20",
+      "bad3.example.com - - [01/Aug/1995:25:00:01 -0400] \"GET /x HTTP/1.0\" 200 30",
+      "bad4.example.com - - [01/Aug/1995:00:00:01 -1900] \"GET /x HTTP/1.0\" 200 40")
+    val lines = (LogParser.FixtureLines ++ impossible).toDF("value")
+    val valid = LogParser.validLines(lines)
+    assert(valid.count() === 5 + impossible.length)
+    assert(LogParser.deadLetters(lines).count() === 5)
+    val bad = valid.where(col("host").startsWith("bad")).orderBy("host").collect()
+    assert(bad.map(_.getAs[Int]("day")).toSeq === Seq(31, 1, 1, 1))
+    assert(bad.map(_.getAs[String]("month")).toSeq === Seq("Feb", "Foo", "Aug", "Aug"))
+    assert(bad.map(_.getAs[Int]("hour")).toSeq === Seq(0, 0, 25, 0))
+    assert(bad.forall(r => r.isNullAt(r.fieldIndex("date")) && r.isNullAt(r.fieldIndex("date_ref_buggy"))))
+    // window() drops a null event time: all three analytics answer as if
+    // the lines were absent
+    val clean = LogParser.validLines(fixture)
+    Seq(LogAnalysisJob.busiestHost _, LogAnalysisJob.uniqueHosts _, LogAnalysisJob.avgReplyBytes _)
+      .foreach { q =>
+        assert(q(valid, "date").collect().toSeq === q(clean, "date").collect().toSeq)
+        assert(q(valid, "date_ref_buggy").collect().toSeq === q(clean, "date_ref_buggy").collect().toSeq)
+      }
   }
 
   private object functions {

@@ -96,6 +96,33 @@ class ExtensionsSpec extends SparkSpec {
       && nu.getLong(3) === 4L && nu.getString(4) === "a a")
   }
 
+  test("graft_clf_parse is callable from SQL and participates in whole-stage codegen") {
+    val q =
+      """SELECT graft_clf_parse(concat('host', CAST(id AS STRING),
+        |  ' - - [0', CAST(id + 1 AS STRING), '/aug/1995:00:00:01 -0400] "GET /x HTTP/1.0" 200 ',
+        |  CAST(id * 7 AS STRING))) AS p
+        |FROM range(5)""".stripMargin
+    val df = spark.sql(q)
+    assertCodegendProject(df)
+    df.collect().zipWithIndex.foreach { case (r, i) =>
+      val p = r.getStruct(0)
+      assert(p.getAs[Boolean]("m") && p.getAs[String]("host") === s"host$i")
+      assert(p.getAs[String]("month") === "aug" && p.getAs[Int]("replyBytes") === i * 7)
+      assert(p.getAs[Timestamp]("date").toInstant.toString === s"1995-08-0${i + 1}T04:00:01Z")
+    }
+    val interpSession = spark.newSession()
+    interpSession.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    interpSession.conf.set("spark.sql.codegen.wholeStage", "false")
+    assert(interpSession.sql(q).collect().toSeq === df.collect().toSeq)
+    // a dead letter: m false, "" groups; a NULL line: m NULL, never a NULL struct
+    val dead = spark.sql("SELECT graft_clf_parse('not a log line') AS p").head().getStruct(0)
+    assert(!dead.getAs[Boolean]("m") && dead.getAs[String]("host") === "" && dead.isNullAt(2))
+    val nul = spark.sql("SELECT graft_clf_parse(CAST(NULL AS STRING)) AS p").head()
+    assert(!nul.isNullAt(0) && nul.getStruct(0).isNullAt(0))
+    val e = intercept[Exception](spark.sql("SELECT graft_clf_parse(1, 2)").collect())
+    assert(e.getMessage.contains("expected 1 argument"), e.getMessage)
+  }
+
   test("generated and interpreted paths of the native kernels are bit-identical") {
     val q =
       """SELECT graft_longest_run(array(CAST(id AS STRING), 'x', 'x', CAST(id % 3 AS STRING))) AS r,

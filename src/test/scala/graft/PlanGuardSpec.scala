@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{ParseToTimestamp, RLike, RegExpExtract, RegExpReplace, StringSplit, ToTimestamp}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
 /** Mechanical quadratic-join sweep over the ENTIRE query surface.
@@ -72,6 +73,32 @@ class PlanGuardSpec extends SparkSpec {
       val n = shuffleExchanges(SparkEntry.queries(name)(spark, sf0001)).length
       assert(n === 1,
         s"$name declares map-side-then-sort but ran $n shuffle exchanges")
+    }
+  }
+
+  test("the CLF parse is one graft_clf_parse call per row: no regex, split or date formatter") {
+    val dir = java.nio.file.Files.createTempDirectory("clf_plan")
+    val log = dir.resolve("access.log")
+    java.nio.file.Files.write(log, graft.clf.LogParser.FixtureLines.mkString("\n").getBytes)
+    try {
+      Seq(
+        "readClf" -> graft.clf.LogAnalysisJob.readClf(spark, dir.toString),
+        "deadLetters" -> graft.clf.LogParser.deadLetters(spark.read.text(dir.toString)))
+        .foreach { case (name, df) =>
+          val exprs = df.queryExecution.optimizedPlan.collect { case p => p.expressions }
+            .flatten.flatMap(_.collect { case e => e })
+          assert(exprs.count(_.isInstanceOf[graft.functions.ClfParse]) === 1,
+            s"$name must call the kernel once per row:\n${df.queryExecution.optimizedPlan}")
+          val banned = exprs.collect {
+            case e @ (_: RLike | _: RegExpReplace | _: RegExpExtract | _: StringSplit |
+                _: ParseToTimestamp | _: ToTimestamp) => e.prettyName
+          }
+          assert(banned.isEmpty, s"$name still plans ${banned.distinct.mkString(", ")}")
+        }
+      assert(graft.clf.LogAnalysisJob.readClf(spark, dir.toString).count() === 5)
+    } finally {
+      java.nio.file.Files.delete(log)
+      java.nio.file.Files.delete(dir)
     }
   }
 

@@ -72,6 +72,38 @@ class StreamingSpec extends SparkSpec {
     assert(got === Set(("2023-12-25T00:00:00Z", 9L, 4L), ("2024-01-25T00:00:00Z", 8L, 2L)))
   }
 
+  test("CLF lines with an impossible date are skipped by the three streaming analytics") {
+    // regex-valid lines whose date cannot exist parse with a null event
+    // time; window() drops such a row, so every analytic answers as on the
+    // clean lines alone
+    val impossible = Seq(
+      "bad1.example.com - - [31/Feb/1995:00:00:01 -0400] \"GET /x HTTP/1.0\" 200 10",
+      "bad2.example.com - - [01/Foo/1995:00:00:01 -0400] \"GET /x HTTP/1.0\" 200 20",
+      "bad3.example.com - - [01/Aug/1995:25:00:01 -0400] \"GET /x HTTP/1.0\" 200 30")
+    val clean = graft.clf.LogParser.FixtureLines
+    // two micro-batches of the same clean lines, with and without the
+    // impossible dates mixed into each
+    val cleanBatches = Seq(clean.take(5), clean.drop(5))
+    val mixedBatches = Seq(clean.take(2) ++ impossible.take(2) ++ clean.slice(2, 5),
+      impossible.drop(2) ++ clean.drop(5))
+    def run(batches: Seq[Seq[String]], name: String,
+        q: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Set[Seq[Any]] = {
+      val input = MemoryStream[String](spark)
+      batches.foreach(input.addData(_))
+      val events = graft.clf.LogParser.validLines(input.toDF())
+        .select(col("date").as("ts"), col("host").as("user_id"), col("replyBytes").as("value"))
+      runToCompletion(q(events), "update", name).map(_.toSeq).toSet
+    }
+    Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "clf_win_counts" -> (StreamingAnalytics.windowedUserCounts(_)),
+      "clf_uniq_users" -> StreamingAnalytics.uniqueUsersPerWindow,
+      "clf_avg_value" -> StreamingAnalytics.avgValuePerWindow).foreach { case (name, q) =>
+      val want = run(cleanBatches, s"${name}_clean", q)
+      assert(want.nonEmpty, name)
+      assert(run(mixedBatches, s"${name}_mixed", q) === want, name)
+    }
+  }
+
   test("streaming first-event-per-user emits one row per user") {
     val input = MemoryStream[Ev](spark)
     input.addData(evs)
