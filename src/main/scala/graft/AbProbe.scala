@@ -108,9 +108,10 @@ object AbProbe {
     def fmt(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString(",")
     println(f"[ab] $what kernel min=${kernelReps.min}%.3f reps=[${fmt(kernelReps.toSeq)}]")
     println(f"[ab] $what hof    min=${hofReps.min}%.3f reps=[${fmt(hofReps.toSeq)}]")
-    println(s"[ab] codegen compilations: " +
-      s"${org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount} " +
-      s"(total ms ${org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot.getMean * 0.000001 * org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount})")
+    // the histogram keeps a reservoir sample, so its mean is an estimate
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    println(f"[ab] codegen compilations: ${compiles.getCount} " +
+      f"(sampled mean ms ${compiles.getSnapshot.getMean * 0.000001}%.3f)")
     spark.stop()
   }
 }

@@ -36,26 +36,23 @@ object LogAnalysisJob {
   /** Q1: host with most requests per 31-day window
     * (reference StreamingJob.scala:91–92). */
   def busiestHost(valid: DataFrame, timeCol: String): DataFrame =
-    valid
+    Det.orderWindows(valid
       .groupBy(window(col(timeCol), "31 days").getField("start").as("w_start"), col("host"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("w_start"))
       .agg(max(struct(col("cnt"), col("host"))).as("top"))
-      .select(col("w_start"), col("top.host").as("host"), col("top.cnt").as("cnt"))
-      .orderBy("w_start")
+      .select(col("w_start"), col("top.host").as("host"), col("top.cnt").as("cnt")))
 
   /** Q2: unique hosts per window (reference StreamingJob.scala:94–96). */
   def uniqueHosts(valid: DataFrame, timeCol: String): DataFrame =
-    valid.groupBy(window(col(timeCol), "31 days").getField("start").as("w_start"))
-      .agg(countDistinct(col("host")).as("uniq_hosts"))
-      .orderBy("w_start")
+    Det.orderWindows(valid.groupBy(window(col(timeCol), "31 days").getField("start").as("w_start"))
+      .agg(countDistinct(col("host")).as("uniq_hosts")))
 
   /** Q3: truncating average reply size per window
     * (reference StreamingJob.scala:97–107). */
   def avgReplyBytes(valid: DataFrame, timeCol: String): DataFrame =
-    valid.groupBy(window(col(timeCol), "31 days").getField("start").as("w_start"))
-      .agg(Det.floorAvg(coalesce(col("replyBytes"), lit(0))).as("avg_bytes"))
-      .orderBy("w_start")
+    Det.orderWindows(valid.groupBy(window(col(timeCol), "31 days").getField("start").as("w_start"))
+      .agg(Det.floorAvg(coalesce(col("replyBytes"), lit(0))).as("avg_bytes")))
 
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap

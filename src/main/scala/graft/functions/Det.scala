@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -37,4 +37,17 @@ object Det {
     * (reference StreamingJob.scala:100–106 sums Longs and divides by count). */
   def floorAvg(c: Column): Column =
     floor(sum(c.cast(D18_2)).cast("double") / count(lit(1))).cast("long")
+
+  /** The final `ORDER BY w_start` of a per-window aggregate, sorted in the
+    * one task that reads the aggregate's output instead of through a
+    * range exchange (whose sampling job and extra stage cost more than the
+    * sort on a few rows). Bounded because `df`'s last aggregate is keyed
+    * by `w_start` alone: the single task reads at most #windows ×
+    * #map-tasks partial rows and emits one row per window (about 12 a
+    * year of 31-day tumbling windows, 365 a year of 1-day slides), at any
+    * input volume. Scans and hash exchanges below stay parallel. Use only
+    * where the output is one row per window; unbounded outputs keep their
+    * range-partitioned sort. */
+  def orderWindows(df: DataFrame): DataFrame =
+    df.coalesce(1).orderBy("w_start")
 }

@@ -823,8 +823,16 @@ object PqAssignCodes {
   *
   * NULL parity: NULL array → NULL cell (the CASE's both branches are
   * NULL); a NULL element inside the fallback's decimal scores poisons
-  * only those scores (`array_max` skips NULLs), matching DecVecDot. */
-case class IvfAssignCell(child: Expression, centroids: Array[Array[Double]])
+  * only those scores (`array_max` skips NULLs), matching DecVecDot.
+  *
+  * One centroid: `element_at(array_sort(f), -2)` has no element to read.
+  * Under ANSI (`failOnError`, captured at construction as element_at
+  * captures it) every non-NULL row fails with
+  * INVALID_ARRAY_INDEX_IN_ELEMENT_AT; a NULL row stays NULL, as the gap's
+  * subtraction never reads its right side once the top score is NULL.
+  * Without ANSI the gap is NULL and the exact-decimal branch decides. */
+case class IvfAssignCell(child: Expression, centroids: Array[Array[Double]],
+    failOnError: Boolean = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
     extends UnaryExpression {
 
   require(centroids.nonEmpty && centroids.forall(_.length == centroids(0).length),
@@ -854,7 +862,7 @@ case class IvfAssignCell(child: Expression, centroids: Array[Array[Double]])
       c.map(java.lang.Double.valueOf(_): Any)))
 
   override def nullSafeEval(a: Any): Any =
-    IvfAssignCell.assign(a.asInstanceOf[ArrayData], centArrays, isFloat)
+    IvfAssignCell.assign(a.asInstanceOf[ArrayData], centArrays, isFloat, failOnError)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val centRef = ctx.addReferenceObj("ivfCentroids", centArrays,
@@ -862,7 +870,7 @@ case class IvfAssignCell(child: Expression, centroids: Array[Array[Double]])
     nullSafeCodeGen(ctx, ev, c => {
       val boxed = ctx.freshName("cellBoxed")
       s"""
-         |java.lang.Integer $boxed = graft.functions.IvfAssignCell.assign($c, $centRef, $isFloat);
+         |java.lang.Integer $boxed = graft.functions.IvfAssignCell.assign($c, $centRef, $isFloat, $failOnError);
          |if ($boxed == null) { ${ev.isNull} = true; } else { ${ev.value} = $boxed.intValue(); }
        """.stripMargin
     })
@@ -881,8 +889,10 @@ object IvfAssignCell {
   /** Static kernel, called from both interpreted eval and generated code.
     * Returns null (boxed) when the column form would (all fallback
     * scores NULL). */
-  def assign(arr: ArrayData, cents: Array[ArrayData], isFloat: Boolean): java.lang.Integer = {
+  def assign(arr: ArrayData, cents: Array[ArrayData], isFloat: Boolean,
+      failOnError: Boolean): java.lang.Integer = {
     val k = cents.length
+    if (k < 2 && failOnError) throw org.apache.spark.sql.graft.ColumnBridge.elementAtIndexError(-2, k)
     val f = new Array[Double](k)
     var j = 0
     while (j < k) {
@@ -894,8 +904,8 @@ object IvfAssignCell {
     val sorted = f.clone()
     java.util.Arrays.sort(sorted)
     val top = sorted(k - 1)
-    val gap = top - sorted(k - 2)
-    if (gap > 1e-6) {
+    // one centroid (non-ANSI): element_at(…, -2) and the gap are NULL
+    if (k > 1 && top - sorted(k - 2) > 1e-6) {
       // (array_position(f, top) - 1): first index equal to the max
       var i = 0
       while (i < k) {

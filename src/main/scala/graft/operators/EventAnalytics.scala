@@ -16,7 +16,9 @@ import graft.sources.Tables
   *
   * Scale notes (100 TB): every query here is scan → partial agg → one
   * shuffle on the group keys → final agg. No driver-side collection, no
-  * row-at-a-time lambdas; everything stays in whole-stage codegen.
+  * row-at-a-time lambdas; everything stays in whole-stage codegen. The
+  * per-window outputs (one row per window) are sorted in the final
+  * aggregate's task ([[Det.orderWindows]]), not through a range exchange.
   */
 object EventAnalytics {
 
@@ -33,12 +35,11 @@ object EventAnalytics {
     * maxBy(1) is first-seen, i.e. nondeterministic; SURVEY.md §2.4). */
   def busiestUserPerWindow(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    ev.groupBy(w31(col("ts")), col("user_id"))
+    Det.orderWindows(ev.groupBy(w31(col("ts")), col("user_id"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("w_start"))
       .agg(max(struct(col("cnt"), col("user_id"))).as("top"))
-      .select(col("w_start"), col("top.user_id").as("user_id"), col("top.cnt").as("cnt"))
-      .orderBy("w_start")
+      .select(col("w_start"), col("top.user_id").as("user_id"), col("top.cnt").as("cnt")))
   }
 
   /** Q2 — number of unique clients per window (reference
@@ -46,10 +47,9 @@ object EventAnalytics {
     * windowed max). Spark-first this is just a window-scoped exact
     * count-distinct (two-phase hash agg; no single-key hotspot). */
   def uniqueUsersPerWindow(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+    Det.orderWindows(Tables.events(spark, dir)
       .groupBy(w31(col("ts")))
-      .agg(countDistinct(col("user_id")).as("uniq_users"))
-      .orderBy("w_start")
+      .agg(countDistinct(col("user_id")).as("uniq_users")))
 
   /** Q2 at scale — HLL sketch variant (approx_count_distinct), BAND-GATED
     * (r13): the exact form shuffles every distinct key; the sketch
@@ -64,26 +64,24 @@ object EventAnalytics {
     * pins the verdict literal TRUE, turning the former rows-only check
     * into a hash-gated error-band contract. */
   def uniqueUsersApproxPerWindow(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+    Det.orderWindows(Tables.events(spark, dir)
       .groupBy(w31(col("ts")))
       .agg(countDistinct(col("user_id")).as("uniq_users_exact"),
         approx_count_distinct(col("user_id")).as("approx"))
       .select(col("w_start"), col("uniq_users_exact"),
         (abs(col("approx") - col("uniq_users_exact")) * 10 <= col("uniq_users_exact"))
-          .as("hll_within_10pct"))
-      .orderBy("w_start")
+          .as("hll_within_10pct")))
 
   /** Q3 — average value per window with the reference's exact semantics
     * (reference StreamingJob.scala:97–107): missing values count as 0 in
     * the numerator AND inflate the denominator, and the mean is a
     * truncating integer division, not avg(). */
   def avgValuePerWindow(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+    Det.orderWindows(Tables.events(spark, dir)
       .groupBy(w31(col("ts")))
       .agg(
         Det.floorAvg(coalesce(col("value"), lit(0))).as("avg_value_floor"),
-        count(lit(1)).as("n_events"))
-      .orderBy("w_start")
+        count(lit(1)).as("n_events")))
 
   /** The reference's *actual* output shape: its timestamp bug collapses all
     * data into one window (SURVEY.md §0), so each analytic degenerates to a
@@ -104,10 +102,9 @@ object EventAnalytics {
   /** Sliding windows (7-day window, 1-day slide) — the windowing mode the
     * reference lacks; each event lands in exactly 7 windows. */
   def slidingActivity(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+    Det.orderWindows(Tables.events(spark, dir)
       .groupBy(unix_timestamp(window(col("ts"), "7 days", "1 day").getField("start")).as("w_start"))
-      .agg(count(lit(1)).as("cnt"), countDistinct(col("user_id")).as("uniq_users"))
-      .orderBy("w_start")
+      .agg(count(lit(1)).as("cnt"), countDistinct(col("user_id")).as("uniq_users")))
 
   /** Session windows per user (30-minute gap). A new session starts when
     * the gap since the previous event is >= 30 min (session_window treats

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.execution.ProjectExec
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 
 import graft.operators.Similarity
@@ -22,11 +23,17 @@ class BnljBarrierSpec extends SparkSpec {
     val nodes = allPlanNodes(df.queryExecution.executedPlan)
     val joins = nodes.collect { case j: BroadcastNestedLoopJoinExec => j }
     assert(joins.nonEmpty, "q33 is the designed BNLJ baseline; plan shape drifted")
+    // the barrier, seen through the codegen wrappers around it
+    def barrierBelow(p: SparkPlan): Boolean = p match {
+      case _: StreamedProjectBarrierExec => true
+      case w: WholeStageCodegenExec => barrierBelow(w.child)
+      case i: InputAdapter => barrierBelow(i.child)
+      case _ => false
+    }
     joins.foreach { j =>
       // BuildRight in q33: the streamed side is the left child
-      assert(j.left.isInstanceOf[StreamedProjectBarrierExec] ||
-        nodes.exists(_.isInstanceOf[StreamedProjectBarrierExec]),
-        s"expected StreamedProjectBarrierExec on the streamed side:\n$j")
+      assert(j.buildSide === BuildRight, s"q33 must broadcast its query rows:\n$j")
+      assert(barrierBelow(j.left), s"expected StreamedProjectBarrierExec on the streamed side:\n$j")
     }
     val barriers = nodes.collect { case b: StreamedProjectBarrierExec => b }
     assert(barriers.nonEmpty, "barrier missing from q33's executed plan")
@@ -34,7 +41,7 @@ class BnljBarrierSpec extends SparkSpec {
     // its own WholeStageCodegen stage — exactly the materialization point
     // the barrier exists to create
     assert(barriers.forall {
-      case StreamedProjectBarrierExec(w: org.apache.spark.sql.execution.WholeStageCodegenExec) =>
+      case StreamedProjectBarrierExec(w: WholeStageCodegenExec) =>
         w.child.isInstanceOf[ProjectExec]
       case StreamedProjectBarrierExec(p) => p.isInstanceOf[ProjectExec]
     }, "the barrier must sit directly above the kernel projection")

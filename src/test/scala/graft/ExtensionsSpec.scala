@@ -536,5 +536,35 @@ class ExtensionsSpec extends SparkSpec {
       .select(col("vec_id"), Similarity.ivfCellCol(cents).as("k"))
       .collect().map(r => r.getLong(0) -> r.get(1)).toMap
     rows.foreach(r => assert(kInterp(r.getLong(0)) === r.get(1)))
+    // one centroid: the column form's element_at(array_sort(f), -2) has no
+    // second score. ANSI fails every non-NULL row; non-ANSI makes the gap
+    // NULL, so the CASE takes the exact-decimal branch. The kernel must
+    // agree in both modes, generated and interpreted, on NULL rows too.
+    val one = Array(cents(0))
+    def outcome(df: => org.apache.spark.sql.DataFrame): Either[String, Seq[Any]] =
+      try Right(df.collect().map(_.get(0)).toSeq)
+      catch {
+        case e: Exception =>
+          Left(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .collect { case t: org.apache.spark.SparkThrowable if t.getCondition != null => t.getCondition }
+            .toSeq.lastOption.getOrElse(e.toString))
+      }
+    try {
+      for (ansi <- Seq("true", "false"); session <- Seq(spark, interpSession)) {
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        interpSession.conf.set("spark.sql.ansi.enabled", ansi)
+        val some = graft.sources.Tables.embeddings(session, sf0001).select(col("embedding")).limit(8)
+        val nulls = some.select(when(lit(false), col("embedding")).as("embedding"))
+        for (in <- Seq(some, nulls)) {
+          val ref = outcome(in.withColumn("fscores", Similarity.cellScoresCol(one))
+            .select(Similarity.hybridCellCol(one)))
+          val ker = outcome(in.select(Similarity.ivfCellCol(one)))
+          assert(ker === ref, s"ansi=$ansi, ${if (session eq spark) "generated" else "interpreted"}")
+        }
+      }
+    } finally {
+      spark.conf.unset("spark.sql.ansi.enabled")
+      interpSession.conf.unset("spark.sql.ansi.enabled")
+    }
   }
 }

@@ -102,6 +102,61 @@ class PlanGuardSpec extends SparkSpec {
     }
   }
 
+  test("per-window analytics sort in the final aggregate's task: no range exchange, one coalesce(1)") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+    import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import graft.clf.LogAnalysisJob
+    // wrappers that change neither rows nor partitioning
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case i: InputAdapter => unwrap(i.child)
+      case pr: ProjectExec => unwrap(pr.child)
+      case other => other
+    }
+    val dir = java.nio.file.Files.createTempDirectory("clf_sort")
+    val log = dir.resolve("access.log")
+    java.nio.file.Files.write(log, graft.clf.LogParser.FixtureLines.mkString("\n").getBytes)
+    try {
+      val valid = LogAnalysisJob.readClf(spark, dir.toString)
+      val cases = Seq(
+        "busiestHost" -> LogAnalysisJob.busiestHost(valid, "date"),
+        "uniqueHosts" -> LogAnalysisJob.uniqueHosts(valid, "date"),
+        "avgReplyBytes" -> LogAnalysisJob.avgReplyBytes(valid, "date")) ++
+        Seq("q1_busiest_user", "q2_unique_users", "q2b_unique_users_approx", "q3_avg_value",
+          "q5_sliding_activity").map(n => n -> SparkEntry.queries(n)(spark, sf0001))
+      cases.foreach { case (name, df) =>
+        val ranged = shuffleExchanges(df).filter(_.outputPartitioning.isInstanceOf[RangePartitioning])
+        assert(ranged.isEmpty, s"$name still sorts through a range exchange:\n${df.queryExecution.executedPlan}")
+        val nodes = allPlanNodes(df.queryExecution.executedPlan)
+        // the nodes that bring the plan down to one partition; the Sort and
+        // wrappers above them only inherit it
+        val single = nodes.filter(n => n.outputPartitioning == SinglePartition &&
+          !planChildren(n).exists(_.outputPartitioning == SinglePartition))
+        assert(single.size === 1 && single.head.isInstanceOf[CoalesceExec] &&
+          single.head.asInstanceOf[CoalesceExec].numPartitions === 1,
+          s"$name: expected exactly one coalesce(1), got ${single.map(_.nodeName)}")
+        unwrap(single.head.children.head) match {
+          case agg: BaseAggregateExec =>
+            // a computed key is pulled out as `_groupingexpression` and
+            // aliased back in the aggregate's output
+            val keys = agg.groupingExpressions.map(_.exprId).toSet
+            val outKeys = agg.resultExpressions.collect {
+              case a: Attribute if keys(a.exprId) => a.name
+              case Alias(a: Attribute, n) if keys(a.exprId) => n
+            }
+            assert(keys.size === 1 && outKeys === Seq("w_start"),
+              s"$name: coalesce(1) sits above an aggregate keyed by ${agg.groupingExpressions}")
+          case other => fail(s"$name: coalesce(1) must sit on the final aggregate, found:\n$other")
+        }
+      }
+    } finally {
+      java.nio.file.Files.delete(log)
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("the allowlist carries no stale entries") {
     val stale = allowed.keySet.filterNot { name =>
       SparkEntry.queries.contains(name) &&

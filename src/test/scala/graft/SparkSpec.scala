@@ -14,12 +14,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * wrapper and materialized query stages (children of those wrappers
     * are invisible to a plain `collect` over the outer plan). */
   protected def allPlanNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = p +: (p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      allPlanNodes(a.executedPlan)
-    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => allPlanNodes(s.plan)
-    case _ => p.children.flatMap(allPlanNodes)
-  })
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = p +: planChildren(p).flatMap(allPlanNodes)
+
+  /** A node's children as [[allPlanNodes]] walks them: the AQE wrapper's
+    * final plan and a query stage's plan count as their children. */
+  protected def planChildren(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(s.plan)
+    case _ => p.children
+  }
 
   /** Executes `df` (finalizing any adaptive plan) and returns the shuffle
     * exchanges it actually ran — COUNTED plan evidence, not a substring
