@@ -176,12 +176,7 @@ object Bench {
         System.err.println(s"[bench] preflight still degraded (effective_cores=$effCoresPre) — " +
           "proceeding; this capture is rig-degraded evidence, not gate-gradable")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(cpus.toInt)
       // Shuffle files are reclaimed by ContextCleaner only when the driver
       // GCs the shuffle dependencies; a 143-query run on a large heap can
       // go long stretches without a full GC, accumulating tens of GB of

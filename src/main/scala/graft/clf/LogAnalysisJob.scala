@@ -59,12 +59,7 @@ object LogAnalysisJob {
     val cores = opts.getOrElse("cores", "4")
     val path = opts.getOrElse("path", "NASA_access_log_Aug95")
     val timeCol = if (opts.get("buggy-windows").contains("true")) "date_ref_buggy" else "date"
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(cores.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val valid = readClf(spark, path).cache() // one scan feeds three sinks (SURVEY.md §2.5)
     println("Client with most requests:")

@@ -7,13 +7,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SparkSessionExtensions hook exposing the native expressions to SQL:
   *
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions)...
+  *   graft.GraftSession.builder(cores).getOrCreate() // or, on any builder:
+  *   builder.withExtensions(new GraftExtensions)
   *   spark.sql("SELECT graft_fdot(a.embedding, b.embedding) ...")
   * }}}
   *
-  * (Scala callers can bypass registration via ColumnBridge. Sessions
-  * built elsewhere can be retrofitted with
-  * [[GraftExtensions.ensureRegistered]].) */
+  * The only registration path: [[graft.GraftSession.builder]] installs it,
+  * and [[GraftExtensions.requireInstalled]] rejects a session built
+  * without it. (Scala callers can bypass registration via ColumnBridge.) */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
@@ -31,10 +32,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  /** The full native-function surface, one entry per expression —
-    * shared by the builder-time injection path ([[GraftExtensions]])
-    * and the post-hoc [[ensureRegistered]] path so the two can never
-    * drift. */
+  /** The full native-function surface, one entry per expression. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("graft_fdot"),
       new ExpressionInfo(classOf[FloatVecDot].getName, "graft_fdot"),
@@ -155,18 +153,23 @@ object GraftExtensions {
     }
   }
 
-  /** Register the native functions on an ALREADY-BUILT session (the
-    * builder-time `.withExtensions` hook is unreachable once a session
-    * exists — e.g. a harness-owned SparkSession). Overwrites are
-    * idempotent: the builders are pure constructors. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
-    // post-hoc analog of injectOptimizerRule: extraOptimizations runs as
-    // its own batch after the built-in ones; adding is idempotent
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteTokenCount))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteTokenCount
+  /** Fails with an IllegalStateException naming every piece of the
+    * extension `spark` lacks: a function of [[functions]], the
+    * [[graft.plans.RewriteTokenCount]] optimizer rule or the
+    * [[graft.plans.InsertBnljStreamBarrier]] query-stage prep rule. A prep
+    * rule cannot be added to a session that already exists, so a session
+    * built without `.withExtensions(new GraftExtensions)` cannot be
+    * repaired, only rejected. Reads the session's registries; runs no job. */
+  def requireInstalled(spark: SparkSession): Unit = {
+    val state = spark.sessionState
+    val missing =
+      functions.map(_._1).filterNot(state.functionRegistry.functionExists).map(_.funcName) ++
+        Seq(graft.plans.RewriteTokenCount)
+          .filterNot(state.optimizer.extendedOperatorOptimizationRules.contains).map(_.ruleName) ++
+        Seq(graft.plans.InsertBnljStreamBarrier)
+          .filterNot(state.adaptiveRulesHolder.queryStagePrepRules.contains).map(_.ruleName)
+    if (missing.nonEmpty) throw new IllegalStateException(
+      "session was built without graft.functions.GraftExtensions; missing: " +
+        missing.mkString(", "))
   }
 }

@@ -61,7 +61,8 @@ case class FloatVecDot(left: Expression, right: Expression)
   // inlines 24, one per LSH plane) generated a consume method past the
   // JIT's huge-method bytecode limit — HotSpot left the whole stage
   // running as INTERPRETED BYTECODE, measurably slower than the pre-r18
-  // non-codegen plan (AbProbe q34b_banded: 0.41 s vs 0.23 s). A static
+  // non-codegen plan (r19 same-session A/B of q34b's banded stage alone:
+  // 0.41 s vs 0.23 s, OPTIMIZATION_r19.md). A static
   // call keeps every generated method small (the JVM inlines it where
   // hot), exactly the [[DecVecDot]]/[[Simhash64]] convention.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -335,11 +336,6 @@ case class DecVecDot(left: Expression, right: Expression)
 }
 
 object DecVecDot {
-  // measurement hook (graft.AbProbe q33_count): counts kernel invocations
-  // when -Dgraft.diag.deccount=true; the flag is read once at class load,
-  // so production runs pay a constant-folded branch
-  val DiagCount = new java.util.concurrent.atomic.AtomicLong(0)
-  private val DiagEnabled = java.lang.Boolean.getBoolean("graft.diag.deccount")
   private val Scale = 12
   /** DECIMAL(18,12) bound on every partial sum — the fold's per-step
     * `CAST(acc + v AS DECIMAL(18,12))` overflow point. */
@@ -349,7 +345,6 @@ object DecVecDot {
     * Returns null (boxed) when the HOF fold would: length mismatch or a
     * NULL element. */
   def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): java.lang.Double = {
-    if (DiagEnabled) DiagCount.incrementAndGet()
     val n = a.numElements()
     if (b.numElements() != n) return null
     var acc = 0L
@@ -677,7 +672,8 @@ object Int8Quantize {
 /** All per-subspace PQ code assignments of one vector in ONE pass — the
   * r19 setup-cost kernel (VERDICT r18 item 4).
   *
-  * Replaces the unrolled `pqDistSql` projection: `subs × codes` argmin
+  * Replaces the unrolled SQL projection (`VectorReference.pqCodeCols` in
+  * test sources, which ExtensionsSpec holds it equal to): `subs × codes` argmin
   * columns, each an array of `codes` distances, each distance `subDim`
   * terms of `CAST((x−u)·(x−u) AS DECIMAL(18,12))` — ~10⁴ Catalyst nodes
   * per plan, REBUILT with fresh literals every Lloyd iteration and every
@@ -700,8 +696,14 @@ object Int8Quantize {
   * distances are NULL, `array_min` is NULL, `array_position(…, NULL)` is
   * NULL — note: an array OF nulls, not a NULL array); a NULL element
   * poisons exactly its own subspace's code; an array shorter than
-  * `subs × subDim` throws, as ANSI `element_at` past the end would. */
-case class PqAssignCodes(child: Expression, codebooks: Array[Array[Array[Double]]])
+  * `subs × subDim` throws, as ANSI `element_at` past the end would. A
+  * term of 1e6 or more overflows DECIMAL(18,12): under ANSI
+  * (`failOnError`, captured at construction as the cast captures it) it
+  * fails with the cast's own overflow error, otherwise that distance is
+  * NULL and the argmin skips it. A NaN or infinite term casts to NULL in
+  * either mode, so its distance is NULL too. */
+case class PqAssignCodes(child: Expression, codebooks: Array[Array[Array[Double]]],
+    failOnError: Boolean = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
     extends UnaryExpression {
 
   require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty) &&
@@ -727,12 +729,12 @@ case class PqAssignCodes(child: Expression, codebooks: Array[Array[Array[Double]
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def eval(input: InternalRow): Any =
-    PqAssignCodes.assign(child.eval(input).asInstanceOf[ArrayData], codebooks, isFloat)
+    PqAssignCodes.assign(child.eval(input).asInstanceOf[ArrayData], codebooks, isFloat, failOnError)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cbRef = ctx.addReferenceObj("pqCodebooks", codebooks, "double[][][]")
     val c = child.genCode(ctx)
-    val callArgs = s"$cbRef, $isFloat"
+    val callArgs = s"$cbRef, $isFloat, $failOnError"
     ev.copy(code =
       code"""
         ${c.code}
@@ -751,7 +753,7 @@ object PqAssignCodes {
   /** Static kernel, called from both interpreted eval and generated code.
     * `arr == null` encodes a NULL input array (all codes NULL). */
   def assign(arr: ArrayData, cbs: Array[Array[Array[Double]]],
-      isFloat: Boolean): ArrayData = {
+      isFloat: Boolean, failOnError: Boolean): ArrayData = {
     val subs = cbs.length
     val out = new Array[Any](subs)
     if (arr == null)
@@ -776,29 +778,43 @@ object PqAssignCodes {
       }
       if (!hasNull) {
         val cb = cbs(s)
-        var best = 0
-        var bestD = Double.MaxValue
+        var best = -1
+        var bestD = 0d
         var j = 0
         while (j < nCodes) {
           val u = cb(j)
           var acc = 0L
+          var isNull = false
           var k = 0
-          while (k < subDim) {
+          // the SQL sum adds left to right and stops reading terms at the
+          // first NULL one, so a later term can no longer fail the query
+          while (k < subDim && !isNull) {
             val d = (x(k) - u(k)) * (x(k) - u(k))
             // Spark's double→DECIMAL(18,12) cast: valueOf (Double.toString)
-            // then HALF_UP at scale 12; sums stay exact in unscaled longs
-            acc = Math.addExact(acc, java.math.BigDecimal.valueOf(d)
-              .setScale(12, java.math.RoundingMode.HALF_UP)
-              .unscaledValue().longValueExact())
+            // then HALF_UP at scale 12; sums stay exact in unscaled longs.
+            // NaN and ±Inf cast to NULL; a term of 1e6 or more does not
+            // fit, which fails the query under ANSI and is NULL otherwise
+            if (java.lang.Double.isFinite(d)) {
+              val term = java.math.BigDecimal.valueOf(d).setScale(12, java.math.RoundingMode.HALF_UP)
+              if (term.precision - term.scale > 18 - 12) {
+                if (failOnError)
+                  throw org.apache.spark.sql.graft.ColumnBridge.decimalOverflowError(d, 18, 12)
+                isNull = true
+              } else acc = Math.addExact(acc, term.unscaledValue().longValueExact())
+            } else isNull = true
             k += 1
           }
-          val dist = new java.math.BigDecimal(
-            java.math.BigInteger.valueOf(acc), 12).doubleValue()
-          // array_position(dists, array_min(dists)): first strict minimum
-          if (dist < bestD) { bestD = dist; best = j }
+          if (!isNull) {
+            val dist = new java.math.BigDecimal(
+              java.math.BigInteger.valueOf(acc), 12).doubleValue()
+            // array_position(dists, array_min(dists)): first strict
+            // minimum, NULL distances skipped
+            if (best < 0 || dist < bestD) { bestD = dist; best = j }
+          }
           j += 1
         }
-        out(s) = best
+        // every distance NULL: array_min is NULL, and so is the code
+        if (best >= 0) out(s) = best
       }
       s += 1
     }
@@ -807,7 +823,8 @@ object PqAssignCodes {
 }
 
 /** Hybrid IVF cell assignment of one vector in ONE codegen'd call — the
-  * r19 twin of the `fscores`/`hybridCellCol` column pair (VERDICT r18
+  * r19 twin of the `fscores`/`hybridCellCol` column pair (`VectorReference`
+  * in test sources; VERDICT r18
   * item 4, and the map-side inner loop of the whole IVF query family).
   *
   * Replaces, per row: a 16-element `array(graft_fdot × 16)` projection,
@@ -904,8 +921,11 @@ object IvfAssignCell {
     val sorted = f.clone()
     java.util.Arrays.sort(sorted)
     val top = sorted(k - 1)
-    // one centroid (non-ANSI): element_at(…, -2) and the gap are NULL
-    if (k > 1 && top - sorted(k - 2) > 1e-6) {
+    // one centroid (non-ANSI): element_at(…, -2) and the gap are NULL.
+    // Spark orders NaN above every double, so a NaN gap (NaN or +Inf − +Inf
+    // scores) is > 1e-6 too
+    val gap = if (k > 1) top - sorted(k - 2) else 0d
+    if (k > 1 && (gap > 1e-6 || java.lang.Double.isNaN(gap))) {
       // (array_position(f, top) - 1): first index equal to the max
       var i = 0
       while (i < k) {

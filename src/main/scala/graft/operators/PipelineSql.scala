@@ -93,13 +93,13 @@ object PipelineSql {
     * codegen'd expressions resolve by NAME inside `spark.sql` text and
     * produce the byte-identical pair set the DataFrame form does.
     *
-    * [[graft.functions.GraftExtensions.ensureRegistered]] retrofits
-    * sessions built without `.withExtensions` (harness-owned sessions);
-    * idempotent. Scale shape: identical to q31 — one sketch pass,
+    * [[graft.functions.GraftExtensions.requireInstalled]] rejects a
+    * session built without the extension before any work starts.
+    * Scale shape: identical to q31 — one sketch pass,
     * bucket-local expansion bounded by MaxBucket², distinct only over
     * surviving near-pairs. */
   def sqlSimhashNearPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.ensureRegistered(spark)
+    graft.functions.GraftExtensions.requireInstalled(spark)
     Tables.documents(spark, dir).createOrReplaceTempView("documents_v")
     spark.sql(
       s"""WITH sh AS (
@@ -137,9 +137,9 @@ object PipelineSql {
     * form's explicit `broadcast(q)` — at 100 TB the corpus side stays a
     * map-side scan and the only shuffle is the per-query top-k window. */
   def sqlKnnBrute(spark: SparkSession, dir: String): DataFrame = {
-    // dotDec resolves to the registered graft_dot_dec kernel (r18) —
-    // retrofit harness-owned sessions like sqlSimhashNearPairs does
-    graft.functions.GraftExtensions.ensureRegistered(spark)
+    // dotDec resolves to the registered graft_dot_dec kernel (r18), and
+    // the plan needs the extension's BNLJ streamed-side barrier
+    graft.functions.GraftExtensions.requireInstalled(spark)
     Tables.embeddings(spark, dir).createOrReplaceTempView("embeddings_v")
     spark.sql(
       s"""WITH n AS (
@@ -167,7 +167,7 @@ object PipelineSql {
     * surfaces. Same plan as q108 — zero-shuffle scan → compiled kernel
     * projection → contract sort. */
   def sqlRunCollapse(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.ensureRegistered(spark)
+    graft.functions.GraftExtensions.requireInstalled(spark)
     Tables.documents(spark, dir).createOrReplaceTempView("documents_v")
     spark.sql(
       s"""SELECT doc_id,

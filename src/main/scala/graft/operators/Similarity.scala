@@ -52,7 +52,7 @@ object Similarity {
     * (bit-identical per engine) but runs as an inlined loop inside
     * whole-stage codegen instead of interpreted lambdas. Used for the
     * prefilter and LSH bucketing, where per-engine determinism suffices. */
-  private def fdot(a: Column, b: Column): Column =
+  private[graft] def fdot(a: Column, b: Column): Column =
     ColumnBridge.of(FloatVecDot(ColumnBridge.expr(a), ColumnBridge.expr(b)))
 
   /** vec_id, embedding, nrm (L2 norm, bit-deterministic). */
@@ -262,90 +262,6 @@ object Similarity {
       .orderBy("v1", "v2")
   }
 
-  /** MEASUREMENT-ONLY twin of [[knnBrute]] (q33) for the r19 fused-BNLJ
-    * adjudication (VERDICT r18 item 3) — same A/B contract as
-    * [[embLshProbeVariant]]. */
-  private[graft] def knnBruteProbeVariant(spark: SparkSession, dir: String,
-      useHof: Boolean): DataFrame = {
-    def dotDecS(a: String, b: String): String =
-      if (!useHof) dotDec(a, b)
-      else s"""CAST(ROUND(aggregate(zip_with($a, $b, (x, y) ->
-              |  CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(18,12))),
-              |  CAST(0 AS DECIMAL(18,12)), (acc, v) -> CAST(acc + v AS DECIMAL(18,12))), 12) AS DOUBLE)""".stripMargin
-    val n = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"), col("embedding"),
-        sqrt(expr(dotDecS("embedding", "embedding"))).as("nrm"))
-    val q = n.where(col("vec_id") <= 4)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"), col("nrm").as("qn"))
-    val c = n.select(col("vec_id").as("n_id"), col("embedding").as("ne"), col("nrm").as("nn"))
-    val scored = c.join(broadcast(q), col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        (expr(dotDecS("qe", "ne")) / (col("qn") * col("nn"))).as("cos_sim"))
-    val byCos = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(byCos).cast("long"))
-      .where(col("rank") <= 5)
-      .select(col("q_id"), col("n_id"), col("cos_sim"), col("rank"))
-      .orderBy("q_id", "rank")
-  }
-
-  /** MEASUREMENT-ONLY twin of [[embeddingNearDupPairsLsh]] for the r19
-    * q34b adjudication (VERDICT r18 item 2): the identical chain with the
-    * exact-decimal dot selectable between the r18 kernel
-    * ([[graft.functions.DecVecDot]]) and the pre-r18 interpreted HOF
-    * fold, so an interleaved same-session A/B (graft.AbProbe) can price
-    * the kernel swap on q34b alone. `useHof = false` reproduces the
-    * production plan minus the `observe` instrumentation; never part of
-    * the query surface. */
-  private[graft] def embLshProbeVariant(spark: SparkSession, dir: String,
-      useHof: Boolean, bandedOnly: Boolean = false): DataFrame = {
-    def dotDecS(a: String, b: String): String =
-      if (!useHof) dotDec(a, b)
-      else s"""CAST(ROUND(aggregate(zip_with($a, $b, (x, y) ->
-              |  CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(18,12))),
-              |  CAST(0 AS DECIMAL(18,12)), (acc, v) -> CAST(acc + v AS DECIMAL(18,12))), 12) AS DOUBLE)""".stripMargin
-    def dotPlane(e: Column, plane: Array[Double]): Column =
-      if (!useHof) dotDecPlane(e, plane)
-      else round(aggregate(zip_with(e, typedlit(plane),
-          (x, y) => (x.cast("double") * y).cast("decimal(18,12)")),
-        lit(0).cast("decimal(18,12)"),
-        (acc, v) => (acc + v).cast("decimal(18,12)")), 12).cast("double")
-    def hybridSignP(plane: Array[Double]): Column = {
-      val fast = fdot(col("embedding"), typedlit(plane))
-      when(abs(fast) > 1e-6, fast >= 0d)
-        .otherwise(dotPlane(col("embedding"), plane) >= 0d)
-    }
-    def bandKey(b: Int): Column =
-      (0 until NdPlanesPerBand).map { j =>
-        when(hybridSignP(ndPlanes(b * NdPlanesPerBand + j)), lit(1 << j)).otherwise(lit(0))
-      }.reduce(_ + _)
-    val n = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"), col("embedding"),
-        sqrt(expr(dotDecS("embedding", "embedding"))).as("nrm"))
-    val banded = n.select(col("vec_id"), col("embedding"), col("nrm"),
-      posexplode(array((0 until NdBands).map(bandKey): _*)).as(Seq("band_idx", "band_key")))
-    if (bandedOnly) return banded.select(col("vec_id"), col("band_idx"), col("band_key"))
-    val buckets = banded
-      .groupBy(col("band_idx"), col("band_key"))
-      .agg(array_sort(collect_list(struct(col("vec_id"), col("embedding"), col("nrm")))).as("all_members"))
-      .where(size(col("all_members")) >= 2)
-      .withColumn("members", slice(col("all_members"), 1, Dedup.MaxBucket))
-    buckets
-      .select(explode(expr(
-        """flatten(transform(members, (x, i) ->
-          |  transform(slice(members, i + 2, size(members)), y ->
-          |    named_struct('v1', x.vec_id, 'e1', x.embedding, 'n1', x.nrm,
-          |                 'v2', y.vec_id, 'e2', y.embedding, 'n2', y.nrm))))""".stripMargin)).as("p"))
-      .select(col("p.v1").as("v1"), col("p.e1").as("e1"), col("p.n1").as("n1"),
-        col("p.v2").as("v2"), col("p.e2").as("e2"), col("p.n2").as("n2"))
-      .where(fdot(col("e1"), col("e2")) / (col("n1") * col("n2")) >= 0.4 - 1e-6)
-      .distinct()
-      .select(col("v1"), col("v2"),
-        (expr(dotDecS("e1", "e2")) / (col("n1") * col("n2"))).as("cos_sim"))
-      .where(col("cos_sim") >= 0.4)
-      .orderBy("v1", "v2")
-  }
-
   /** The persisted FULL-CORPUS near-dup pair artifact: q34b's flagship
     * banded-LSH chain ([[embeddingNearDupPairsLsh]]), built once per
     * corpus fingerprint under the [[graft.sources.Artifacts]] contract —
@@ -471,43 +387,19 @@ object Similarity {
   def ivfCentroidsSqlLiteral: String =
     ivfCentroids.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
 
-  /** Per-vector centroid dot scores (codegen'd native dot ×16).
-    * r19: feeds only the [[hybridCellCol]] reference form (spec parity)
-    * — production assignment is the [[ivfCellCol]] kernel. */
-  private[graft] def cellScoresCol(centroids: Array[Array[Double]]): Column =
-    array(centroids.toIndexedSeq.map(c => fdot(col("embedding"), typedlit(c))): _*)
-
-  /** Exact-decimal per-cell dot scores — the oracle-portable twin of
-    * [[cellScoresCol]] (each score is the DECIMAL(18,12)-summed dot cast
-    * to double, bit-identical between Spark and DuckDB). */
-  private def cellScoresDecCol(centroids: Array[Array[Double]]): Column =
+  /** Exact-decimal per-cell dot scores (each score is the
+    * DECIMAL(18,12)-summed dot cast to double, bit-identical between
+    * Spark and DuckDB). */
+  private[graft] def cellScoresDecCol(centroids: Array[Array[Double]]): Column =
     array(centroids.toIndexedSeq.map(c => dotDecPlane(col("embedding"), c)): _*)
 
-  /** Nearest-centroid id (0-based, first-index tie-break) with the q34b
-    * hybrid trick lifted from sign to argmax: the 16 codegen'd double
-    * scores decide whenever the top-2 gap is safely wide (> 1e-6 — a
-    * double score differs from its decimal twin by < ~1e-10, so a wide
-    * gap can't flip the winner), and only near-tied rows fall back to
-    * the exact-decimal scores the oracle computes. Keeps assignment
-    * bit-portable to DuckDB while the hot path stays inside codegen.
-    *
-    * r19: REFERENCE FORM ONLY (ExtensionsSpec pins [[ivfCellCol]] ≡ this
-    * over `fscores = cellScoresCol`). Production paths use the one-call
-    * kernel [[ivfCellCol]], which evaluates the same static dot kernels
-    * without materializing the two score arrays and their double
-    * array_sort per row, and shrinks the per-Lloyd-iteration plan. */
-  private[graft] def hybridCellCol(centroids: Array[Array[Double]]): Column = {
-    val f = col("fscores")
-    val top = element_at(array_sort(f), -1)
-    val gap = top - element_at(array_sort(f), -2)
-    val dsc = cellScoresDecCol(centroids)
-    when(gap > 1e-6, (array_position(f, top) - 1).cast("int"))
-      .otherwise((array_position(dsc, array_max(dsc)) - 1).cast("int"))
-  }
-
-  /** The hybrid argmax as ONE codegen'd kernel call (r19) — same
-    * assignment bit for bit as `fscores`/[[hybridCellCol]]; see
-    * [[graft.functions.IvfAssignCell]]. */
+  /** Nearest-centroid id (0-based, first-index tie-break) in ONE
+    * codegen'd kernel call (r19): the codegen'd double scores decide
+    * whenever the top-2 gap is safely wide (> 1e-6 — a double score
+    * differs from its decimal twin by < ~1e-10, so a wide gap can't flip
+    * the winner), and only near-tied rows fall back to the exact-decimal
+    * scores the oracle computes. See [[graft.functions.IvfAssignCell]];
+    * ExtensionsSpec pins it to the column form in test sources. */
   private[graft] def ivfCellCol(centroids: Array[Array[Double]]): Column =
     ColumnBridge.of(graft.functions.IvfAssignCell(
       ColumnBridge.expr(col("embedding")), centroids))
@@ -599,7 +491,7 @@ object Similarity {
     * at 100 TB the modulus grows so a few million vectors train the
     * cells and the per-iteration cost NEVER touches the full corpus).
     * Each iteration is one distributed pass over the sample: map-side
-    * hybrid assignment ([[hybridCellCol]], no shuffle) → per-cell
+    * hybrid assignment ([[ivfCellCol]], no shuffle) → per-cell
     * component sums via 64 exact-DECIMAL(28,12) partial aggregates (ONE
     * shuffle of 64-value buffers, map-side combined) → a k×64-double
     * collect to the driver (the model — same driver-side footprint
@@ -652,7 +544,7 @@ object Similarity {
     * (salted local top-k, then a ≤ 32k-row final ranking) so one hot
     * query key can't serialize n/K candidate rows through one reducer.
     * Oracle-gated end-to-end: data-side cells use the hybrid decimal-
-    * portable argmax ([[hybridCellCol]]) and the (tiny) query side ranks
+    * portable argmax ([[ivfCellCol]]) and the (tiny) query side ranks
     * its probe cells by the exact-decimal scores, so the whole candidate
     * set — and hence the output — is reproducible in DuckDB SQL. */
   def annIvfTopK(spark: SparkSession, dir: String, nprobe: Int = 4, k: Int = 5,
@@ -1467,23 +1359,12 @@ object Similarity {
     pqSeeds.map(_.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]"))
       .mkString("[", ", ", "]")
 
-  /** Squared L2 distance between subvector `s` of `embedding` and a
-    * LITERAL codeword, as a Spark SQL string: each term is the
-    * IEEE-deterministic double product (x−u)² cast to DECIMAL(18,12)
-    * (the cross-engine-stable cast every cosine oracle already relies
-    * on), summed EXACTLY in decimals (order-free), rounded once, cast
-    * double — so aggregation order can never flip an argmin. */
-  private def pqDistSql(s: Int, u: Array[Double]): String = {
-    val terms = (0 until PqSubDim).map { i =>
-      val x = s"CAST(element_at(embedding, ${s * PqSubDim + i + 1}) AS DOUBLE)"
-      val c = u(i).toString
-      s"CAST((($x) - ($c)) * (($x) - ($c)) AS DECIMAL(18,12))"
-    }
-    s"CAST(ROUND(${terms.mkString(" + ")}, 12) AS DOUBLE)"
-  }
-
-  /** Driver-side twin of [[pqDistSql]], bit-identical by construction
-    * (same double products, same scale-12 decimals, same exact sum). */
+  /** Squared L2 distance between a subvector and a codeword: each term
+    * is the IEEE-deterministic double product (x−u)² cast to
+    * DECIMAL(18,12) (the cross-engine-stable cast every cosine oracle
+    * already relies on), summed EXACTLY in decimals (order-free), rounded
+    * once, cast double — so aggregation order can never flip an argmin.
+    * The oracle and the test-source SQL reference compute the same. */
   private def pqDistDriver(x: Array[Double], u: Array[Double]): Double = {
     import java.math.{BigDecimal => JBD, RoundingMode}
     var acc = JBD.ZERO
@@ -1496,24 +1377,11 @@ object Similarity {
     acc.doubleValue()
   }
 
-  /** Per-subspace code assignment columns for the current codebooks:
-    * argmin over the [[PqCodes]] decimal-exact distances, FIRST index on
-    * ties (the oracle's `ORDER BY dist ASC, code ASC`).
-    *
-    * r19: REFERENCE FORM ONLY (ExtensionsSpec pins kernel ≡ this,
-    * column for column). Production paths use [[pqAssignCol]] — this
-    * unrolled projection is ~10⁴ Catalyst nodes rebuilt with fresh
-    * literals per Lloyd iteration / encode pass, and its analysis +
-    * codegen time dominated the bench's untimed PQ provisioning. */
-  private[graft] def pqCodeCols(cbs: Array[Array[Array[Double]]]): Seq[Column] =
-    (0 until PqSubs).map { s =>
-      val dists = array((0 until PqCodes).map(j => expr(pqDistSql(s, cbs(s)(j)))): _*)
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }
-
-  /** All [[PqSubs]] code assignments in ONE codegen'd kernel call — the
-    * same argmin over the same decimal-exact distances as [[pqCodeCols]]
-    * (bit-identical; see [[graft.functions.PqAssignCodes]]), as a single
+  /** All [[PqSubs]] code assignments in ONE codegen'd kernel call:
+    * argmin over the [[pqDistDriver]] decimal-exact distances, FIRST index
+    * on ties (the oracle's `ORDER BY dist ASC, code ASC`); bit-identical
+    * to the unrolled SQL form in test sources (see
+    * [[graft.functions.PqAssignCodes]]), as a single
     * plan node instead of the unrolled ~10⁴-node projection (guide §4 +
     * §5: the cost was driver-side planning, not data). */
   private[graft] def pqAssignCol(cbs: Array[Array[Array[Double]]]): Column =
@@ -1620,7 +1488,7 @@ object Similarity {
     * Reported rows carry the exact-decimal cosine (`cos_exact`, the q81
     * audit discipline) so the gate pins both the PQ arithmetic AND what
     * the compression trades away. The LUT adds are decimal-exact like
-    * [[pqDistSql]] (order can't flip a rank), ties break on n_id. */
+    * [[pqDistDriver]] (order can't flip a rank), ties break on n_id. */
   def pqAnnTopK(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val cbs = trainPqCodebooks(spark, dir)
     val queries = Tables.embeddings(spark, dir).where(col("vec_id") <= 4)
@@ -1657,7 +1525,7 @@ object Similarity {
   }
 
   /** DuckDB per-subspace squared-L2 distance chain — the SQL twin of
-    * [[pqDistSql]]/[[pqDistDriver]] over list-typed operands. */
+    * [[pqDistDriver]] over list-typed operands. */
   private def pqDistChainSql(v: String, u: String): String =
     (1 to PqSubDim).map { i =>
       val x = s"($v[CAST($i AS INT)])"
@@ -1957,7 +1825,7 @@ object Similarity {
     val cbs = trainPqCodebooks(spark, dir, corpusOnly = true)
     // Codebooks enter as nested-array LITERALS and distances fold through
     // a transform/aggregate lambda — the same per-term CAST((x−u)² AS
-    // DECIMAL(18,12)) + exact decimal sum as [[pqDistSql]], but the
+    // DECIMAL(18,12)) + exact decimal sum as [[pqDistDriver]], but the
     // Catalyst tree is ~10² nodes per subspace instead of the unrolled
     // form's ~10⁴ (whose per-run analysis cost dominated at ~6 s/run;
     // the lambda runs interpreted, which is nothing at batch row counts).

@@ -23,7 +23,8 @@ import graft.functions.{DecVecDot, FloatVecDot, Int8Quantize, LongVecDot, Random
   * before entering that loop. A streamed-side projection like
   * `nrm = SQRT(graft_dot_dec(embedding, embedding))` is therefore
   * re-evaluated once per (streamed row × build row) PAIR instead of once
-  * per streamed row. Measured on q33 (graft.AbProbe `q33_count`, sf0.1):
+  * per streamed row. Measured on q33 (r19, a per-call counter in
+  * DecVecDot since removed, sf0.1; OPTIMIZATION_r19.md):
   * 19 995 DecVecDot invocations fused vs 12 000 unfused — a |buildRows|×
   * multiplier on the most expensive expression in the plan, at any scale.
   * Placing this barrier between the join and the projection restores
@@ -44,7 +45,8 @@ case class StreamedProjectBarrierExec(child: SparkPlan) extends UnaryExecNode {
   * rows are materialized once by the broadcast exchange.
   *
   * Gated by `spark.graft.bnljBarrier` (default on) so an interleaved A/B
-  * (graft.AbProbe) can price the rule without a rebuild. Idempotent: a
+  * (`graft.Probe ab <sfDir> <query> spark.graft.bnljBarrier=false`) can
+  * price the rule without a rebuild. Idempotent: a
   * wrapped join's streamed child is no longer a ProjectExec, so AQE
   * re-planning passes leave it alone. */
 object InsertBnljStreamBarrier extends Rule[SparkPlan] {

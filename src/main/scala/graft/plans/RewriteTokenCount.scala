@@ -23,9 +23,7 @@ import graft.functions.CountWsTokens
   * identity `tokens = \s-run count + 1` is provably the same function.
   *
   * Injected by [[graft.functions.GraftExtensions]] via
-  * `injectOptimizerRule` (builder path) and
-  * `spark.experimental.extraOptimizations` (the retrofit path for
-  * harness-owned sessions — see `ensureRegistered`). */
+  * `injectOptimizerRule`. */
 object RewriteTokenCount extends Rule[LogicalPlan] {
 
   private val WsPattern = UTF8String.fromString("\\s+")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.errors.QueryExecutionErrors
+import org.apache.spark.sql.types.Decimal
 
 /** Bridge between raw Catalyst [[Expression]]s and the public [[Column]]
   * API. Lives under org.apache.spark.sql because the classic converters
@@ -17,4 +18,8 @@ object ColumnBridge {
   /** ANSI element_at's out-of-bounds error. */
   def elementAtIndexError(index: Int, numElements: Int): ArrayIndexOutOfBoundsException =
     QueryExecutionErrors.invalidElementAtIndexError(index, numElements, null)
+
+  /** ANSI CAST(d AS DECIMAL(precision, scale))'s overflow error. */
+  def decimalOverflowError(d: Double, precision: Int, scale: Int): ArithmeticException =
+    QueryExecutionErrors.cannotChangeDecimalPrecisionError(Decimal(d), precision, scale, null)
 }

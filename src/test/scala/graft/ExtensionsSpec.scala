@@ -45,6 +45,23 @@ class ExtensionsSpec extends SparkSpec {
     assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains("Project")), plan)
   }
 
+  /** The first column's values, or the error condition the query failed
+    * with (the innermost SparkThrowable's), so a kernel and its column
+    * form can be compared on error paths too. */
+  private def outcome(df: => org.apache.spark.sql.DataFrame): Either[String, Seq[Any]] =
+    try Right(df.collect().map(_.get(0)).toSeq)
+    catch {
+      case e: Exception =>
+        Left(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collect { case t: org.apache.spark.SparkThrowable if t.getCondition != null => t.getCondition }
+          .toSeq.lastOption.getOrElse(e.toString))
+    }
+
+  /** `sf0001` embeddings with element 0 replaced by the SQL literal `v`. */
+  private def withFirstElement(session: org.apache.spark.sql.SparkSession, v: String, rows: Int) =
+    graft.sources.Tables.embeddings(session, sf0001).limit(rows).selectExpr(
+      s"transform(embedding, (e, i) -> CASE WHEN i = 0 THEN CAST($v AS FLOAT) ELSE e END) AS embedding")
+
   test("ngram_dup_mass: codegen'd; repeat mass matches brute counts on edges") {
     val df = spark.sql(
       "SELECT graft_ngram_dup_mass(array('a','b','a','b','a','b'), 3) AS m FROM range(3)")
@@ -460,7 +477,7 @@ class ExtensionsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val both = emb.select(col("vec_id"),
       Similarity.pqAssignCol(cbs).as("k"),
-      array(Similarity.pqCodeCols(cbs): _*).as("h"))
+      array(VectorReference.pqCodeCols(cbs): _*).as("h"))
     assertCodegendProject(both)
     val rows = both.collect()
     assert(rows.nonEmpty, "sf0.001 fixture must exercise the kernel")
@@ -475,7 +492,7 @@ class ExtensionsSpec extends SparkSpec {
       .unionByName(base.select(expr("CAST(NULL AS ARRAY<FLOAT>)").as("embedding")))
     val er = edges.select(
       Similarity.pqAssignCol(cbs).as("k"),
-      array(Similarity.pqCodeCols(cbs): _*).as("h")).collect()
+      array(VectorReference.pqCodeCols(cbs): _*).as("h")).collect()
     er.foreach(r => assert(r.getSeq[Any](0) === r.getSeq[Any](1), r.toString))
     assert(er(0).getSeq[Any](0).head == null, "subspace 0 must be poisoned")
     assert(er(0).getSeq[Any](0).drop(1).forall(_ != null), "only subspace 0 poisoned")
@@ -491,6 +508,27 @@ class ExtensionsSpec extends SparkSpec {
       .select(col("vec_id"), Similarity.pqAssignCol(cbs).as("k"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
     rows.foreach(r => assert(kInterp(r.getLong(0)) === r.getSeq[Any](1)))
+    // (x − u)² ≥ 1e6 does not fit DECIMAL(18,12): under ANSI the SQL
+    // form's CAST fails the query, without ANSI that distance is NULL and
+    // the argmin skips it. 2000 overflows every codeword of subspace 0,
+    // ±999.5 only those on the far side. NaN casts to NULL in both modes
+    try {
+      for (ansi <- Seq("true", "false"); session <- Seq(spark, interpSession)) {
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        interpSession.conf.set("spark.sql.ansi.enabled", ansi)
+        for (v <- Seq("2000", "999.5", "-999.5", "'NaN'")) {
+          val in = withFirstElement(session, v, 2)
+          val ref = outcome(in.select(array(VectorReference.pqCodeCols(cbs): _*)))
+          val ker = outcome(in.select(Similarity.pqAssignCol(cbs)))
+          assert(ref.isLeft === (ansi == "true" && v != "'NaN'"), s"ansi=$ansi, $v: $ref")
+          assert(ker === ref,
+            s"ansi=$ansi, $v, ${if (session eq spark) "generated" else "interpreted"}")
+        }
+      }
+    } finally {
+      spark.conf.unset("spark.sql.ansi.enabled")
+      interpSession.conf.unset("spark.sql.ansi.enabled")
+    }
   }
 
   test("graft_ivf_assign ≡ the fscores/hybridCellCol column pair (IVF family), corpus + edges") {
@@ -505,10 +543,10 @@ class ExtensionsSpec extends SparkSpec {
     val emb = graft.sources.Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding"))
     val both = emb
-      .withColumn("fscores", Similarity.cellScoresCol(cents))
+      .withColumn("fscores", VectorReference.cellScoresCol(cents))
       .select(col("vec_id"),
         Similarity.ivfCellCol(cents).as("k"),
-        Similarity.hybridCellCol(cents).as("h"))
+        VectorReference.hybridCellCol(cents).as("h"))
     assertCodegendProject(both)
     val rows = both.collect()
     assert(rows.nonEmpty, "sf0.001 fixture must exercise the kernel")
@@ -516,16 +554,16 @@ class ExtensionsSpec extends SparkSpec {
     // a NULL embedding must yield a NULL cell on both forms
     val nullRow = emb.limit(1)
       .select(expr("CAST(NULL AS ARRAY<FLOAT>)").as("embedding"))
-      .withColumn("fscores", Similarity.cellScoresCol(cents))
-      .select(Similarity.ivfCellCol(cents).as("k"), Similarity.hybridCellCol(cents).as("h"))
+      .withColumn("fscores", VectorReference.cellScoresCol(cents))
+      .select(Similarity.ivfCellCol(cents).as("k"), VectorReference.hybridCellCol(cents).as("h"))
       .head()
     assert(nullRow.isNullAt(0) && nullRow.isNullAt(1))
     // near-tie fallback path: identical centroids 0 and 1 force gap = 0 —
     // both forms must take the exact-decimal argmax (first index wins)
     val tied = cents.clone(); tied(1) = tied(0).clone()
     val tr = emb.limit(32)
-      .withColumn("fscores", Similarity.cellScoresCol(tied))
-      .select(Similarity.ivfCellCol(tied).as("k"), Similarity.hybridCellCol(tied).as("h"))
+      .withColumn("fscores", VectorReference.cellScoresCol(tied))
+      .select(Similarity.ivfCellCol(tied).as("k"), VectorReference.hybridCellCol(tied).as("h"))
       .collect()
     tr.foreach(r => assert(r.get(0) === r.get(1), r.toString))
     // generated ≡ interpreted for the kernel itself
@@ -541,14 +579,6 @@ class ExtensionsSpec extends SparkSpec {
     // NULL, so the CASE takes the exact-decimal branch. The kernel must
     // agree in both modes, generated and interpreted, on NULL rows too.
     val one = Array(cents(0))
-    def outcome(df: => org.apache.spark.sql.DataFrame): Either[String, Seq[Any]] =
-      try Right(df.collect().map(_.get(0)).toSeq)
-      catch {
-        case e: Exception =>
-          Left(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-            .collect { case t: org.apache.spark.SparkThrowable if t.getCondition != null => t.getCondition }
-            .toSeq.lastOption.getOrElse(e.toString))
-      }
     try {
       for (ansi <- Seq("true", "false"); session <- Seq(spark, interpSession)) {
         spark.conf.set("spark.sql.ansi.enabled", ansi)
@@ -556,8 +586,8 @@ class ExtensionsSpec extends SparkSpec {
         val some = graft.sources.Tables.embeddings(session, sf0001).select(col("embedding")).limit(8)
         val nulls = some.select(when(lit(false), col("embedding")).as("embedding"))
         for (in <- Seq(some, nulls)) {
-          val ref = outcome(in.withColumn("fscores", Similarity.cellScoresCol(one))
-            .select(Similarity.hybridCellCol(one)))
+          val ref = outcome(in.withColumn("fscores", VectorReference.cellScoresCol(one))
+            .select(VectorReference.hybridCellCol(one)))
           val ker = outcome(in.select(Similarity.ivfCellCol(one)))
           assert(ker === ref, s"ansi=$ansi, ${if (session eq spark) "generated" else "interpreted"}")
         }
@@ -565,6 +595,17 @@ class ExtensionsSpec extends SparkSpec {
     } finally {
       spark.conf.unset("spark.sql.ansi.enabled")
       interpSession.conf.unset("spark.sql.ansi.enabled")
+    }
+    // a non-finite element makes every score non-finite. NaN scores (and
+    // +Inf − +Inf) give a NaN top-2 gap, which Spark orders above every
+    // double, so the column form takes the double-score branch
+    for (session <- Seq(spark, interpSession); v <- Seq("'NaN'", "'Infinity'", "'-Infinity'")) {
+      val in = withFirstElement(session, v, 4)
+      val ref = outcome(in.withColumn("fscores", VectorReference.cellScoresCol(cents))
+        .select(VectorReference.hybridCellCol(cents)))
+      val ker = outcome(in.select(Similarity.ivfCellCol(cents)))
+      assert(ref.isRight, s"column form must accept element $v: $ref")
+      assert(ker === ref, s"$v, ${if (session eq spark) "generated" else "interpreted"}")
     }
   }
 }

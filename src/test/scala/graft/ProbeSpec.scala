@@ -1,0 +1,33 @@
+package graft
+
+import java.nio.file.Files
+
+/** The probe modes as functions over the shared session. `Probe.main`
+  * is never called here: it stops the session it runs on. */
+class ProbeSpec extends SparkSpec {
+
+  test("Probe.plan writes one formatted plan per selected query") {
+    val dir = Files.createTempDirectory("probe-plan")
+    try {
+      val written = Probe.plan(spark, sf0001, dir.toString, Seq("q1_busiest_user", "q33_knn_brute"))
+      assert(written.map(_.getFileName.toString).toSet ===
+        Set("q1_busiest_user.txt", "q33_knn_brute.txt"))
+      written.foreach(f => assert(Files.readString(f).contains("== Physical Plan =="), f))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("Probe.ab reports row-identical sides and restores the session's settings") {
+    val before = spark.conf.getOption("spark.graft.bnljBarrier")
+    val r = Probe.ab(spark, sf0001, "q33_knn_brute",
+      Probe.parseConf("spark.graft.bnljBarrier=false"), reps = 1)
+    assert(r.rows > 0)
+    assert(r.a.size === 1 && r.b.size === 1)
+    assert(spark.conf.getOption("spark.graft.bnljBarrier") === before)
+  }
+
+  test("Probe.ab fails fast on an unknown query") {
+    val e = intercept[IllegalArgumentException](
+      Probe.ab(spark, sf0001, "q0_no_such_query", Nil, reps = 1))
+    assert(e.getMessage.contains("q0_no_such_query"))
+  }
+}
