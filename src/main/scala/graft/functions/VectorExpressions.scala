@@ -286,13 +286,19 @@ object HexHamming64 {
   *
   * NULL parity with the HOF: mismatched lengths (zip_with pads with
   * NULL) or any NULL element poison the fold → NULL result; two empty
-  * arrays fold to the seed → 0.0. ExtensionsSpec pins generated ≡
-  * interpreted and scalacheck-drives kernel ≡ HOF equality. */
-case class DecVecDot(left: Expression, right: Expression)
+  * arrays fold to the seed → 0.0. A NaN or ±Inf product casts to NULL in
+  * either ANSI mode and poisons the fold too. A product or partial sum
+  * that does not fit DECIMAL(18,12) fails with the cast's own overflow
+  * error under ANSI (`failOnError`, captured at construction as the
+  * cast captures it) and is NULL otherwise. ExtensionsSpec pins
+  * generated ≡ interpreted and scalacheck-drives kernel ≡ HOF equality. */
+case class DecVecDot(left: Expression, right: Expression,
+    failOnError: Boolean = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot_dec"
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     def ok(e: Expression) = e.dataType match {
@@ -319,14 +325,14 @@ case class DecVecDot(left: Expression, right: Expression)
     val b = right.eval(input)
     if (b == null) return null
     DecVecDot.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      leftIsFloat, rightIsFloat)
+      leftIsFloat, rightIsFloat, failOnError)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val boxed = ctx.freshName("boxedDot")
       s"""
-         |java.lang.Double $boxed = graft.functions.DecVecDot.dot($a, $b, $leftIsFloat, $rightIsFloat);
+         |java.lang.Double $boxed = graft.functions.DecVecDot.dot($a, $b, $leftIsFloat, $rightIsFloat, $failOnError);
          |if ($boxed == null) { ${ev.isNull} = true; } else { ${ev.value} = $boxed.doubleValue(); }
        """.stripMargin
     })
@@ -342,9 +348,11 @@ object DecVecDot {
   private val MaxUnscaled = 1000000000000000000L // 10^18
 
   /** Static kernel, called from both interpreted eval and generated code.
-    * Returns null (boxed) when the HOF fold would: length mismatch or a
-    * NULL element. */
-  def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): java.lang.Double = {
+    * Returns null (boxed) when the HOF fold would: length mismatch, a
+    * NULL element, a NaN or ±Inf product, or (without `failOnError`) a
+    * product or partial sum past DECIMAL(18,12). */
+  def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean,
+      failOnError: Boolean): java.lang.Double = {
     val n = a.numElements()
     if (b.numElements() != n) return null
     var acc = 0L
@@ -353,15 +361,21 @@ object DecVecDot {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
       val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
       val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
-      val bd = java.math.BigDecimal.valueOf(x * y)
-        .setScale(Scale, java.math.RoundingMode.HALF_UP)
-      if (bd.precision - bd.scale > 18 - Scale)
-        throw new ArithmeticException(
-          s"graft_dot_dec: ${x * y} does not fit DECIMAL(18,$Scale)")
+      val p = x * y
+      if (!java.lang.Double.isFinite(p)) return null
+      val bd = java.math.BigDecimal.valueOf(p).setScale(Scale, java.math.RoundingMode.HALF_UP)
+      if (bd.precision - bd.scale > 18 - Scale) {
+        if (failOnError)
+          throw org.apache.spark.sql.graft.ColumnBridge.decimalOverflowError(p, 18, Scale)
+        return null
+      }
       acc = Math.addExact(acc, bd.unscaledValue().longValueExact())
-      if (acc >= MaxUnscaled || acc <= -MaxUnscaled)
-        throw new ArithmeticException(
-          s"graft_dot_dec: partial sum overflows DECIMAL(18,$Scale)")
+      if (acc >= MaxUnscaled || acc <= -MaxUnscaled) {
+        if (failOnError)
+          throw org.apache.spark.sql.graft.ColumnBridge.decimalOverflowError(
+            new java.math.BigDecimal(java.math.BigInteger.valueOf(acc), Scale).doubleValue(), 18, Scale)
+        return null
+      }
       i += 1
     }
     java.lang.Double.valueOf(
@@ -940,7 +954,7 @@ object IvfAssignCell {
       var best = -1
       var i = 0
       while (i < k) {
-        dsc(i) = DecVecDot.dot(arr, cents(i), isFloat, false)
+        dsc(i) = DecVecDot.dot(arr, cents(i), isFloat, false, failOnError)
         if (dsc(i) != null &&
           (best < 0 || java.lang.Double.compare(dsc(i).doubleValue(), dsc(best).doubleValue()) > 0))
           best = i

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The build-once gate shared by every persisted derived artifact (LSH
   * band index, cluster labels, IVF model tables, span digests, portable
@@ -41,6 +41,22 @@ object Artifacts {
     * through the owning FileSystem, so nothing else assumes local disk.
     */
   val Warehouse = "/tmp/graft_warehouse"
+
+  /** Path of the artifact `name` derived from the `documents` table of
+    * `dir`: `<Warehouse>/<name>_<dir, sanitized>_<fingerprint>`, the
+    * fingerprint salted with `key`. [[Warehouse]] is read on every call. */
+  def path(dir: String, name: String, key: Int): String =
+    Warehouse + "/" + name + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
+      Bucketing.fingerprint(dir, Seq("documents"), key)
+
+  /** The build-once step for one parquet artifact at [[path]]: writes
+    * `build` unless the artifact is built, then reads it. */
+  def persisted(spark: SparkSession, dir: String, name: String, key: Int)
+      (build: => DataFrame): DataFrame = {
+    val p = path(dir, name, key)
+    if (!isBuilt(spark, p)) build.write.mode("overwrite").parquet(p)
+    spark.read.parquet(p)
+  }
 
   /** True iff `path/_SUCCESS` exists on the FileSystem owning `path`. */
   def isBuilt(spark: SparkSession, path: String): Boolean = {

@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.functions.Det
+import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 
 /** Structured Streaming formulations of the reference's dataflow
   * (reference StreamingJob.scala:85–107), over any streaming DataFrame
@@ -29,6 +30,18 @@ import graft.functions.Det
 object StreamingAnalytics {
 
   private def w31(ts: Column): Column = window(ts, "31 days")
+
+  /** A `foreachBatch` query over `input`: each micro-batch goes through
+    * `op` and its result to `sink`. A `checkpoint` location makes the
+    * source position durable, so a killed query restarts where it
+    * stopped. */
+  private def perBatch(input: DataFrame, checkpoint: Option[String])(op: DataFrame => DataFrame)
+      (sink: DataFrame => Unit): StreamingQuery = {
+    val writer = input.writeStream.outputMode("append")
+    checkpoint.fold(writer)(writer.option("checkpointLocation", _))
+      .foreachBatch { (batch: DataFrame, _: Long) => sink(op(batch)) }
+      .start()
+  }
 
   /** Running request count per user — the keyed rolling sum. Run in
     * `update` output mode: each micro-batch emits changed (user, cnt)
@@ -134,13 +147,8 @@ object StreamingAnalytics {
     * runs), any partition of the batch into micro-batches yields exactly
     * the batch operator's verdict table (spec'd in StreamingSpec). */
   def nearDupVerdictsPerBatch(spark: SparkSession, dir: String, docs: DataFrame)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Dedup.incrementalNearDupOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(docs, None)(Dedup.incrementalNearDupOf(spark, dir, _))(sink)
 
   /** Streaming incremental near-dup with INDEX MAINTENANCE — the full
     * production ingest loop: each micro-batch (a) probes the persisted
@@ -157,15 +165,11 @@ object StreamingAnalytics {
     * single-shot batch append (spec'd in StreamingSpec, kill + restart). */
   def nearDupProbeAndAppendPerBatch(spark: SparkSession, dir: String, docs: DataFrame,
       checkpointLocation: String)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Dedup.incrementalNearDupOf(spark, dir, batch))
-        graft.operators.Dedup.appendNovelBatchBucketsOf(spark, dir, batch): Unit
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(docs, Some(checkpointLocation))(identity) { batch =>
+      sink(Dedup.incrementalNearDupOf(spark, dir, batch))
+      Dedup.appendNovelBatchBucketsOf(spark, dir, batch): Unit
+    }
 
   /** Streaming span-level dedup — the stream twin of q106
     * (`TextAnalysis.incrementalSpanDedupOf`): each document micro-batch
@@ -177,13 +181,8 @@ object StreamingAnalytics {
     * StreamingSpec) — the ingest-side "don't re-admit boilerplate the
     * corpus already has" scrub, run before tokenization. */
   def spanDedupPerBatch(spark: SparkSession, dir: String, docs: DataFrame)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.TextAnalysis.incrementalSpanDedupOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(docs, None)(TextAnalysis.incrementalSpanDedupOf(spark, dir, _))(sink)
 
   /** [[spanDedupPerBatch]] with a DURABLE source position: a killed
     * scrubber restarts at the exact micro-batch where it stopped, rows
@@ -195,14 +194,9 @@ object StreamingAnalytics {
     * restart leg spec'd in StreamingSpec). */
   def spanDedupPerBatchCheckpointed(spark: SparkSession, dir: String,
       docs: DataFrame, checkpointLocation: String)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.TextAnalysis.incrementalSpanDedupOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(docs, Some(checkpointLocation))(
+      TextAnalysis.incrementalSpanDedupOf(spark, dir, _))(sink)
 
   /** Streaming curation gate — the stream twin of q90
     * (`TextAnalysis.curationGate`): the quality model (token counts +
@@ -214,13 +208,8 @@ object StreamingAnalytics {
     * and the model batch-independent, so any micro-batching reproduces
     * the batch verdict table exactly (spec'd in StreamingSpec). */
   def gateVerdictsPerBatch(spark: SparkSession, dir: String, docs: DataFrame)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.TextAnalysis.curationGateOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(docs, None)(TextAnalysis.curationGateOf(spark, dir, _))(sink)
 
   /** [[gateVerdictsPerBatch]] with a DURABLE source position:
     * `checkpointLocation` makes a killed scorer restart at the exact
@@ -233,14 +222,8 @@ object StreamingAnalytics {
     * scoring). Kill + restart leg spec'd in StreamingSpec. */
   def gateVerdictsPerBatchCheckpointed(spark: SparkSession, dir: String,
       docs: DataFrame, checkpointLocation: String)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.TextAnalysis.curationGateOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(docs, Some(checkpointLocation))(TextAnalysis.curationGateOf(spark, dir, _))(sink)
 
   /** Streaming drift monitor — the stream twin of q111's incremental
     * core (`TextAnalysis.tokenDriftOf`): each document micro-batch gets
@@ -254,13 +237,8 @@ object StreamingAnalytics {
     * replayed batch yields the identical report (spec'd in
     * StreamingSpec with the per-slice recompute). */
   def driftReportPerBatch(spark: SparkSession, dir: String, docs: DataFrame)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.TextAnalysis.tokenDriftOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(docs, None)(TextAnalysis.tokenDriftOf(spark, dir, _))(sink)
 
   /** [[driftReportPerBatch]] with a DURABLE source position: a killed
     * monitor restarts at the exact micro-batch where it stopped, so
@@ -273,14 +251,8 @@ object StreamingAnalytics {
     * restart leg spec'd in StreamingSpec. */
   def driftReportPerBatchCheckpointed(spark: SparkSession, dir: String,
       docs: DataFrame, checkpointLocation: String)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.TextAnalysis.tokenDriftOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(docs, Some(checkpointLocation))(TextAnalysis.tokenDriftOf(spark, dir, _))(sink)
 
   /** Streaming IMAGE dedup — the multimodal column's ingest twin
     * (q137's per-batch core): each arriving (doc_id, payload) media
@@ -291,13 +263,8 @@ object StreamingAnalytics {
     * first streaming leg whose per-row work is a real byte-decode
     * kernel, not a column expression. */
   def imageDupVerdictsPerBatch(spark: SparkSession, dir: String, media: DataFrame)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Multimodal.imageIncrementalDedupOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(media, None)(Multimodal.imageIncrementalDedupOf(spark, dir, _))(sink)
 
   /** Streaming VIDEO dedup — the temporal modality's ingest twin
     * (q144's per-batch core): each arriving (doc_id, payload) video
@@ -307,13 +274,8 @@ object StreamingAnalytics {
     * contract), so any micro-batching reproduces the batch q144 verdict
     * table exactly (spec'd in StreamingSpec). */
   def videoDupVerdictsPerBatch(spark: SparkSession, dir: String, media: DataFrame)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Multimodal.videoIncrementalDedupOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(media, None)(Multimodal.videoIncrementalDedupOf(spark, dir, _))(sink)
 
   /** Streaming PQ encode — q152's per-batch core: each arriving
     * (vec_id, embedding) micro-batch encodes against the FROZEN
@@ -323,13 +285,8 @@ object StreamingAnalytics {
     * the ingest path that grows an IVFPQ index by appending 4-byte
     * codes without touching the corpus. */
   def pqEncodePerBatch(spark: SparkSession, dir: String, vecs: DataFrame)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Similarity.pqIncrementalEncodeOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(vecs, None)(Similarity.pqIncrementalEncodeOf(spark, dir, _))(sink)
 
   /** Streaming AUDIO dedup — q145's per-batch core: each arriving
     * (doc_id, payload) track micro-batch is decoded, envelope-hashed
@@ -338,13 +295,8 @@ object StreamingAnalytics {
     * micro-batching reproduces the batch q145 verdict table (spec'd in
     * StreamingSpec). */
   def audioDupVerdictsPerBatch(spark: SparkSession, dir: String, media: DataFrame)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Multimodal.audioIncrementalDedupOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(media, None)(Multimodal.audioIncrementalDedupOf(spark, dir, _))(sink)
 
   /** Streaming VIDEO-CONTAINMENT verdicts — the stream twin of q148:
     * each arriving video micro-batch is densely frame-hashed and probed
@@ -355,13 +307,8 @@ object StreamingAnalytics {
     * pair each other (q72's contract), so ANY micro-batching
     * reproduces the batch q148 table (spec'd in StreamingSpec). */
   def videoContainmentPerBatch(spark: SparkSession, dir: String, media: DataFrame)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Multimodal.videoPrefixIncrementalOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(media, None)(Multimodal.videoPrefixIncrementalOf(spark, dir, _))(sink)
 
   /** Streaming AUDIO-CONTAINMENT verdicts — the stream twin of q174,
     * closing the family convention (the video prefix increment has had
@@ -376,14 +323,9 @@ object StreamingAnalytics {
     * restart leg is spec'd in StreamingSpec. */
   def audioContainmentPerBatch(spark: SparkSession, dir: String, media: DataFrame,
       checkpointLocation: String)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Multimodal.audioPrefixIncrementalOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(media, Some(checkpointLocation))(
+      Multimodal.audioPrefixIncrementalOf(spark, dir, _))(sink)
 
   /** Streaming RATE-NORMALIZED audio-containment verdicts — the stream
     * twin of q177, closing the r16 verdict's ingest gap: the q174 twin
@@ -400,14 +342,9 @@ object StreamingAnalytics {
     * restart leg is spec'd in StreamingSpec. */
   def audioContainmentNormalizedPerBatch(spark: SparkSession, dir: String, media: DataFrame,
       checkpointLocation: String)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Multimodal.audioPrefixIncrementalNormalizedOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(media, Some(checkpointLocation))(
+      Multimodal.audioPrefixIncrementalNormalizedOf(spark, dir, _))(sink)
 
   /** Streaming TIME-NORMALIZED video-containment verdicts — the stream
     * twin of q179, closing the r17 verdict's last ingest gap: the q148
@@ -426,14 +363,9 @@ object StreamingAnalytics {
     * StreamingSpec. */
   def videoContainmentNormalizedPerBatch(spark: SparkSession, dir: String, media: DataFrame,
       checkpointLocation: String)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Multimodal.videoPrefixIncrementalTimeNormalizedOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(media, Some(checkpointLocation))(
+      Multimodal.videoPrefixIncrementalTimeNormalizedOf(spark, dir, _))(sink)
 
   /** Streaming CONTAINMENT verdicts — the stream twin of q143: each
     * arriving document micro-batch is shingled and probed against the
@@ -445,13 +377,8 @@ object StreamingAnalytics {
     * q143 table — at-least-once delivery needs only a set-union sink.
     * Kill + restart leg spec'd in StreamingSpec (r13). */
   def containmentVerdictsPerBatch(spark: SparkSession, dir: String, docs: DataFrame)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Dedup.containmentIncrementalOf(spark, dir, batch))
-      }
-      .start()
+      (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(docs, None)(Dedup.containmentIncrementalOf(spark, dir, _))(sink)
 
   /** Streaming EXPORT MANIFEST — the stream twin of q127's shard
     * integrity checksums: as documents are exported shard by shard, the

@@ -271,6 +271,31 @@ class ExtensionsSpec extends SparkSpec {
     interpSession.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     interpSession.conf.set("spark.sql.codegen.wholeStage", "false")
     assert(spark.sql(q).collect().toSeq === interpSession.sql(q).collect().toSeq)
+    // non-finite and oversized products against a vector of 1000s: a NaN or
+    // ±Inf product casts to NULL in both ANSI modes and poisons the fold; a
+    // product of 1e6 or more (2000 · 1000), or a partial sum past it (two
+    // 999 · 1000 terms), fails the cast under ANSI and is NULL without it
+    val shapes = Seq("'NaN'", "'Infinity'", "'-Infinity'", "2000").map(v =>
+      v -> s"transform(embedding, (e, i) -> CASE WHEN i = 0 THEN CAST($v AS FLOAT) ELSE e END)") :+
+      ("partial sum" -> "transform(embedding, (e, i) -> CASE WHEN i < 2 THEN CAST(999 AS FLOAT) ELSE e END)")
+    try {
+      for (ansi <- Seq("true", "false"); session <- Seq(spark, interpSession)) {
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        interpSession.conf.set("spark.sql.ansi.enabled", ansi)
+        for ((name, a) <- shapes) {
+          val in = graft.sources.Tables.embeddings(session, sf0001).limit(2)
+            .selectExpr(s"$a AS a", "transform(embedding, e -> CAST(1000 AS FLOAT)) AS b")
+          val ref = outcome(in.selectExpr(hof("a", "b")))
+          val ker = outcome(in.selectExpr("graft_dot_dec(a, b)"))
+          assert(ref.isLeft === (ansi == "true" && !name.startsWith("'")), s"ansi=$ansi, $name: $ref")
+          assert(ker === ref,
+            s"ansi=$ansi, $name, ${if (session eq spark) "generated" else "interpreted"}")
+        }
+      }
+    } finally {
+      spark.conf.unset("spark.sql.ansi.enabled")
+      interpSession.conf.unset("spark.sql.ansi.enabled")
+    }
   }
 
   test("graft_dot_long ≡ the BIGINT HOF fold it replaced (q81), on open inputs and edge shapes") {

@@ -423,7 +423,7 @@ class MultimodalSpec extends SparkSpec {
       "whole-track envelope unexpectedly survived the clip — fixture broken")
     // 2. q173 unit: same pair verifies as clip-contained-in-source at
     //    Hamming 0 over the aligned 2-window prefix
-    val out = Multimodal.audioPrefixContainmentOf(Multimodal.audioWindowTableOf(
+    val out = Multimodal.prefixContainment(Multimodal.Windows, Multimodal.audioWindowTableOf(
       Seq((srcId, payload), (clipId, clip)).toDF("doc_id", "payload"))).collect()
     assert(out.length === 1)
     val r = out.head
@@ -436,7 +436,7 @@ class MultimodalSpec extends SparkSpec {
     //    forms) must reject the pair outright
     val bad = samples.take(2 * W + W / 2).toArray
     java.util.Arrays.fill(bad, W, W + W / 2, 0.toShort)
-    val badOut = Multimodal.audioPrefixContainmentOf(Multimodal.audioWindowTableOf(
+    val badOut = Multimodal.prefixContainment(Multimodal.Windows, Multimodal.audioWindowTableOf(
       Seq((srcId, payload), (clipId, MediaCodecs.encodeWav(bad)))
         .toDF("doc_id", "payload"))).collect()
     assert(badOut.isEmpty, "ruined window must fail the per-window Hamming cap")
@@ -473,7 +473,7 @@ class MultimodalSpec extends SparkSpec {
     assert((sSig.sig_hi, sSig.sig_lo) !== ((cSig.sig_hi, cSig.sig_lo)),
       "envelope unexpectedly survived resample+clip — fixture broken")
     // 2. invisible to q173's RAW kernel: the rate breaks window alignment
-    val rawOut = Multimodal.audioPrefixContainmentOf(Multimodal.audioWindowTableOf(
+    val rawOut = Multimodal.prefixContainment(Multimodal.Windows, Multimodal.audioWindowTableOf(
       Seq((srcId, payload), (copyId, copy)).toDF("doc_id", "payload"))).collect()
     assert(!rawOut.exists(r => Set(r.getLong(0), r.getLong(1)) === Set(srcId, copyId)),
       "raw fixed-window kernel unexpectedly caught the resampled clip")
@@ -485,8 +485,9 @@ class MultimodalSpec extends SparkSpec {
     assert(normSrc.forall(r => r.sample_rate === 8000 && r.n_samples === samples.length.toLong))
     // 4. the FLIP: the normalized table maps the copy back onto its
     //    source's windows — contained at Hamming 0, direction by length
-    val normOut = Multimodal.audioPrefixContainmentOf(Multimodal.audioNormWindowTableOf(
-      Seq((srcId, payload), (copyId, copy)).toDF("doc_id", "payload"))).collect()
+    val normOut = Multimodal.prefixContainment(Multimodal.Windows,
+      Multimodal.audioNormWindowTableOf(
+        Seq((srcId, payload), (copyId, copy)).toDF("doc_id", "payload"))).collect()
     assert(normOut.length === 1)
     val r = normOut.head
     assert(r.getLong(0) === srcId && r.getLong(1) === copyId)
@@ -643,7 +644,7 @@ class MultimodalSpec extends SparkSpec {
       "q139 unexpectedly caught the re-timed re-encode")
     // 1b. invisible to RAW q147: frame 0 matches (candidate forms) but
     //     the misaligned prefix fails the per-frame cap
-    val rawOut = Multimodal.videoPrefixContainmentOf(
+    val rawOut = Multimodal.prefixContainment(Multimodal.Frames,
       (rows(srcId, srcDense) ++ rows(fixId, fixDense))
         .toDF("doc_id", "n_frames", "ns", "si", "hi", "lo")).collect()
     assert(!rawOut.exists(r => Set(r.getLong(0), r.getLong(1)) === Set(srcId, fixId)),
@@ -656,7 +657,7 @@ class MultimodalSpec extends SparkSpec {
       && r.n_frames === nf.toLong && r.ns === nf.toLong))
     // 3. the FLIP: time normalization maps the re-encode back onto its
     //    source's frames — contained at Hamming 0, direction by length
-    val normOut = Multimodal.videoPrefixContainmentOf(Multimodal.videoNormFrameTableOf(
+    val normOut = Multimodal.prefixContainment(Multimodal.Frames, Multimodal.videoNormFrameTableOf(
       Seq((srcId, payload), (fixId, fix)).toDF("doc_id", "payload"))).collect()
     assert(normOut.length === 1)
     val n = normOut.head
@@ -742,6 +743,53 @@ class MultimodalSpec extends SparkSpec {
       assert(a.getInt(2) === 24 && a.getInt(3) === 24)
       assert((4 to 8).forall(i => a.getLong(i) === b.getLong(i - 2)))
       assert(a.getString(9) === b.getString(7))
+    }
+  }
+
+  test("prefix family: the eight persisted artifacts keep their paths, subdirectories and parquet schemas") {
+    // a fresh copy of the sf0.001 documents: its directory name and
+    // fingerprint key paths no earlier build wrote, so every artifact
+    // checked here is built by the code under test, never read stale
+    val dir = java.nio.file.Files.createTempDirectory("graft-prefix-artifacts")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf0001, "documents.parquet"),
+      dir.resolve("documents.parquet"))
+    try {
+      val frames = "doc_id BIGINT,n_frames BIGINT,ns BIGINT,si INT,hi BIGINT,lo BIGINT"
+      val normFrames = "doc_id BIGINT,fps INT,n_frames BIGINT,ns BIGINT,si INT,hi BIGINT,lo BIGINT"
+      val windows = "doc_id BIGINT,n_samples BIGINT,nw BIGINT,wi BIGINT,hi BIGINT,lo BIGINT"
+      val normWindows =
+        "doc_id BIGINT,sample_rate INT,n_samples BIGINT,nw BIGINT,wi BIGINT,hi BIGINT,lo BIGINT"
+      val bands = "band_idx INT,band_val BIGINT,doc_id BIGINT"
+      // (artifact name, fingerprint key, subdirectory, schema)
+      val expected = Seq(
+        ("vid_frames", 147, "", frames),
+        ("vid_prefix_idx", 148, "/bands", bands), ("vid_prefix_idx", 148, "/frames", frames),
+        ("aud_windows", 173, "", windows),
+        ("aud_prefix_idx", 174, "/bands", bands), ("aud_prefix_idx", 174, "/windows", windows),
+        ("aud_norm_windows", 176, "", normWindows),
+        ("aud_norm_prefix_idx", 177, "/bands", bands),
+        ("aud_norm_prefix_idx", 177, "/windows", normWindows),
+        ("vid_norm_frames", 178, "", normFrames),
+        ("vid_norm_prefix_idx", 179, "/bands", bands),
+        ("vid_norm_prefix_idx", 179, "/frames", normFrames))
+      // each incremental query builds its chain's index from its chain's
+      // corpus table, so these four build all eight artifacts
+      Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+        Multimodal.videoPrefixIncremental, Multimodal.audioPrefixIncremental,
+        Multimodal.audioPrefixIncrementalNormalized,
+        Multimodal.videoPrefixIncrementalTimeNormalized)
+        .foreach(q => q(spark, dir.toString).collect())
+      val dirKey = dir.toString.replaceAll("[^A-Za-z0-9]", "_")
+      expected.foreach { case (name, key, sub, ddl) =>
+        val path = s"${graft.sources.Artifacts.Warehouse}/${name}_${dirKey}_" +
+          graft.sources.Bucketing.fingerprint(dir.toString, Seq("documents"), key) + sub
+        assert(new java.io.File(path, "_SUCCESS").exists(), s"$path was not built")
+        assert(spark.read.parquet(path).schema.toDDL === ddl, path)
+      }
+    } finally {
+      cleanupWarehouseFor(dir.toString)
+      java.nio.file.Files.delete(dir.resolve("documents.parquet"))
+      java.nio.file.Files.delete(dir)
     }
   }
 
@@ -846,7 +894,7 @@ class MultimodalSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!q139pairs.contains((1L, 2L)), "q139 must reject the clipped copy")
     // …q147 flips it to a direction verdict
-    val out = Multimodal.videoPrefixContainmentOf(fixture).collect()
+    val out = Multimodal.prefixContainment(Multimodal.Frames, fixture).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(6), r.getString(7))).toMap
     assert(out.keySet === Set((1L, 2L), (1L, 3L), (2L, 3L)), s"verdicts: ${out.keySet}")
@@ -876,7 +924,7 @@ class MultimodalSpec extends SparkSpec {
     }
     val byteFixture = (denseRows(10L, full) ++ denseRows(11L, clip))
       .toDF("doc_id", "n_frames", "ns", "si", "hi", "lo")
-    val byteOut = Multimodal.videoPrefixContainmentOf(byteFixture).collect()
+    val byteOut = Multimodal.prefixContainment(Multimodal.Frames, byteFixture).collect()
     assert(byteOut.length === 1)
     assert(byteOut.head.getLong(0) === 10L && byteOut.head.getLong(1) === 11L
       && byteOut.head.getLong(6) === 0L && byteOut.head.getString(7) === "d2_in_d1")
