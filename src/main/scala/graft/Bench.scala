@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
 import scala.jdk.CollectionConverters._
+import graft.sources.Tables
 object Bench {
   /** Queries whose first execution provisions a persisted artifact
     * behind the build-once gate (layout copies, digest tables, LSH
@@ -216,8 +217,8 @@ object Bench {
     // canary's CLF corpus, whose recorded history must keep pricing its
     // own path.
     try {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      val ord = spark.read.parquet(s"$sfDir/orders.parquet")
+      val li = Tables.parquet(spark, s"$sfDir/lineitem.parquet")
+      val ord = Tables.parquet(spark, s"$sfDir/orders.parquet")
       li.groupBy("l_returnflag", "l_linestatus")
         .agg(org.apache.spark.sql.functions.sum("l_quantity").as("s"))
         .write.format("noop").mode("overwrite").save()

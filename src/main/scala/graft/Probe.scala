@@ -47,11 +47,17 @@ object Probe {
     }
   }
 
+  /** `plan`'s text with every source line number masked: an RDD's name
+    * carries its call site (`at localCheckpoint at Multimodal.scala:830`),
+    * which any edit above that line moves. Written as `Multimodal.scala:_`,
+    * two plans differ only where the plans do. */
+  private[graft] def maskCallSites(plan: String): String = plan.replaceAll("""(\.scala):\d+""", "$1:_")
+
   /** Writes `explain("formatted")` of each query, under `conf`, to
-    * `<outDir>/<query><suffix>.txt` and returns the files written; a
-    * query that fails to plan is reported and skipped. Building a
-    * query's DataFrame may provision its build-once artifact, the
-    * warm-artifact plan shape the bench times. */
+    * `<outDir>/<query><suffix>.txt` with [[maskCallSites]] applied, and
+    * returns the files written; a query that fails to plan is reported
+    * and skipped. Building a query's DataFrame may provision its
+    * build-once artifact, the warm-artifact plan shape the bench times. */
   def plan(spark: SparkSession, sfDir: String, outDir: String, queries: Seq[String],
       conf: Seq[(String, String)] = Nil, suffix: String = ""): Seq[Path] = {
     val fns = queries.map(q => q -> query(q))
@@ -59,7 +65,7 @@ object Probe {
     withConf(spark, conf) {
       fns.flatMap { case (name, fn) =>
         try Some(Files.writeString(Paths.get(outDir, s"$name$suffix.txt"),
-          fn(spark, sfDir).queryExecution.explainString(FormattedMode)))
+          maskCallSites(fn(spark, sfDir).queryExecution.explainString(FormattedMode))))
         catch { case e: Exception =>
           System.err.println(s"[probe] $name failed: ${e.getMessage}")
           None

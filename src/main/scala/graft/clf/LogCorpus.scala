@@ -3,6 +3,8 @@ package graft.clf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Deterministic NASA-like CLF corpus at REFERENCE volume (1.57M lines —
   * the NASA-access-log size the reference job parses, StreamingJob
   * .scala:85, 112–138), exercised and ORACLE-GATED at that scale instead
@@ -81,7 +83,7 @@ object LogCorpus {
     * yields parallel splits and this repartition becomes a no-op to
     * remove). */
   private def corpus(spark: SparkSession): DataFrame =
-    spark.read.parquet(ensure(spark))
+    Tables.parquet(spark, ensure(spark))
       .repartition(spark.sparkContext.defaultParallelism)
 
   /** q37b: the 13-group parse over the full corpus — every parsed field
@@ -130,7 +132,7 @@ object LogCorpus {
         .where(!LogParser.matched(col("value")))
         .select(col("line_id"), col("value").as("raw"))
         .write.mode("overwrite").parquet(DeadPath)
-    spark.read.parquet(DeadPath).orderBy("line_id")
+    Tables.parquet(spark, DeadPath).orderBy("line_id")
   }
 
   /** The corpus as a DuckDB FROM clause. */

@@ -350,20 +350,26 @@ object DecVecDot {
   /** Static kernel, called from both interpreted eval and generated code.
     * Returns null (boxed) when the HOF fold would: length mismatch, a
     * NULL element, a NaN or ±Inf product, or (without `failOnError`) a
-    * product or partial sum past DECIMAL(18,12). */
+    * product or partial sum past DECIMAL(18,12).
+    *
+    * With `failOnError` the fold's `zip_with` casts EVERY product of the
+    * common prefix before its `aggregate` adds any, so an oversized
+    * product fails the row even behind a NULL, a non-finite product, a
+    * length mismatch or an oversized partial sum. Those exits therefore
+    * scan the rest of the prefix for one ([[checkProducts]]); only
+    * poisoned rows pay for it. */
   def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean,
       failOnError: Boolean): java.lang.Double = {
     val n = a.numElements()
-    if (b.numElements() != n) return null
+    if (b.numElements() != n && !failOnError) return null
+    val common = math.min(n, b.numElements())
     var acc = 0L
     var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
-      val p = x * y
-      if (!java.lang.Double.isFinite(p)) return null
-      val bd = java.math.BigDecimal.valueOf(p).setScale(Scale, java.math.RoundingMode.HALF_UP)
+    while (i < common) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return poisoned(a, b, aFloat, bFloat, i + 1, failOnError)
+      val p = product(a, b, aFloat, bFloat, i)
+      if (!java.lang.Double.isFinite(p)) return poisoned(a, b, aFloat, bFloat, i + 1, failOnError)
+      val bd = cast(p)
       if (bd.precision - bd.scale > 18 - Scale) {
         if (failOnError)
           throw org.apache.spark.sql.graft.ColumnBridge.decimalOverflowError(p, 18, Scale)
@@ -371,15 +377,52 @@ object DecVecDot {
       }
       acc = Math.addExact(acc, bd.unscaledValue().longValueExact())
       if (acc >= MaxUnscaled || acc <= -MaxUnscaled) {
-        if (failOnError)
+        if (failOnError) {
+          checkProducts(a, b, aFloat, bFloat, i + 1)
           throw org.apache.spark.sql.graft.ColumnBridge.decimalOverflowError(
             new java.math.BigDecimal(java.math.BigInteger.valueOf(acc), Scale).doubleValue(), 18, Scale)
+        }
         return null
       }
       i += 1
     }
+    if (b.numElements() != n) return null
     java.lang.Double.valueOf(
       new java.math.BigDecimal(java.math.BigInteger.valueOf(acc), Scale).doubleValue())
+  }
+
+  private def product(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean, i: Int): Double =
+    (if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)) *
+      (if (bFloat) b.getFloat(i).toDouble else b.getDouble(i))
+
+  /** Spark's double → DECIMAL(18,12) cast, before its precision check. */
+  private def cast(p: Double): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(p).setScale(Scale, java.math.RoundingMode.HALF_UP)
+
+  /** The fold's NULL for a row poisoned before position `from`; with
+    * `failOnError` the products from `from` on are checked first. */
+  private def poisoned(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean,
+      from: Int, failOnError: Boolean): java.lang.Double = {
+    if (failOnError) checkProducts(a, b, aFloat, bFloat, from)
+    null
+  }
+
+  /** Throws the cast's overflow error for the first product of the common
+    * prefix, from position `from` on, that does not fit DECIMAL(18,12). */
+  private def checkProducts(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean,
+      from: Int): Unit = {
+    var i = from
+    while (i < math.min(a.numElements(), b.numElements())) {
+      if (!a.isNullAt(i) && !b.isNullAt(i)) {
+        val p = product(a, b, aFloat, bFloat, i)
+        if (java.lang.Double.isFinite(p)) {
+          val bd = cast(p)
+          if (bd.precision - bd.scale > 18 - Scale)
+            throw org.apache.spark.sql.graft.ColumnBridge.decimalOverflowError(p, 18, Scale)
+        }
+      }
+      i += 1
+    }
   }
 }
 

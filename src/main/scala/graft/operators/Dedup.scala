@@ -230,7 +230,7 @@ object Dedup {
         .distinct()
         .write.mode("overwrite").parquet(path)
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** Document-frequency cutoff for [[nearDupJaccard]]: shingles shared by
@@ -283,7 +283,7 @@ object Dedup {
       "_" + graft.sources.Bucketing.fingerprint(dir, Seq("documents"), MaxShingleDf + 7)
     if (!graft.sources.Artifacts.isBuilt(spark, path))
       filteredPairStatsOf(shingles(spark, dir)).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** [[filteredPairStats]] over an arbitrary DISTINCT (doc_id, sh)
@@ -465,7 +465,7 @@ object Dedup {
         .select(col("gh"), col("doc_id"))
         .write.mode("overwrite").parquet(pPath)
     }
-    (spark.read.parquet(pPath), spark.read.parquet(sPath), spark.read.parquet(zPath))
+    (Tables.parquet(spark, pPath), Tables.parquet(spark, sPath), Tables.parquet(spark, zPath))
   }
 
   /** q143 — INCREMENTAL containment dedup: [[containmentDedup]]'s q135
@@ -771,7 +771,7 @@ object Dedup {
       labels.select(col("id").as("doc_id"), col("comp").as("comp_id"))
         .write.mode("overwrite").parquet(path)
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
@@ -1011,7 +1011,7 @@ object Dedup {
     if (!graft.sources.Artifacts.isBuilt(spark, path))
       lshPairsFromSignatures(signatures(spark, dir), "q29_lsh_buckets")
         .write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** q29's BAND-GATE (r13): the xxhash64 production LSH path emits hashes
@@ -1079,7 +1079,7 @@ object Dedup {
       lshPairsFromSignatures(portableSignatures(spark, dir), "q29c_lsh_buckets")
         .write.mode("overwrite").parquet(path)
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** In-slice pairs below this exact-Jaccard permille are not audit
@@ -1294,7 +1294,7 @@ object Dedup {
           expr("CAST(conv(substr(hex(sh), 1, 8), 16, 10) AS BIGINT)")),
         "q149_corpus_buckets")
         .write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** The corpus split's cluster-label table (doc_id, comp_id) — the
@@ -1310,7 +1310,7 @@ object Dedup {
       labels.select(col("id").as("doc_id"), col("comp").as("comp_id"))
         .write.mode("overwrite").parquet(path)
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** q149 — INCREMENTAL cluster MAINTENANCE: fold a crawl increment's

@@ -735,7 +735,7 @@ object Multimodal {
         .select(col("band_idx"), col("band_val"), explode(col("members")).as("doc_id"))
         .write.mode("overwrite").parquet(bPath)
     }
-    (spark.read.parquet(bPath), spark.read.parquet(tPath))
+    (Tables.parquet(spark, bPath), Tables.parquet(spark, tPath))
   }
 
   /** The verdicts of an arbitrary (doc_id, payload) batch against a

@@ -482,7 +482,7 @@ object Relational {
           element_at(typedlit(Seq(0.25, 0.5, 0.75, 0.95)), col("qi") + 1).as("q"),
           col("ex"))
         .write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** PIVOT: order counts + decimal revenue per status × priority, with

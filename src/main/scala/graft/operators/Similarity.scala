@@ -275,7 +275,7 @@ object Similarity {
         NdBands * 1000 + graft.operators.Dedup.MaxBucket)
     if (!graft.sources.Artifacts.isBuilt(spark, path))
       embeddingNearDupPairsLsh(spark, dir).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** q160 — embedding ISOLATION audit (the OOD / diversity-keep signal;
@@ -470,7 +470,7 @@ object Similarity {
     val path = modelPath(dir, iters, corpusOnly)
     if (graft.sources.Artifacts.isBuilt(spark, path)) {
       val cents = Array.ofDim[Array[Double]](NumCells)
-      spark.read.parquet(path).collect().foreach { r =>
+      Tables.parquet(spark, path).collect().foreach { r =>
         cents(r.getInt(0)) = r.getSeq[Double](1).toArray
       }
       require(cents.forall(_ != null), s"model table $path is torn")
@@ -816,7 +816,7 @@ object Similarity {
       graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), (tau * 1000).toInt + 73)
     if (!graft.sources.Artifacts.isBuilt(spark, path))
       semanticDedupCompute(spark, dir, tau).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path).orderBy("vec_id")
+    Tables.parquet(spark, path).orderBy("vec_id")
   }
 
   private def semanticDedupCompute(spark: SparkSession, dir: String, tau: Double): DataFrame = {
@@ -1414,7 +1414,7 @@ object Similarity {
         graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 1500 + iters)
       if (graft.sources.Artifacts.isBuilt(spark, path)) {
         val cbs = Array.ofDim[Array[Double]](PqSubs, PqCodes)
-        spark.read.parquet(path).collect().foreach { r =>
+        Tables.parquet(spark, path).collect().foreach { r =>
           cbs(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
         }
         require(cbs.forall(_.forall(_ != null)), s"PQ model table $path is torn")
@@ -1476,7 +1476,7 @@ object Similarity {
         .select(col("vec_id"), pqAssignCol(cbs).as("codes"))
         .write.mode("overwrite").parquet(path)
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** q150 — PQ/ADC top-k: each query (the q33 query set, vec_id ≤ 4)
@@ -1660,7 +1660,7 @@ object Similarity {
         .select(col("vec_id"), pqAssignCol(cbs).as("codes"), col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(path)
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** q151 — IVFPQ top-k: each query ranks the 16 trained cells by the
@@ -1725,7 +1725,7 @@ object Similarity {
       graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 153)
     if (!graft.sources.Artifacts.isBuilt(spark, path))
       ivfPqCandidates(spark, dir).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   def ivfPqTopK(spark: SparkSession, dir: String, nprobe: Int = 4, k: Int = 5): DataFrame = {
@@ -1952,7 +1952,7 @@ object Similarity {
       graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 154)
     if (!graft.sources.Artifacts.isBuilt(spark, path))
       knnBrute(spark, dir).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   def ivfPqRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
@@ -2067,7 +2067,7 @@ object Similarity {
     * byte-level v1-minus-tombstones equivalence check. */
   private[graft] def ivfPqIndexV2(spark: SparkSession, dir: String, tau: Double = 0.05): DataFrame = {
     ivfPqCompaction(spark, dir, tau).count() // ensure built
-    spark.read.parquet(graft.sources.Artifacts.Warehouse + "/ivfpq_index_v2_" +
+    Tables.parquet(spark, graft.sources.Artifacts.Warehouse + "/ivfpq_index_v2_" +
       dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
       graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 159 + (tau * 100).toInt))
   }
@@ -2104,7 +2104,7 @@ object Similarity {
       graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 157 + m)
     if (!graft.sources.Artifacts.isBuilt(spark, path))
       cellRepresentativesCompute(spark, dir, m).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path).orderBy("cell", "rep_rank")
+    Tables.parquet(spark, path).orderBy("cell", "rep_rank")
   }
 
   private def cellRepresentativesCompute(spark: SparkSession, dir: String, m: Int): DataFrame = {

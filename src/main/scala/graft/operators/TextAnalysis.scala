@@ -627,7 +627,7 @@ object TextAnalysis {
         .groupBy("doc_id", "source", "gh").agg(count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(path)
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** Span width for the shared digest table (8-token spans — the
@@ -732,7 +732,7 @@ object TextAnalysis {
       graft.sources.Bucketing.fingerprint(dir, Seq("documents"), 105)
     if (!graft.sources.Artifacts.isBuilt(spark, path))
       spanDedupRewriteCompute(spark, dir).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path).orderBy("doc_id")
+    Tables.parquet(spark, path).orderBy("doc_id")
   }
 
   private[graft] def spanDedupRewriteCompute(spark: SparkSession, dir: String): DataFrame = {
@@ -1554,7 +1554,7 @@ object TextAnalysis {
       dsirFeaturize(Tables.documents(spark, dir), lit(false))
         .drop("is_t")
         .write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** [[dsirSample]] over an arbitrary (doc_id, lang, text) frame and
@@ -2060,7 +2060,7 @@ object TextAnalysis {
   def bpeFirstMerge(spark: SparkSession, dir: String): DataFrame = {
     // distinct-token histogram first (map-side combined, Zipf-bounded
     // vocabulary), then pairs once per DISTINCT token weighted by its
-    // count — see bpeTrain's recount for the row-count argument
+    // count: the pair explode runs per token type, not per occurrence
     val pairs = Tables.documents(spark, dir)
       .select(explode(expr(toksExpr)).as("w"))
       .where(length(col("w")) >= 2)
@@ -2086,21 +2086,8 @@ object TextAnalysis {
   val BpeIters = 3
 
   /** Hard cap on merge iterations = the number of reserved fresh merge
-    * symbols. Large enough to exercise the checkpointed production path
-    * ([[BpeCheckpointEvery]] < BpeMaxIters) without reserving a whole
-    * private-use plane. */
+    * symbols, without reserving a whole private-use plane. */
   val BpeMaxIters = 24
-
-  /** Training checkpoints the working corpus every this many merges:
-    * each recount replays the UNCHECKPOINTED suffix of the merge chain
-    * as stacked map-side `replace`s, so without truncation both the
-    * expression depth and the per-recount CPU grow linearly with the
-    * merge index (O(iters²) total replace applications). Checkpointing
-    * materializes the working corpus and resets the suffix to ≤ this
-    * constant — total work returns to O(iters) corpus passes. 16 keeps
-    * the default q103 run (3 iters) checkpoint-free so the oracle-gated
-    * plan is untouched. */
-  val BpeCheckpointEvery = 16
 
   /** One fresh merge symbol per iteration (U+0100, U+0101, ... — `chr(256
     * + i)` in the DuckDB oracle). Each learned pair collapses to a single
@@ -2121,60 +2108,13 @@ object TextAnalysis {
     *
     * Scale shape: the learned model is [[BpeIters]] driver-side rows (a
     * vocab-budget merge table — the q70/q85 train-then-apply model
-    * pattern, iterated), fetched via `take(1)` on a pair-keyed
-    * partial-aggregated groupBy whose key space is bounded by charset²,
-    * never the corpus. Per iteration: ONE corpus scan with i map-side
-    * replaces applied on the fly, one tiny-vocab shuffle — job count is
-    * linear in iterations (spec-pinned). The final report is a single
-    * additional scan with the whole merge chain as map-side expressions.
-    * Past [[BpeCheckpointEvery]] merges the working corpus is
-    * checkpointed ([[bpeLearn]]) so expression depth and per-recount
-    * replay cost stay bounded by a constant; the recount-per-merge
-    * structure is unchanged and PipelineOpsSpec exercises the
-    * checkpointed depth end-to-end (plan-depth + job-linearity pins). */
-  /** The training loop of [[bpeTrain]]: learns up to `iters` merges and
-    * returns them with the final working corpus (exposed so the spec can
-    * pin the checkpointed plan's expression depth). Every
-    * [[BpeCheckpointEvery]] merges the working corpus is materialized
-    * via `localCheckpoint` — truncating the stacked-`replace` lineage so
-    * each recount replays at most a constant-depth suffix instead of the
-    * whole chain (a cluster deployment would use `checkpoint()` against
-    * the reliable checkpoint dir; the truncation semantics are
-    * identical). */
-  private[graft] def bpeLearn(spark: SparkSession, dir: String,
-      iters: Int): (Seq[(String, Long)], DataFrame) = {
-    require(iters <= BpeMaxIters, s"at most ${BpeMaxIters} merge symbols are reserved")
-    var cur = Tables.documents(spark, dir).select(col("text"))
-    val learned = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    (0 until iters).foreach { i =>
-      // pair counts via the DISTINCT-token histogram: the token groupBy is
-      // map-side combined into a Zipf-bounded vocabulary, so the pair
-      // explode runs once per distinct token instead of once per token
-      // OCCURRENCE (~6x fewer materialized rows on the fixture corpus;
-      // the gap widens with corpus size since vocabulary grows sublinearly)
-      val top = cur
-        .select(explode(expr(toksExpr)).as("w"))
-        .where(length(col("w")) >= 2)
-        .groupBy("w").agg(count(lit(1)).as("wcnt"))
-        .select(col("wcnt"), explode(expr(
-          "transform(sequence(1, length(w) - 1), i -> substr(w, i, 2))")).as("pair"))
-        .groupBy("pair").agg(sum(col("wcnt")).as("cnt"))
-        .orderBy(col("cnt").desc, col("pair").asc)
-        .take(1) // vocab-budget model update: ONE row to the driver per merge
-      // a corpus with no eligible pair stays that way (the working text is
-      // unchanged), so learning stops permanently — empty corpus safe
-      if (top.nonEmpty) {
-        learned += ((top.head.getString(0), top.head.getLong(1)))
-        cur = cur.withColumn("text",
-          replace(col("text"), lit(learned.last._1), lit(BpeMergeSyms(i))))
-        if ((i + 1) % BpeCheckpointEvery == 0) cur = cur.localCheckpoint(true)
-      }
-    }
-    (learned.toSeq, cur)
-  }
-
+    * pattern), learned by [[bpeLearn]] from ONE collect of the corpus's
+    * distinct-token histogram: the corpus is scanned once for the model,
+    * whatever the merge budget, and each merge costs O(vocabulary) on the
+    * driver. The report is a single additional scan with the whole merge
+    * chain as map-side expressions. */
   def bpeTrain(spark: SparkSession, dir: String, iters: Int = BpeIters): DataFrame = {
-    val (learned, _) = bpeLearn(spark, dir, iters)
+    val learned = bpeLearn(Tables.documents(spark, dir), iters)
     val base = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val k = learned.length
     var out = base.withColumn("text_0", col("text"))
@@ -2198,6 +2138,66 @@ object TextAnalysis {
         length(col("text_0")).cast("long").as("n_chars_before"),
         length(col(s"text_$k")).cast("long").as("n_chars_after"))
     out.select(cols: _*).orderBy("doc_id")
+  }
+
+  /** The training loop of [[bpeTrain]], [[bpeEncode]] and [[bpeFertility]]:
+    * learns up to `iters` merges over the `text` column of `docs`.
+    *
+    * One Spark action collects the distinct-token histogram: the tokens of
+    * `split(text, '\\s+')` of length ≥ 2 with their counts (Zipf-bounded,
+    * so it grows with the vocabulary, not the corpus). The merges are then
+    * learned on the driver, as standard BPE trains on the word-frequency
+    * table (Sennrich, Haddow & Birch, 2016). Per merge:
+    *  - every overlapping pair of adjacent code points of a token counts
+    *    the token's count, as `substr(w, i, 2)` over the corpus does;
+    *  - the top pair is the highest count, ties broken by the lower pair
+    *    in UTF-8 byte order (Spark's and DuckDB's string order; for two
+    *    code points it is their numeric order, which Java's UTF-16
+    *    `compareTo` is not once supplementary characters occur);
+    *  - it is applied as `String.replace` on each token. No pair contains
+    *    whitespace, so that equals the whole-text `replace` the report
+    *    applies.
+    * Learning stops at the first iteration with no pair: nothing changes
+    * after it, so every later iteration would be dry too. */
+  private[graft] def bpeLearn(docs: DataFrame, iters: Int): Seq[(String, Long)] = {
+    require(iters <= BpeMaxIters, s"at most ${BpeMaxIters} merge symbols are reserved")
+    val hist = docs
+      .select(explode(expr(toksExpr)).as("w"))
+      .where(length(col("w")) >= 2)
+      .groupBy("w").agg(count(lit(1)).as("wcnt"))
+      .collect()
+    val tokens = hist.map(_.getString(0))
+    val weights = hist.map(_.getLong(1))
+    val learned = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    var dry = false
+    while (learned.length < iters && !dry) {
+      // a pair of code points as one key whose numeric order is theirs
+      val counts = scala.collection.mutable.LongMap.empty[Long]
+      tokens.indices.foreach { t =>
+        val w = tokens(t)
+        var j = 0
+        var prev = -1
+        while (j < w.length) {
+          val cp = w.codePointAt(j)
+          if (prev >= 0) {
+            val k = (prev.toLong << 32) | cp
+            counts.update(k, counts.getOrElse(k, 0L) + weights(t))
+          }
+          prev = cp
+          j += Character.charCount(cp)
+        }
+      }
+      if (counts.isEmpty) dry = true
+      else {
+        val (k, c) = counts.reduce { (x, y) =>
+          if (x._2 > y._2 || (x._2 == y._2 && x._1 < y._1)) x else y }
+        val pair = new String(Array((k >>> 32).toInt, k.toInt), 0, 2)
+        val sym = BpeMergeSyms(learned.length)
+        tokens.indices.foreach(t => tokens(t) = tokens(t).replace(pair, sym))
+        learned += ((pair, c))
+      }
+    }
+    learned.toSeq
   }
 
   /** DuckDB oracle for [[bpeTrain]]: the same learn/apply chain unrolled
@@ -2262,11 +2262,12 @@ object TextAnalysis {
     * learned merge symbols flagged. This is the table data-mixing reads
     * (token frequency spectrum, merge hit rates) before a training run.
     *
-    * Scale shape: the model is [[BpeIters]] driver-side rows broadcast
-    * into the encode pass as stacked map-side `replace`s (checkpoint-
-    * bounded past [[BpeCheckpointEvery]], same as training); the corpus
-    * is never collected. The usage stats are computed over the
-    * DISTINCT-token histogram (q103's recount structure): one
+    * Scale shape: the model is [[BpeIters]] driver-side rows, learned
+    * from one collect of the distinct-token histogram (q103's
+    * [[bpeLearn]]), applied in the encode pass as stacked map-side
+    * `replace`s; the corpus itself is never collected. The usage stats
+    * are computed over the DISTINCT-token histogram of the encoded
+    * corpus: one
     * map-side-combined token groupBy into a Zipf-bounded vocabulary,
     * then a per-char explode that runs once per distinct TOKEN TYPE
     * weighted by its count — materialized rows grow with vocabulary,
@@ -2286,7 +2287,7 @@ object TextAnalysis {
     }
 
   def bpeEncode(spark: SparkSession, dir: String, iters: Int = BpeIters): DataFrame = {
-    val (learned, _) = bpeLearn(spark, dir, iters)
+    val learned = bpeLearn(Tables.documents(spark, dir), iters)
     val cur = applyMerges(Tables.documents(spark, dir).select(col("text")), learned)
     val hist = cur
       .select(explode(expr(toksExpr)).as("w"))
@@ -2346,16 +2347,16 @@ object TextAnalysis {
     * ratio near 1000 means the learned merges don't fire there —
     * domain mismatch between tokenizer training mix and that source.
     *
-    * Scale shape: model training is q103's shape (per merge: one
-    * vocabulary-bounded pair aggregation + a 1-row driver fetch — the
-    * MLlib-style bounded model update); application is strictly map-side
+    * Scale shape: model training is q103's shape (one collect of the
+    * vocabulary-bounded token histogram, then every merge learned on the
+    * driver in O(vocabulary)); application is strictly map-side
     * stacked `replace`s; the report is ONE source-keyed shuffle carrying
     * four map-side partial sums, output bounded by source cardinality.
     *
     * Oracle: [[bpeOracleChain]]'s learn/apply CTEs (shared with q103/
     * q104) joined back to `documents` for the source label. */
   def bpeFertility(spark: SparkSession, dir: String, iters: Int = BpeIters): DataFrame = {
-    val (learned, _) = bpeLearn(spark, dir, iters)
+    val learned = bpeLearn(Tables.documents(spark, dir), iters)
     // raw symbol count rides the same scan: the stacked replaces rewrite
     // only `text`, so pre-merge lengths survive as a column and no
     // second corpus scan / per-source join is needed
@@ -2427,8 +2428,8 @@ object TextAnalysis {
   }
 
   /** Weighted distinct-token histogram — the training representation
-    * (every E-step runs over token TYPES weighted by count, q103's
-    * recount structure; vocabulary-bounded, not corpus-bounded). */
+    * (every E-step runs over token TYPES weighted by count, as q103's
+    * training does; vocabulary-bounded, not corpus-bounded). */
   private def uniTokenHist(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(explode(expr(toksExpr)).as("w"))
@@ -2567,7 +2568,7 @@ object TextAnalysis {
     * Viterbi, usage counting, and the prune rule end-to-end.
     *
     * Scale shape: training runs over the DISTINCT-token histogram
-    * weighted by counts (vocabulary-bounded, q103's recount trick);
+    * weighted by counts (vocabulary-bounded, q103's token histogram);
     * the DP is stacked map-side column arithmetic; the only shuffles
     * are vocabulary-bounded aggregates; model state on the driver is
     * ≤ charset + [[UniSeedK]] rows per iteration. */

@@ -55,7 +55,7 @@ object Artifacts {
       (build: => DataFrame): DataFrame = {
     val p = path(dir, name, key)
     if (!isBuilt(spark, p)) build.write.mode("overwrite").parquet(p)
-    spark.read.parquet(p)
+    Tables.parquet(spark, p)
   }
 
   /** True iff `path/_SUCCESS` exists on the FileSystem owning `path`. */

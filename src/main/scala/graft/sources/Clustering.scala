@@ -162,7 +162,7 @@ object Clustering {
     * min/max overlap January 1996 — at 100 TB a ~1/72 slice of the table
     * is also ~1/72 of the I/O. */
   def shipdateRangeRevenue(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ensureRangeClustered(spark, dir))
+    Tables.parquet(spark, ensureRangeClustered(spark, dir))
       .where(col("ship_sec") >= lit(epochSec("1996-01-01")) &&
         col("ship_sec") < lit(epochSec("1996-02-01")))
       .groupBy(col("ship_sec"))
@@ -179,7 +179,7 @@ object Clustering {
   def zorderSliceStats(spark: SparkSession, dir: String,
                        partLo: Int = 100, partHi: Int = 299,
                        suppLo: Int = 10, suppHi: Int = 29): DataFrame =
-    spark.read.parquet(ensureZOrdered(spark, dir))
+    Tables.parquet(spark, ensureZOrdered(spark, dir))
       .where(col("l_partkey").between(partLo, partHi) && col("l_suppkey").between(suppLo, suppHi))
       .groupBy(col("l_suppkey"))
       .agg(

@@ -46,7 +46,7 @@ object Sinks {
     * directory (plan shows `PartitionFilters: [isnotnull(event_date),
     * (event_date = ...)]` and one selected partition). */
   def dailyActivity(spark: SparkSession, dir: String, date: String): DataFrame =
-    spark.read.parquet(ensurePartitionedEvents(spark, dir))
+    Tables.parquet(spark, ensurePartitionedEvents(spark, dir))
       .where(col("event_date") === lit(date))
       .groupBy(col("event_type"))
       .agg(

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.functions.Det
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.sources.Tables
 
 /** Structured Streaming formulations of the reference's dataflow
   * (reference StreamingJob.scala:85–107), over any streaming DataFrame
@@ -489,7 +490,7 @@ object StreamingAnalytics {
           val partial = graft.operators.TextAnalysis.shardChecksumsOf(batch)
           val merged = vs.sorted.lastOption match {
             case Some(v) => graft.operators.TextAnalysis.mergeShardManifests(
-              spark.read.parquet(s"$statePath/v=$v"), partial)
+              Tables.parquet(spark, s"$statePath/v=$v"), partial)
             case None => partial
           }
           merged.coalesce(1).write.mode("overwrite").parquet(s"$statePath/v=$batchId")
@@ -499,7 +500,7 @@ object StreamingAnalytics {
           val keep = Set(batchId) ++ vs.sorted.lastOption.toSet
           versionDirs().filter { case (v, _, _) => !keep(v) }
             .foreach { case (_, f, _) => deleteRecursively(f) }
-          onUpdate(spark.read.parquet(s"$statePath/v=$batchId"))
+          onUpdate(Tables.parquet(spark, s"$statePath/v=$batchId"))
         }
       }
       .start()
@@ -524,7 +525,7 @@ object StreamingAnalytics {
     require(epoch >= 1L && epoch <= 3L,
       s"annealedSamplePerBatch: epoch must be 1..3 (the schedule's rungs), got $epoch")
     val rates = graft.operators.TextAnalysis
-      .annealedRatesOf(graft.sources.Tables.documents(spark, dir))
+      .annealedRatesOf(Tables.documents(spark, dir))
       .where(col("epoch") === epoch)
       .select(col("source"), col("epoch"), col("rate_permille"))
       .persist() // frozen: train once, sample every batch against THIS table

@@ -274,10 +274,18 @@ class ExtensionsSpec extends SparkSpec {
     // non-finite and oversized products against a vector of 1000s: a NaN or
     // ±Inf product casts to NULL in both ANSI modes and poisons the fold; a
     // product of 1e6 or more (2000 · 1000), or a partial sum past it (two
-    // 999 · 1000 terms), fails the cast under ANSI and is NULL without it
+    // 999 · 1000 terms), fails the cast under ANSI and is NULL without it.
+    // zip_with casts every product before the fold adds any, so under ANSI
+    // an oversized product fails the row even behind a poisoned element or
+    // a length mismatch
     val shapes = Seq("'NaN'", "'Infinity'", "'-Infinity'", "2000").map(v =>
-      v -> s"transform(embedding, (e, i) -> CASE WHEN i = 0 THEN CAST($v AS FLOAT) ELSE e END)") :+
-      ("partial sum" -> "transform(embedding, (e, i) -> CASE WHEN i < 2 THEN CAST(999 AS FLOAT) ELSE e END)")
+      v -> s"transform(embedding, (e, i) -> CASE WHEN i = 0 THEN CAST($v AS FLOAT) ELSE e END)") ++
+      Seq("NaN" -> "'NaN'", "NULL" -> "NULL").map { case (name, v) => s"$name, then 2000" ->
+        s"transform(embedding, (e, i) -> CASE WHEN i = 0 THEN CAST($v AS FLOAT) WHEN i = 1 THEN CAST(2000 AS FLOAT) ELSE e END)" } ++
+      Seq(
+        "partial sum" -> "transform(embedding, (e, i) -> CASE WHEN i < 2 THEN CAST(999 AS FLOAT) ELSE e END)",
+        "length mismatch, 2000 in the prefix" ->
+          "concat(transform(embedding, (e, i) -> CASE WHEN i = 1 THEN CAST(2000 AS FLOAT) ELSE e END), array(CAST(1 AS FLOAT)))")
     try {
       for (ansi <- Seq("true", "false"); session <- Seq(spark, interpSession)) {
         spark.conf.set("spark.sql.ansi.enabled", ansi)

@@ -1189,9 +1189,9 @@ class PipelineOpsSpec extends SparkSpec {
     assert(byLang("en") === 1L && byLang("zh") === 1L && byLang("ru") === 1L)
   }
 
-  test("q103 at production depth: 18-merge checkpointed chain matches recompute, plan depth bounded, jobs stay linear") {
+  test("q103 at production depth: an 18-merge chain matches recompute, learned from one histogram collect") {
     val docs = bpeDocs()
-    val deep = TextAnalysis.BpeCheckpointEvery + 2
+    val deep = 18
     val (expected, mergesPerDoc, cur) = bpeRecompute(docs, deep)
     assert(expected.length === deep,
       s"fixture too poor to learn $deep merges — got ${expected.length}")
@@ -1207,54 +1207,60 @@ class PipelineOpsSpec extends SparkSpec {
       assert(r.getLong(1 + 3 * deep) === docs.find(_._1 == id).get._2.length.toLong)
       assert(r.getLong(2 + 3 * deep) === cur(id).length.toLong)
     }
-    // the checkpoint must have truncated the working lineage: past the
-    // BpeCheckpointEvery boundary the plan replays only the suffix of
-    // the merge chain, not all `deep` stacked replaces
-    val (_, working) = TextAnalysis.bpeLearn(spark, sf0001, deep)
-    def replaceDepth(df: org.apache.spark.sql.DataFrame): Int =
-      "replace\\(".r.findAllIn(df.queryExecution.analyzed.toString).length
-    assert(replaceDepth(working) <= deep - TextAnalysis.BpeCheckpointEvery,
-      "checkpoint did not truncate the stacked-replace lineage")
-    // control: below the checkpoint boundary the same counter sees the
-    // full chain, so the bound above is a real truncation, not a
-    // counting artifact
-    val (_, shallow) = TextAnalysis.bpeLearn(spark, sf0001, TextAnalysis.BpeIters)
-    assert(replaceDepth(shallow) === TextAnalysis.BpeIters)
-    // job linearity ACROSS the checkpoint boundary: the checkpoint adds
-    // its own job at the boundary but must not change the per-iteration
-    // increment (a recount whose cost grew with chain depth would)
-    def jobsFor(group: String)(body: => Unit): Int = {
-      spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
-      try body finally spark.sparkContext.clearJobGroup()
-      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    // the merge budget must not reach Spark: 1, 3 and 18 merges run the
+    // same jobs of the same stages and tasks (no corpus scan per merge, no
+    // checkpoint job), and nothing is left persisted (a localCheckpoint
+    // would be)
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val tracker = spark.sparkContext.statusTracker
+    def shape(iters: Int): (Int, Seq[Int]) = {
+      val (jobs, learned) = jobsOf(TextAnalysis.bpeLearn(graft.sources.Tables.documents(spark, sf0001), iters))
+      assert(learned.length === iters)
+      val stages = jobs.flatMap(j => tracker.getJobInfo(j).map(_.stageIds().toSeq).getOrElse(Nil))
+      (jobs.length, stages.flatMap(st => tracker.getStageInfo(st).map(_.numTasks())).sorted)
     }
-    val j16 = jobsFor("bpe-deep-16") { TextAnalysis.bpeLearn(spark, sf0001, deep - 2) }
-    val j17 = jobsFor("bpe-deep-17") { TextAnalysis.bpeLearn(spark, sf0001, deep - 1) }
-    val j18 = jobsFor("bpe-deep-18") { TextAnalysis.bpeLearn(spark, sf0001, deep) }
-    assert(j17 - j16 === j18 - j17,
-      s"per-iteration job count must stay flat past the checkpoint: $j16/$j17/$j18")
+    val shapes = Seq(1, 3, deep).map(shape)
+    assert(shapes.distinct.length === 1, s"(jobs, tasks per stage) for budgets 1/3/$deep: $shapes")
+    assert(shapes.head._1 >= 1 && shapes.head._1 <= 2, s"one histogram collect expected: ${shapes.head}")
+    assert(spark.sparkContext.getPersistentRDDs.size === persisted, "learning left an RDD persisted")
   }
 
-  test("q103: recount job count is linear in iterations, and the merge order is prefix-stable") {
+  test("q103: construction runs the same jobs for any merge budget, and the merge order is prefix-stable") {
     TextAnalysis.bpeTrain(spark, sf0001, iters = 1) // warm table metadata
-    def jobsFor(group: String)(body: => org.apache.spark.sql.DataFrame) = {
-      spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
-      val df = try body finally spark.sparkContext.clearJobGroup()
-      (spark.sparkContext.statusTracker.getJobIdsForGroup(group).length, df)
-    }
-    val (j1, df1) = jobsFor("bpe-train-1")(TextAnalysis.bpeTrain(spark, sf0001, iters = 1))
-    val (j2, _) = jobsFor("bpe-train-2")(TextAnalysis.bpeTrain(spark, sf0001, iters = 2))
-    val (j3, df3) = jobsFor("bpe-train-3")(TextAnalysis.bpeTrain(spark, sf0001, iters = 3))
-    // jobs = fixed read overhead + k per iteration: the increment must be
-    // CONSTANT (a recount whose cost grew with the merge-chain depth
-    // would show a growing step) and small (scan + tiny-vocab shuffle)
-    val step = j2 - j1
-    assert(step >= 1 && step <= 3, s"one extra iteration should add 1-3 jobs, added $step")
-    assert(j3 - j2 === step,
-      s"per-iteration job count must be flat: steps ${j2 - j1} then ${j3 - j2} " +
-        s"(runs: $j1/$j2/$j3) — a superlinear recount crept in")
+    val (j1, df1) = jobsOf(TextAnalysis.bpeTrain(spark, sf0001, iters = 1))
+    val (j2, _) = jobsOf(TextAnalysis.bpeTrain(spark, sf0001, iters = 2))
+    val (j3, df3) = jobsOf(TextAnalysis.bpeTrain(spark, sf0001, iters = 3))
+    // jobs = the one histogram collect, whatever the budget: an extra
+    // iteration that reached Spark would show as a step
+    assert(j1.nonEmpty && j1.length <= 2, s"one histogram collect expected, ran ${j1.length} jobs")
+    assert(Seq(j1, j2, j3).map(_.length).distinct.length === 1,
+      s"per-iteration jobs crept in: runs ${j1.length}/${j2.length}/${j3.length}")
     // prefix stability: a shorter budget learns the same leading merge
     assert(df1.select("pair_1").head.getString(0) === df3.select("pair_1").head.getString(0))
+  }
+
+  test("q103: bpeLearn equals the distributed reference loop on the corpus, supplementary-character ties, dry and empty corpora") {
+    import spark.implicits._
+    val corpus = graft.sources.Tables.documents(spark, sf0001)
+    Seq(TextAnalysis.BpeIters, 18).foreach { n =>
+      assert(TextAnalysis.bpeLearn(corpus, n) === BpeReference.learn(corpus, n), s"sf0.001, $n merges")
+    }
+    // every pair ties on count 1, so each merge is decided by pair order:
+    // by code point (UTF-8 bytes, Spark's order) 'a' U+E000 < 'a' U+FF01 <
+    // 'a' U+1F600, while UTF-16 puts the surrogate D83D before both
+    val ties = Seq("a\uE000 a\uFF01 a\uD83D\uDE00", "\uD834\uDD1Ez \uFFFDz \uE001z",
+      "\uD83D\uDE00\uD83D\uDE00 \uFF01\uFF01 b\uD834\uDD1E\tb\uFFFD").toDF("text")
+    val learned = TextAnalysis.bpeLearn(ties, 8)
+    assert(learned === BpeReference.learn(ties, 8))
+    assert(learned.head === ("a\uE000" -> 1L), s"first merge by code point order: $learned")
+    // a corpus that dries up after one merge, one with no pair, and none
+    val dry = Seq("ab c", "d\te  f").toDF("text")
+    assert(TextAnalysis.bpeLearn(dry, 3) === Seq("ab" -> 1L))
+    assert(BpeReference.learn(dry, 3) === Seq("ab" -> 1L))
+    val none = Seq("a b", "", " c ").toDF("text")
+    assert(TextAnalysis.bpeLearn(none, 3).isEmpty && BpeReference.learn(none, 3).isEmpty)
+    val empty = spark.emptyDataset[String].toDF("text")
+    assert(TextAnalysis.bpeLearn(empty, 3).isEmpty && BpeReference.learn(empty, 3).isEmpty)
   }
 
   test("q104: encoded vocabulary usage matches a driver-side recompute, last merge symbol fully accounted") {

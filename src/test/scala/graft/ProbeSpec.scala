@@ -16,6 +16,18 @@ class ProbeSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  test("Probe.plan masks the source line of every call site in the plan text") {
+    assert(Probe.maskCallSites("MapPartitionsRDD[7] at localCheckpoint at Multimodal.scala:830") ===
+      "MapPartitionsRDD[7] at localCheckpoint at Multimodal.scala:_")
+    val dir = Files.createTempDirectory("probe-plan")
+    try {
+      val Seq(f) = Probe.plan(spark, sf0001, dir.toString, Seq("q148_video_prefix_incremental"))
+      val text = Files.readString(f)
+      assert(text.contains("localCheckpoint at Multimodal.scala:_"), text)
+      assert("""\.scala:\d""".r.findFirstIn(text).isEmpty, text)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("Probe.ab reports row-identical sides and restores the session's settings") {
     val before = spark.conf.getOption("spark.graft.bnljBarrier")
     val r = Probe.ab(spark, sf0001, "q33_knn_brute",

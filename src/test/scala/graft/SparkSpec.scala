@@ -26,6 +26,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     case _ => p.children
   }
 
+  /** Runs `body` in a job group of its own and returns the ids of the
+    * Spark jobs it submitted, with its result. The status tracker is fed
+    * by the asynchronous listener bus, so a marker job in a second group
+    * runs after `body` and is awaited: the bus is FIFO, so once the marker
+    * is visible every job of `body` is too. */
+  protected def jobsOf[T](body: => T): (Seq[Int], T) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    val out = try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-flush", "bus flush", interruptOnCancel = false)
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-flush").isEmpty
+        && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup(s"$group-flush").nonEmpty, "the status bus did not flush")
+    (sc.statusTracker.getJobIdsForGroup(group).toSeq.sorted, out)
+  }
+
+  /** The names of the stages of `jobs`, for failure messages. */
+  protected def stageNames(jobs: Seq[Int]): Seq[String] = {
+    val tracker = spark.sparkContext.statusTracker
+    jobs.flatMap(j => tracker.getJobInfo(j).map(_.stageIds().toSeq).getOrElse(Nil))
+      .flatMap(s => tracker.getStageInfo(s).map(_.name()))
+  }
+
   /** Executes `df` (finalizing any adaptive plan) and returns the shuffle
     * exchanges it actually ran — COUNTED plan evidence, not a substring
     * match over the plan string. */

@@ -64,28 +64,13 @@ class TemporalSpec extends SparkSpec {
   }
 
   test("prefix-sum range count builds a LAZY plan: no Spark job runs at construction") {
-    spark.sparkContext.setJobGroup("q49-construct", "laziness probe", interruptOnCancel = false)
-    val df = try Temporal.eventNeighborCounts(spark, sf0001)
-    finally spark.sparkContext.clearJobGroup()
-    // flush the async status bus: run a marker job and wait until it's
-    // visible — FIFO, so any construction-time job would be visible too
-    spark.sparkContext.setJobGroup("q49-flush", "bus flush", interruptOnCancel = false)
-    spark.range(1).count()
-    spark.sparkContext.clearJobGroup()
-    val deadline = System.nanoTime() + 10e9.toLong
-    while (spark.sparkContext.statusTracker.getJobIdsForGroup("q49-flush").isEmpty
-        && System.nanoTime() < deadline) Thread.sleep(20)
-    assert(spark.sparkContext.statusTracker.getJobIdsForGroup("q49-flush").nonEmpty)
-    // the only construction-time jobs allowed are the source layer's
-    // parquet schema-inference footer reads (every Tables.load pays those);
-    // the operator itself must not add an action (the old eager .head()
+    // one warm call: the first read of a table infers its schema in a job;
+    // every later read reuses the remembered schema and runs none
+    Temporal.eventNeighborCounts(spark, sf0001)
+    // the operator must not add an action either (the old eager .head()
     // bounds probe surfaced here as a "head at Temporal.scala" stage)
-    val tracker = spark.sparkContext.statusTracker
-    val constructionStages = tracker.getJobIdsForGroup("q49-construct").flatMap(
-      j => tracker.getJobInfo(j).map(_.stageIds().toSeq).getOrElse(Seq.empty[Int]))
-      .flatMap(s => tracker.getStageInfo(s).map(_.name()))
-    assert(constructionStages.forall(_.startsWith("parquet at")),
-      s"construction ran a non-source job: ${constructionStages.mkString(", ")}")
+    val (jobs, df) = jobsOf(Temporal.eventNeighborCounts(spark, sf0001))
+    assert(jobs.isEmpty, s"construction ran jobs: ${stageNames(jobs).mkString(", ")}")
     assert(df.count() > 0, "the lazy plan still executes")
   }
 
