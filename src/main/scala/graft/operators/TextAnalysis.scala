@@ -2114,7 +2114,7 @@ object TextAnalysis {
     * driver. The report is a single additional scan with the whole merge
     * chain as map-side expressions. */
   def bpeTrain(spark: SparkSession, dir: String, iters: Int = BpeIters): DataFrame = {
-    val learned = bpeLearn(Tables.documents(spark, dir), iters)
+    val learned = bpeMerges(spark, dir, iters)
     val base = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val k = learned.length
     var out = base.withColumn("text_0", col("text"))
@@ -2139,6 +2139,35 @@ object TextAnalysis {
         length(col(s"text_$k")).cast("long").as("n_chars_after"))
     out.select(cols: _*).orderBy("doc_id")
   }
+
+  /** The merges [[bpeLearn]] learns from `dir`'s documents, remembered
+    * per documents file set: q103, q104 and q117 train once, and a warm
+    * construction runs no Spark job. The key is the one
+    * [[graft.sources.Tables.parquet]] remembers the file set's schema
+    * under (path, file listing with lengths and mtimes, parquet confs),
+    * plus `iters`, so a rewritten or changed documents table retrains.
+    * A path that cannot be listed is learned afresh on every call. */
+  private[graft] def bpeMerges(spark: SparkSession, dir: String, iters: Int): Seq[(String, Long)] = {
+    def learn() = bpeLearn(Tables.documents(spark, dir), iters)
+    Tables.fileSetKey(spark, Tables.path(dir, "documents")) match {
+      case None => learn()
+      case Some(k) => Option(bpeMemo.get((k, iters))).getOrElse {
+        val learned = learn()
+        if (bpeMemo.size >= MaxBpeModels) bpeMemo.clear()
+        bpeMemo.put((k, iters), learned)
+        learned
+      }
+    }
+  }
+
+  /** Entries [[bpeMerges]] keeps before it starts over. */
+  private val MaxBpeModels = 64
+  private val bpeMemo =
+    new java.util.concurrent.ConcurrentHashMap[(Tables.FileSetKey, Int), Seq[(String, Long)]]()
+
+  /** Test hook: forget every learned merge table, so the next
+    * construction trains again. */
+  private[graft] def clearBpeMemory(): Unit = bpeMemo.clear()
 
   /** The training loop of [[bpeTrain]], [[bpeEncode]] and [[bpeFertility]]:
     * learns up to `iters` merges over the `text` column of `docs`.
@@ -2287,7 +2316,7 @@ object TextAnalysis {
     }
 
   def bpeEncode(spark: SparkSession, dir: String, iters: Int = BpeIters): DataFrame = {
-    val learned = bpeLearn(Tables.documents(spark, dir), iters)
+    val learned = bpeMerges(spark, dir, iters)
     val cur = applyMerges(Tables.documents(spark, dir).select(col("text")), learned)
     val hist = cur
       .select(explode(expr(toksExpr)).as("w"))
@@ -2356,7 +2385,7 @@ object TextAnalysis {
     * Oracle: [[bpeOracleChain]]'s learn/apply CTEs (shared with q103/
     * q104) joined back to `documents` for the source label. */
   def bpeFertility(spark: SparkSession, dir: String, iters: Int = BpeIters): DataFrame = {
-    val learned = bpeLearn(Tables.documents(spark, dir), iters)
+    val learned = bpeMerges(spark, dir, iters)
     // raw symbol count rides the same scan: the stacked replaces rewrite
     // only `text`, so pre-merge lengths survive as a column and no
     // second corpus scan / per-source join is needed

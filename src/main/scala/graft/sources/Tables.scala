@@ -17,8 +17,11 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table: $name")
-    parquet(spark, s"$sfDir/$name.parquet")
+    parquet(spark, path(sfDir, name))
   }
+
+  /** Where table `name` of `sfDir` lives. */
+  def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -81,8 +84,7 @@ object Tables {
     * millisecond. A path that cannot be listed is read as before, so a
     * missing path fails with Spark's own error. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    val key = try Some(schemaKey(spark, path))
-      catch { case _: java.io.FileNotFoundException => None }
+    val key = fileSetKey(spark, path)
     key.flatMap(k => Option(schemas.get(k))) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None =>
@@ -95,10 +97,14 @@ object Tables {
     }
   }
 
-  private final case class SchemaKey(path: String, files: Seq[(String, Long, Long)],
+  /** What a read of a parquet file set depends on: the key of [[parquet]]'s
+    * schema memo, and of anything else derived once per file set (q103's
+    * learned BPE merges). */
+  private[graft] final case class FileSetKey(path: String, files: Seq[(String, Long, Long)],
       conf: Seq[(String, String)])
 
-  private def schemaKey(spark: SparkSession, path: String): SchemaKey = {
+  /** `path`'s [[FileSetKey]], or None for a path that cannot be listed. */
+  private[graft] def fileSetKey(spark: SparkSession, path: String): Option[FileSetKey] = try {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val root = fs.makeQualified(p)
@@ -113,12 +119,12 @@ object Tables {
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
         k == "spark.sql.caseSensitive" || k == "spark.sql.files.ignoreCorruptFiles"
     }.sorted
-    SchemaKey(root.toString, walk(fs.getFileStatus(root)).sorted, conf)
-  }
+    Some(FileSetKey(root.toString, walk(fs.getFileStatus(root)).sorted, conf))
+  } catch { case _: java.io.FileNotFoundException => None }
 
   /** Entries kept before the memo starts over; a streaming job that reads
     * one new path per batch would otherwise grow it without end. */
   private val MaxSchemas = 1024
   private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[SchemaKey, org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[FileSetKey, org.apache.spark.sql.types.StructType]()
 }

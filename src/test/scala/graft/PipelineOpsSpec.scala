@@ -1227,9 +1227,12 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("q103: construction runs the same jobs for any merge budget, and the merge order is prefix-stable") {
     TextAnalysis.bpeTrain(spark, sf0001, iters = 1) // warm table metadata
-    val (j1, df1) = jobsOf(TextAnalysis.bpeTrain(spark, sf0001, iters = 1))
-    val (j2, _) = jobsOf(TextAnalysis.bpeTrain(spark, sf0001, iters = 2))
-    val (j3, df3) = jobsOf(TextAnalysis.bpeTrain(spark, sf0001, iters = 3))
+    // each budget's merges are remembered once learned; forget them, so
+    // every construction below trains
+    def cold[T](body: => T): (Seq[Int], T) = { TextAnalysis.clearBpeMemory(); jobsOf(body) }
+    val (j1, df1) = cold(TextAnalysis.bpeTrain(spark, sf0001, iters = 1))
+    val (j2, _) = cold(TextAnalysis.bpeTrain(spark, sf0001, iters = 2))
+    val (j3, df3) = cold(TextAnalysis.bpeTrain(spark, sf0001, iters = 3))
     // jobs = the one histogram collect, whatever the budget: an extra
     // iteration that reached Spark would show as a step
     assert(j1.nonEmpty && j1.length <= 2, s"one histogram collect expected, ran ${j1.length} jobs")

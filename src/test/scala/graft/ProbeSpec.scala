@@ -37,6 +37,21 @@ class ProbeSpec extends SparkSpec {
     assert(spark.conf.getOption("spark.graft.bnljBarrier") === before)
   }
 
+  test("Probe rejects a static conf by name before any query runs") {
+    val dir = Files.createTempDirectory("probe-plan")
+    try {
+      val (jobs, e) = jobsOf(intercept[IllegalArgumentException](Probe.ab(spark, sf0001,
+        "q30_simhash", Probe.parseConf("spark.sql.codegen.cache.maxEntries=2000"), reps = 1)))
+      assert(jobs.isEmpty, s"side A ran: ${stageNames(jobs).mkString(", ")}")
+      assert(e.getMessage.contains("spark.sql.codegen.cache.maxEntries") &&
+        e.getMessage.contains("static") && e.getMessage.contains("JVM flag"), e.getMessage)
+      val p = intercept[IllegalArgumentException](Probe.plan(spark, sf0001, dir.toString,
+        Seq("q1_busiest_user"), Probe.parseConf("spark.sql.warehouse.dir=/nowhere")))
+      assert(p.getMessage.contains("spark.sql.warehouse.dir"), p.getMessage)
+      assert(dir.toFile.list().isEmpty)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("Probe.ab fails fast on an unknown query") {
     val e = intercept[IllegalArgumentException](
       Probe.ab(spark, sf0001, "q0_no_such_query", Nil, reps = 1))

@@ -346,10 +346,14 @@ class ProfilingSpec extends SparkSpec {
       && e111.count(_ == "SinglePartition") === 1, e111.toString)
     assert(t111 === 1, "q111's top-25 must plan as TakeOrderedAndProject")
     // q112: ONE embeddings scan — the (label, dim) histogram exchange
-    // (counts ride it), the labels-sized fold, and the contract sort;
-    // every exchange label-keyed, nothing doc-keyed, no second scan
+    // (counts ride it), the labels-sized fold, and the contract sort's
+    // single-partition exchange (CollectedSort; no range exchange); every
+    // data exchange label-keyed, nothing doc-keyed, no second scan
     val (e112, _) = shapes("q112_embedding_drift")
-    assert(e112.length === 3 && e112.forall(_.contains("label")), e112.toString)
+    assert(e112.length === 3
+      && e112.count(_ == "SinglePartition") === 1
+      && e112.count(_.startsWith("rangepartitioning")) === 0
+      && e112.filter(_ != "SinglePartition").forall(_.contains("label")), e112.toString)
     // q115: ONE corpus scan — source-keyed shuffle + the single-partition
     // totals window over source-cardinality rows (a totals-crossJoin here
     // would defeat exchange reuse via column pruning and re-scan the

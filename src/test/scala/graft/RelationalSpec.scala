@@ -159,11 +159,13 @@ class RelationalSpec extends SparkSpec {
       (sh, bc)
     }
     // q10: ONE data shuffle (the two-phase grouped agg; map-side partials
-    // ride the scan) + the contract sort; no joins, no broadcasts
+    // ride the scan) + the contract sort, whose exchange CollectedSort makes
+    // single-partition, not range; no joins, no broadcasts
     val (e10, b10) = shapes("q10_pricing_summary")
     assert(e10.length === 2
       && e10.count(_.startsWith("hashpartitioning(l_returnflag")) === 1
-      && e10.count(_.startsWith("rangepartitioning")) === 1, e10.toString)
+      && e10.count(_ == "SinglePartition") === 1
+      && e10.count(_.startsWith("rangepartitioning")) === 0, e10.toString)
     assert(b10 === 0, s"q10 broadcasts: $b10")
     // q11: the orders<->lineitem join shuffles ONLY on l_orderkey (one
     // data-sized exchange); region/nation/customer stay broadcast; then
@@ -172,14 +174,16 @@ class RelationalSpec extends SparkSpec {
     assert(e11.length === 3
       && e11.count(_.startsWith("hashpartitioning(l_orderkey")) === 1
       && e11.count(_.startsWith("hashpartitioning(r_name")) === 1
-      && e11.count(_.startsWith("rangepartitioning")) === 1, e11.toString)
+      && e11.count(_ == "SinglePartition") === 1
+      && e11.count(_.startsWith("rangepartitioning")) === 0, e11.toString)
     assert(b11 === 4, s"q11 broadcasts: $b11")
     // q14: the rollup is ONE grouping-id hash agg (no per-level re-scan)
     // + the contract sort
     val (e14, b14) = shapes("q14_rollup_returns")
     assert(e14.length === 2
       && e14.count(_.contains("spark_grouping_id")) === 1
-      && e14.count(_.startsWith("rangepartitioning")) === 1, e14.toString)
+      && e14.count(_ == "SinglePartition") === 1
+      && e14.count(_.startsWith("rangepartitioning")) === 0, e14.toString)
     assert(b14 === 0, s"q14 broadcasts: $b14")
     // q42: the salted pre-agg shuffles on (group, salt), the final agg on
     // the group alone, + the contract sort; dims stay broadcast
@@ -187,7 +191,8 @@ class RelationalSpec extends SparkSpec {
     assert(e42.length === 3
       && e42.count(p => p.startsWith("hashpartitioning(r_name") && p.contains("o_orderkey")) === 1
       && e42.count(p => p.startsWith("hashpartitioning(r_name") && !p.contains("o_orderkey")) === 1
-      && e42.count(_.startsWith("rangepartitioning")) === 1, e42.toString)
+      && e42.count(_ == "SinglePartition") === 1
+      && e42.count(_.startsWith("rangepartitioning")) === 0, e42.toString)
     assert(b42 === 4, s"q42 broadcasts: $b42")
   }
 }
