@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.internal.SQLConf
 
 import graft.operators.Similarity
 
@@ -38,18 +37,21 @@ object Probe {
   private def query(name: String): (SparkSession, String) => DataFrame =
     SparkEntry.queries.getOrElse(name, throw new IllegalArgumentException(s"unknown query $name"))
 
-  /** Fails, naming the key, if a key of `conf` is a static conf. A static
-    * conf is fixed when the JVM starts its first session, so setting it
-    * on the running session throws, and `ab` would die only after side A
-    * had run. (`spark.conf.isModifiable` is no test here: it is false for
-    * every key Spark does not register, such as `spark.graft.bnljBarrier`,
-    * which the session takes.) */
-  private[graft] def requireSettable(conf: Seq[(String, String)]): Unit =
-    conf.collectFirst { case (k, _) if SQLConf.isStaticConfigKey(k) => k }
-      .foreach { k =>
+  /** Fails, naming the key, if the running session refuses a key of
+    * `conf`: a static SQL conf or a Spark core conf is fixed when the JVM
+    * starts its first session, and `ab` would otherwise die only after
+    * side A had run. Each key is set and restored once, so the session's
+    * own check decides. (`spark.conf.isModifiable` is no test here: it is
+    * false for every key Spark does not register, such as
+    * `spark.graft.bnljBarrier`, which the session takes.) */
+  private[graft] def requireSettable(spark: SparkSession, conf: Seq[(String, String)]): Unit =
+    conf.foreach { case (k, v) =>
+      try withConf(spark, Seq(k -> v))(())
+      catch { case e: AnalysisException =>
         throw new IllegalArgumentException(s"$k is a static conf, which a running session " +
-          s"cannot change: pass it as a JVM flag (-D$k=<value>) instead")
+          s"cannot change: pass it as a JVM flag (-D$k=<value>) instead (${e.getMessage})", e)
       }
+    }
 
   /** Runs `f` with `conf` set, then restores each key's earlier value. */
   private def withConf[T](spark: SparkSession, conf: Seq[(String, String)])(f: => T): T = {
@@ -75,7 +77,7 @@ object Probe {
   def plan(spark: SparkSession, sfDir: String, outDir: String, queries: Seq[String],
       conf: Seq[(String, String)] = Nil, suffix: String = ""): Seq[Path] = {
     val fns = queries.map(q => q -> query(q))
-    requireSettable(conf)
+    requireSettable(spark, conf)
     Files.createDirectories(Paths.get(outDir))
     withConf(spark, conf) {
       fns.flatMap { case (name, fn) =>
@@ -126,7 +128,7 @@ object Probe {
   def ab(spark: SparkSession, sfDir: String, name: String, conf: Seq[(String, String)],
       reps: Int): AbResult = {
     val fn = query(name)
-    requireSettable(conf)
+    requireSettable(spark, conf)
     def side[T](b: Boolean)(act: DataFrame => T): T =
       if (b) withConf(spark, conf)(act(fn(spark, sfDir))) else act(fn(spark, sfDir))
     val rowsA = side(b = false)(_.collect().toSeq)

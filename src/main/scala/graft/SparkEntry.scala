@@ -12,7 +12,7 @@ import graft.operators._
   * timestamps, explicit tie-breaks, and a final ORDER BY mirrored in the
   * DuckDB SQL. Column names match between Spark and SQL exactly. That
   * final ORDER BY runs where [[queries]] puts it: in one task over the
-  * collected rows, not through a range exchange.
+  * whole result, not through a range exchange.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -20,12 +20,14 @@ object SparkEntry {
     EventAnalytics.busiestUserPerWindow(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. Every caller
-    * (Bench, Verify, Probe, the perfbench harness) collects or writes the
-    * whole result, so each query is wrapped in
+    * consumes the whole result: Verify writes it to parquet, the perfbench
+    * harness collects it, and Bench and Probe write it to the noop sink,
+    * where no row reaches the driver. Each query is wrapped in
     * [[org.apache.spark.sql.graft.CollectedSort]]: a root global ORDER BY
     * runs in one task over a single-partition exchange instead of through
-    * a range exchange and its sampling job. The operators keep their own
-    * ORDER BY; [[bareQueries]] holds them unwrapped. */
+    * a range exchange and its sampling job, and that one task also
+    * writes or returns every row. The operators keep their own ORDER BY;
+    * [[bareQueries]] holds them unwrapped. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     bareQueries.map { case (name, build) =>
       name -> ((s: SparkSession, d: String) => CollectedSort(build(s, d)))

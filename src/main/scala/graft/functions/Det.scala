@@ -46,8 +46,8 @@ object Det {
     * #map-tasks partial rows and emits one row per window (about 12 a
     * year of 31-day tumbling windows, 365 a year of 1-day slides), at any
     * input volume. Scans and hash exchanges below stay parallel. Use only
-    * where the output is one row per window. Other results that are
-    * collected whole get the same one-task sort from the wrapper around
+    * where the output is one row per window. Other query results get the
+    * same one-task sort from the wrapper around
     * `SparkEntry.queries` ([[org.apache.spark.sql.graft.CollectedSort]]),
     * which leaves this `coalesce(1)` as it is. */
   def orderWindows(df: DataFrame): DataFrame =

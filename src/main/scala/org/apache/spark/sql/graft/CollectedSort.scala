@@ -5,12 +5,15 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.classic.Dataset
 
-/** The final ORDER BY of a result that is collected whole, sorted in one
+/** The final ORDER BY of a result that is consumed whole, sorted in one
   * task. A global sort over a partitioned child plans as a range exchange,
   * and its partitioner first runs a sampling job over the whole child: for
-  * a query that is scan → kernel → sort, the query's work runs twice. A
-  * collected result lands in one place anyway, so one sort task over the
-  * rows the driver is about to receive costs less. Lives under
+  * a query that is scan → kernel → sort, the query's work runs twice.
+  * Here one task sorts, and writes or returns, every row of the result,
+  * where the range exchange used one task per shuffle partition.
+  * Dropping the job pays for that up to the largest result the query
+  * surface returns: at sf0.1, local[4], the largest (q29b, 320 000 rows)
+  * ran as fast as unwrapped (README, design notes). Lives under
   * org.apache.spark.sql because `Dataset.ofRows` is private[sql]. */
 object CollectedSort {
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.CollectedSort
 
-/** `SparkEntry.queries` sorts each collected result in one task: a root
+/** `SparkEntry.queries` sorts each query result in one task: a root
   * global ORDER BY plans as `Sort ← Exchange SinglePartition`, not as a
   * range exchange whose sampling job re-runs the query's last stage. */
 class CollectedSortSpec extends SparkSpec {

@@ -50,6 +50,16 @@ class ProbeSpec extends SparkSpec {
       assert(p.getMessage.contains("spark.sql.warehouse.dir"), p.getMessage)
       assert(dir.toFile.list().isEmpty)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    // a Spark core conf is refused the same way, and a settable key before
+    // it is left as it was
+    val before = spark.conf.getOption("spark.graft.bnljBarrier")
+    val (coreJobs, c) = jobsOf(intercept[IllegalArgumentException](Probe.ab(spark, sf0001,
+      "q30_simhash", Probe.parseConf("spark.graft.bnljBarrier=false;spark.executor.memory=2g"),
+      reps = 1)))
+    assert(coreJobs.isEmpty, s"side A ran: ${stageNames(coreJobs).mkString(", ")}")
+    assert(c.getMessage.contains("spark.executor.memory") && c.getMessage.contains("JVM flag"),
+      c.getMessage)
+    assert(spark.conf.getOption("spark.graft.bnljBarrier") === before)
   }
 
   test("Probe.ab fails fast on an unknown query") {
