@@ -95,10 +95,8 @@ object Probe {
     * artifacts derived from `sfDir` and the in-memory model tiers are
     * dropped first, so the untimed set-up cost is measured on its own. */
   def setup(spark: SparkSession, sfDir: String): Unit = {
-    val dirKey = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    Option(new java.io.File(graft.sources.Artifacts.Warehouse).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.contains(dirKey) &&
-        Seq("pq_", "ivfpq_", "ivf_model_").exists(f.getName.startsWith))
+    graft.sources.Artifacts.entries(sfDir)
+      .filter(f => Seq("pq_", "ivfpq_", "ivf_model_").exists(f.getName.startsWith))
       .foreach { f =>
         println(s"[probe] dropping ${f.getName}")
         org.apache.commons.io.FileUtils.deleteDirectory(f)

@@ -20,8 +20,6 @@ object Det {
   /** Per-row double products (price*(1-disc)); 10 digits keeps them exact
     * enough that both engines round the same way. */
   val D28_10: DecimalType = DecimalType(28, 10)
-  /** Near-exact carrier for unit-scale float math (embeddings). */
-  val D38_30: DecimalType = DecimalType(38, 30)
 
   /** Order-independent SUM(double) -> double via exact decimal.
     *

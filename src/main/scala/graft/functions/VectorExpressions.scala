@@ -30,13 +30,6 @@ case class FloatVecDot(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_fdot"
 
-  private def elemAccessor(e: Expression): String =
-    e.dataType.asInstanceOf[ArrayType].elementType match {
-      case FloatType => "getFloat"
-      case DoubleType => "getDouble"
-      case t => throw new IllegalArgumentException(s"graft_fdot: unsupported element type $t")
-    }
-
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     def ok(e: Expression) = e.dataType match {
       case ArrayType(FloatType | DoubleType, _) => true

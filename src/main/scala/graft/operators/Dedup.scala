@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.functions.{BloomMightContain, Simhash64}
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 
 /** Deduplication operators over `documents` — the core of a training-data
   * pipeline at 100 TB.
@@ -216,22 +216,14 @@ object Dedup {
   private def shingles(spark: SparkSession, dir: String): DataFrame =
     shingleDigests(spark, dir).select(col("doc_id"), col("gh").as("sh"))
 
-  /** The persisted distinct (doc_id, 3-gram digest) artifact. Same
-    * fingerprint + check-then-write single-writer contract as the LSH
-    * index / cluster labels / span digests (see [[nearDupLabels]]'s
-    * scaladoc for the single-writer note). At 100 TB this is the
-    * corpus-sized table you'd bucket by digest. */
-  private[graft] def shingleDigests(spark: SparkSession, dir: String): DataFrame = {
-    val path = Warehouse + "/shingle_digests_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + graft.sources.Bucketing.fingerprint(dir, Seq("documents"), 3)
-    if (!graft.sources.Artifacts.isBuilt(spark, path)) {
+  /** The persisted distinct (doc_id, 3-gram digest) artifact, built
+    * under the [[graft.sources.Artifacts]] contract. At 100 TB this is
+    * the corpus-sized table you'd bucket by digest. */
+  private[graft] def shingleDigests(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(spark, dir, "shingle_digests", 3)(
       rawShingles(spark, dir)
         .select(col("doc_id"), unhex(md5(col("sh"))).as("gh"))
-        .distinct()
-        .write.mode("overwrite").parquet(path)
-    }
-    Tables.parquet(spark, path)
-  }
+        .distinct())
 
   /** Document-frequency cutoff for [[nearDupJaccard]]: shingles shared by
     * more than this many documents are dropped from the representation
@@ -272,19 +264,15 @@ object Dedup {
     * call — q28's Jaccard cut, q135's containment cut, q29's
     * exact-truth recall leg, and the q61 label build — so it lands once
     * as a (d1, d2, inter, n1, n2) parquet table and each consumer pays
-    * a read of the (small) candidate-pair set. Same check-then-write
-    * single-writer contract as [[nearDupLabels]]; the DuckDB oracles
+    * a read of the (small) candidate-pair set, under the
+    * [[graft.sources.Artifacts]] contract; the DuckDB oracles
     * keep re-deriving every consumer from raw text each verify run, so
     * the artifact is re-gated, never frozen. Fixture paths
     * ([[filteredPairStatsOf]]) stay live: an arbitrary frame has no
     * artifact. */
-  private def filteredPairStats(spark: SparkSession, dir: String): DataFrame = {
-    val path = Warehouse + "/pair_stats_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + graft.sources.Bucketing.fingerprint(dir, Seq("documents"), MaxShingleDf + 7)
-    if (!graft.sources.Artifacts.isBuilt(spark, path))
-      filteredPairStatsOf(shingles(spark, dir)).write.mode("overwrite").parquet(path)
-    Tables.parquet(spark, path)
-  }
+  private def filteredPairStats(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(spark, dir, "pair_stats", MaxShingleDf + 7)(
+      filteredPairStatsOf(shingles(spark, dir)))
 
   /** [[filteredPairStats]] over an arbitrary DISTINCT (doc_id, sh)
     * shingle frame (the corpus path's digest table is distinct by
@@ -436,18 +424,17 @@ object Dedup {
     * needs (bucketed by gh/doc_id at 100 TB → shuffle-free). The df cut
     * is FROZEN at index-build time (the q90/q111 frozen-model contract):
     * a batch never re-prices corpus document frequencies, which is what
-    * keeps the probe batch-proportional. Same fingerprint +
-    * check-then-write single-writer contract as [[shingleDigests]]. */
+    * keeps the probe batch-proportional. One [[graft.sources.Artifacts]]
+    * path, gated on the postings table. */
   private[graft] def containmentIndexPaths(dir: String): (String, String, String) = {
-    val base = Warehouse + "/containment_idx_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + graft.sources.Bucketing.fingerprint(dir, Seq("documents"), MaxShingleDf.toInt)
+    val base = Artifacts.path(dir, "containment_idx", MaxShingleDf)
     (base + "/postings", base + "/stop", base + "/sizes")
   }
 
   private[graft] def containmentIndex(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val (pPath, sPath, zPath) = containmentIndexPaths(dir)
-    if (!graft.sources.Artifacts.isBuilt(spark, pPath)) {
+    if (!Artifacts.isBuilt(spark, pPath)) {
       val corpus = shingleDigests(spark, dir)
         .where(pmod(col("doc_id"), lit(10)) =!= 9)
       val withDf = corpus
@@ -748,31 +735,18 @@ object Dedup {
     * everywhere" production shape: pair generation + star contraction run
     * one time per corpus content-fingerprint and land as a (doc_id,
     * comp_id) parquet table; q61 (cluster listing) and q89 (cluster-safe
-    * split) both read it. Same invalidation contract as the LSH index
-    * and the IVF model tables ([[graft.sources.Bucketing.fingerprint]]:
-    * source bytes change ⇒ new path ⇒ rebuild). The build cost shows in
-    * a query's COLD rep (BENCH_FULL `cold`); warm reps price the read,
-    * which is what a 100 TB deployment pays per downstream consumer.
-    *
-    * SINGLE-WRITER assumption (shared with the LSH/IVF/span caches):
-    * check-then-write via [[graft.sources.Artifacts.isBuilt]] — two
-    * sessions racing the same fingerprint may both build (wasted work,
-    * not wrong answers: the build is bit-deterministic, so both write
-    * the same bytes). The probe resolves through the Hadoop FileSystem
-    * API, so it sees object-store warehouses too; a multi-writer
-    * deployment would additionally serialize builders on a
-    * lock/manifest service. */
-  private[graft] def nearDupLabels(spark: SparkSession, dir: String): DataFrame = {
-    val path = Warehouse + "/neardup_labels_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + graft.sources.Bucketing.fingerprint(dir, Seq("documents"), MaxCcIters)
-    if (!graft.sources.Artifacts.isBuilt(spark, path)) {
+    * split) both read it. Built under the [[graft.sources.Artifacts]]
+    * contract (source bytes change ⇒ new path ⇒ rebuild; single writer).
+    * The build cost shows in a query's COLD rep (BENCH_FULL `cold`);
+    * warm reps price the read, which is what a 100 TB deployment pays
+    * per downstream consumer; a multi-writer deployment would
+    * additionally serialize builders on a lock/manifest service. */
+  private[graft] def nearDupLabels(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(spark, dir, "neardup_labels", MaxCcIters) {
       val pairs = nearDupJaccardUnordered(spark, dir).select(col("d1"), col("d2"))
       val (labels, _, _) = connectedComponents(pairs.toDF("src", "dst"), MaxCcIters)
       labels.select(col("id").as("doc_id"), col("comp").as("comp_id"))
-        .write.mode("overwrite").parquet(path)
     }
-    Tables.parquet(spark, path)
-  }
 
   def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
     nearDupLabels(spark, dir)
@@ -1005,14 +979,9 @@ object Dedup {
 
   /** The persisted xxhash survivor-pair artifact (production twin of
     * [[lshPairsTable]]). */
-  private[graft] def xxLshPairsTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = Warehouse + "/lsh_pairs_xx_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + graft.sources.Bucketing.fingerprint(dir, Seq("documents"), NumPerm * 1000 + MaxBucket)
-    if (!graft.sources.Artifacts.isBuilt(spark, path))
-      lshPairsFromSignatures(signatures(spark, dir), "q29_lsh_buckets")
-        .write.mode("overwrite").parquet(path)
-    Tables.parquet(spark, path)
-  }
+  private[graft] def xxLshPairsTable(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(spark, dir, "lsh_pairs_xx", NumPerm * 1000 + MaxBucket)(
+      lshPairsFromSignatures(signatures(spark, dir), "q29_lsh_buckets"))
 
   /** q29's BAND-GATE (r13): the xxhash64 production LSH path emits hashes
     * DuckDB cannot reproduce, so for 11 rounds q29 carried a rows-only
@@ -1063,8 +1032,8 @@ object Dedup {
     * re-gated on every verify run, not frozen at build time. The
     * overflow observe metric fires on the build pass (where the drop
     * happens) — true of the xxhash production twin too since r14
-    * ([[xxLshPairsTable]]). Same single-writer check-then-write
-    * contract as [[nearDupLabels]]. */
+    * ([[xxLshPairsTable]]). Built under the [[graft.sources.Artifacts]]
+    * contract. */
   def minhashLshPairsPortable(spark: SparkSession, dir: String): DataFrame =
     lshPairsTable(spark, dir).orderBy("d1", "d2")
 
@@ -1072,15 +1041,9 @@ object Dedup {
     * presentation sort — the composition form ([[minhashCalibration]]
     * re-aggregates the pairs; q100's view joins them) must not pay a
     * range exchange of the pair set first. */
-  private[graft] def lshPairsTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = Warehouse + "/lsh_pairs_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + graft.sources.Bucketing.fingerprint(dir, Seq("documents"), NumPerm * 1000 + MaxBucket)
-    if (!graft.sources.Artifacts.isBuilt(spark, path)) {
-      lshPairsFromSignatures(portableSignatures(spark, dir), "q29c_lsh_buckets")
-        .write.mode("overwrite").parquet(path)
-    }
-    Tables.parquet(spark, path)
-  }
+  private[graft] def lshPairsTable(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(spark, dir, "lsh_pairs", NumPerm * 1000 + MaxBucket)(
+      lshPairsFromSignatures(portableSignatures(spark, dir), "q29c_lsh_buckets"))
 
   /** In-slice pairs below this exact-Jaccard permille are not audit
     * subjects ([[lshRecallAudit]]): far-below-threshold pairs are
@@ -1164,16 +1127,14 @@ object Dedup {
   // ------------------------------------------------------------------
 
   private val IndexDb = "graft_lsh"
-  private val Warehouse = graft.sources.Artifacts.Warehouse
   private val batchPredicate = pmod(col("doc_id"), lit(10)) === 9
 
   /** One-time build of the corpus band-bucket index (corpus = the q68
     * split's non-batch docs). One row per (band_idx, band_key, doc_id)
     * with the member's full signature inlined so probe-side verification
     * is local to the join. Buckets keep their [[MaxBucket]] smallest
-    * doc_ids (the q29c cap — bounds any probe row's fanout). The table
-    * name carries the source content fingerprint (same invalidation
-    * contract as [[graft.sources.Bucketing]]). */
+    * doc_ids (the q29c cap — bounds any probe row's fanout). A
+    * [[graft.sources.Artifacts.bucketedTables]] table. */
   private def indexBuckets(spark: SparkSession, dir: String): Int = {
     val bytes = graft.sources.Bucketing.sourceFiles(dir, Seq("documents")).map(_.length).sum
     math.max(spark.sparkContext.defaultParallelism,
@@ -1182,25 +1143,12 @@ object Dedup {
 
   def ensureLshBandIndex(spark: SparkSession, dir: String): String = {
     import org.apache.spark.sql.expressions.Window
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $IndexDb LOCATION '$Warehouse'")
-    val numBuckets = indexBuckets(spark, dir)
-    val fp = graft.sources.Bucketing.fingerprint(dir, Seq("documents"), numBuckets)
-    val table = s"$IndexDb.lsh_bands_" + dir.replaceAll("[^A-Za-z0-9]", "_") + s"_$fp"
-    if (!spark.catalog.tableExists(table)) {
-      graft.sources.Artifacts.deleteIfExists(
-        spark, s"$Warehouse/${table.stripPrefix(s"$IndexDb.")}")
-      val corpus = Tables.documents(spark, dir).where(!batchPredicate)
-      bandKeysOf(portableSignaturesOf(corpus))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("band_idx", "band_key").orderBy("doc_id")))
-        .where(col("rn") <= MaxBucket).drop("rn")
-        .repartition(numBuckets, col("band_idx"), col("band_key"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(numBuckets, "band_idx", "band_key")
-        .sortBy("band_idx", "band_key")
-        .saveAsTable(table)
-    }
-    table
+    def bands = bandKeysOf(portableSignaturesOf(Tables.documents(spark, dir).where(!batchPredicate)))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("band_idx", "band_key").orderBy("doc_id")))
+      .where(col("rn") <= MaxBucket).drop("rn")
+    Artifacts.bucketedTables(spark, IndexDb, dir, Seq("documents"), indexBuckets(spark, dir))(
+      ("lsh_bands", Seq("band_idx", "band_key"), () => bands)).head
   }
 
   /** Probe-side candidates: batch band rows equi-joined against the
@@ -1282,36 +1230,26 @@ object Dedup {
     * corpus split), so this is exactly "the pair table the corpus had
     * before the increment arrived", not a post-hoc filter of the
     * whole-corpus pairs (whose caps would have seen batch members). */
-  private[graft] def corpusLshPairsTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = Warehouse + "/lsh_pairs_corpus_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + graft.sources.Bucketing.fingerprint(dir, Seq("documents"), NumPerm * 1000 + MaxBucket + 9)
-    if (!graft.sources.Artifacts.isBuilt(spark, path))
+  private[graft] def corpusLshPairsTable(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(spark, dir, "lsh_pairs_corpus", NumPerm * 1000 + MaxBucket + 9)(
       lshPairsFromSignatures(
         signaturesFromHash(
           shingleDigests(spark, dir)
             .where(pmod(col("doc_id"), lit(10)) =!= 9)
             .select(col("doc_id"), col("gh").as("sh")),
           expr("CAST(conv(substr(hex(sh), 1, 8), 16, 10) AS BIGINT)")),
-        "q149_corpus_buckets")
-        .write.mode("overwrite").parquet(path)
-    Tables.parquet(spark, path)
-  }
+        "q149_corpus_buckets"))
 
   /** The corpus split's cluster-label table (doc_id, comp_id) — the
-    * durable state q149 maintains incrementally. Same build-once
-    * contract as [[nearDupLabels]]. */
-  private[graft] def corpusClusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    val path = Warehouse + "/cluster_labels_corpus_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + graft.sources.Bucketing.fingerprint(dir, Seq("documents"), MaxCcIters + 149)
-    if (!graft.sources.Artifacts.isBuilt(spark, path)) {
+    * durable state q149 maintains incrementally, built under the
+    * [[graft.sources.Artifacts]] contract. */
+  private[graft] def corpusClusterLabels(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(spark, dir, "cluster_labels_corpus", MaxCcIters + 149) {
       val (labels, _, _) = connectedComponents(
         corpusLshPairsTable(spark, dir).select(col("d1"), col("d2")).toDF("src", "dst"),
         MaxCcIters)
       labels.select(col("id").as("doc_id"), col("comp").as("comp_id"))
-        .write.mode("overwrite").parquet(path)
     }
-    Tables.parquet(spark, path)
-  }
 
   /** q149 — INCREMENTAL cluster MAINTENANCE: fold a crawl increment's
     * near-dup probe edges into the PERSISTED corpus cluster labels

@@ -64,15 +64,6 @@ object Multimodal {
   private[graft] def wavVal(docId: Long, i: Int): Short =
     ((docId * SeedMul + i * IdxMul) % 65536 - 32768).toShort
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("n_frames", IntegerType, nullable = false))), nullable = false)))
-
   /** Typed media record (public: Catalyst's generated serializer must
     * construct it). */
   case class MediaRecord(doc_id: Long, payload: Array[Byte], format: String,
@@ -243,11 +234,11 @@ object Multimodal {
     * payloads READ from storage, which is both the real 100 TB shape
     * (media arrives as stored bytes, nobody re-synthesizes it per query)
     * and half the fixed CPU of the old synthesize-then-decode-per-run
-    * plan. Same single-writer check-then-write contract as the span
-    * digests ([[graft.sources.Artifacts]]); the q36 oracle re-derives
-    * the expected features from the doc_id formulas in closed form every
-    * verify run, so corrupted or stale stored payloads fail the hash
-    * gate loudly — the artifact is re-gated, never trusted. */
+    * plan. Built under the [[graft.sources.Artifacts]] contract; the
+    * q36 oracle re-derives the expected features from the doc_id
+    * formulas in closed form every verify run, so corrupted or stale
+    * stored payloads fail the hash gate loudly — the artifact is
+    * re-gated, never trusted. */
   private[graft] def mediaTable(spark: SparkSession, dir: String): DataFrame =
     Artifacts.persisted(spark, dir, "media", 3)(synthesizeMedia(spark, dir))
 
@@ -306,8 +297,8 @@ object Multimodal {
   /** Persisted corpus image-hash INDEX: one (hi, lo) → min doc_id row
     * per distinct perceptual hash over the corpus split's BMPs (batch
     * residue doc_id%10=9 held out, the q68 split) — the durable state
-    * the incremental image dedup probes. Same build-once fingerprint
-    * contract as the LSH/IVF/span artifacts; at 100 TB you'd bucket it
+    * the incremental image dedup probes, built under the
+    * [[graft.sources.Artifacts]] contract; at 100 TB you'd bucket it
     * by (hi, lo) for a shuffle-free probe join. */
   private[graft] def imageHashIndex(spark: SparkSession, dir: String): DataFrame =
     Artifacts.persisted(spark, dir, "img_ahash", 5)(
@@ -1309,9 +1300,8 @@ object Multimodal {
     * (q128/q139/q141) stay fully live — they price the production
     * pipeline and carry the always-on overflow metrics — and every
     * DuckDB oracle re-derives the whole chain from the generator each
-    * verify run, so the artifacts are re-gated, never frozen. Same
-    * single-writer check-then-write contract as
-    * [[graft.operators.Dedup.nearDupLabels]]. */
+    * verify run, so the artifacts are re-gated, never frozen. Built
+    * under the [[graft.sources.Artifacts]] contract. */
   private[graft] def imagePairsTable(spark: SparkSession, dir: String): DataFrame =
     Artifacts.persisted(spark, dir, "img_pairs", 128)(imageNearDupUnordered(spark, dir))
 
@@ -1654,9 +1644,6 @@ object MediaCodecs {
       y += 1
     }
   }
-
-  /** Total encoded WAV size for n mono 16-bit samples. */
-  def wavSize(n: Int): Int = 44 + 2 * n
 
   /** Encode mono 16-bit PCM into a canonical RIFF/WAVE file. The
     * generator always writes the 8 kHz default; the `rate` parameter

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.Det
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 
 /** Relational operator surface over the TPC-H-ish star schema.
   *
@@ -465,13 +465,9 @@ object Relational {
 
   /** The persisted exact-quantile audit table (o_orderstatus, n_orders,
     * q, ex — unrounded): the q58 gate's ground truth, built once per
-    * orders fingerprint with the same check-then-write contract as the
-    * dedup artifacts. */
-  private[graft] def exactQuantilesTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Artifacts.Warehouse + "/price_quantiles_ex_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      graft.sources.Bucketing.fingerprint(dir, Seq("orders"), 58)
-    if (!graft.sources.Artifacts.isBuilt(spark, path))
+    * orders fingerprint under the [[graft.sources.Artifacts]] contract. */
+  private[graft] def exactQuantilesTable(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(spark, dir, "price_quantiles_ex", 58, Seq("orders"))(
       Tables.orders(spark, dir)
         .groupBy(col("o_orderstatus"))
         .agg(expr("percentile(o_totalprice, array(0.25D, 0.5D, 0.75D, 0.95D))").as("exs"),
@@ -480,10 +476,7 @@ object Relational {
           posexplode(col("exs")).as(Seq("qi", "ex")))
         .select(col("o_orderstatus"), col("n_orders"),
           element_at(typedlit(Seq(0.25, 0.5, 0.75, 0.95)), col("qi") + 1).as("q"),
-          col("ex"))
-        .write.mode("overwrite").parquet(path)
-    Tables.parquet(spark, path)
-  }
+          col("ex")))
 
   /** PIVOT: order counts + decimal revenue per status × priority, with
     * priorities as columns. Explicit pivot value list so the plan is a

@@ -8,7 +8,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.functions.FloatVecDot
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 
 /** Similarity search over the `embeddings` table (array<float>, dim 64).
   *
@@ -262,21 +262,18 @@ object Similarity {
       .orderBy("v1", "v2")
   }
 
+  /** The source table of every artifact in this object. */
+  private val Emb = Seq("embeddings")
+
   /** The persisted FULL-CORPUS near-dup pair artifact: q34b's flagship
     * banded-LSH chain ([[embeddingNearDupPairsLsh]]), built once per
     * corpus fingerprint under the [[graft.sources.Artifacts]] contract —
     * same pattern as Dedup's `lsh_pairs_xx`. q34b itself stays fully
     * live (it's the gated pair query); downstream consumers (q160's
     * isolation audit) read this instead of re-deriving the chain. */
-  private[graft] def embLshPairsTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Artifacts.Warehouse + "/emb_pairs_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"),
-        NdBands * 1000 + graft.operators.Dedup.MaxBucket)
-    if (!graft.sources.Artifacts.isBuilt(spark, path))
-      embeddingNearDupPairsLsh(spark, dir).write.mode("overwrite").parquet(path)
-    Tables.parquet(spark, path)
-  }
+  private[graft] def embLshPairsTable(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(spark, dir, "emb_pairs", NdBands * 1000 + Dedup.MaxBucket, Emb)(
+      embeddingNearDupPairsLsh(spark, dir))
 
   /** q160 — embedding ISOLATION audit (the OOD / diversity-keep signal;
     * the complement of SemDeDup-style redundancy pruning — Abbas et al.
@@ -440,8 +437,8 @@ object Similarity {
 
   /** Frozen trained models, keyed by (dir, iters): train once per corpus,
     * search many — the 100 TB shape. Two tiers: this session-memory map,
-    * and a parquet MODEL TABLE under the warehouse (content-fingerprinted
-    * like [[graft.sources.Bucketing]]'s copies) so the model survives the
+    * and a parquet MODEL TABLE at an [[Artifacts.path]] (content-
+    * fingerprinted) so the model survives the
     * session — a fresh JVM's first q60 loads k×64 doubles from parquet
     * instead of paying the 3 sample-training passes again. */
   private val trainedCache =
@@ -456,10 +453,12 @@ object Similarity {
     * model path so a residue change can never serve a stale model. */
   private[graft] val BatchResidue = 8L
 
+  /** `model`, or its corpus-only variant `<model>_corpus<BatchResidue>`. */
+  private def modelName(model: String, corpusOnly: Boolean): String =
+    if (corpusOnly) s"${model}_corpus$BatchResidue" else model
+
   private def modelPath(dir: String, iters: Int, corpusOnly: Boolean): String =
-    graft.sources.Artifacts.Warehouse + "/ivf_model_" + (if (corpusOnly) s"corpus${BatchResidue}_" else "") +
-      dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), iters)
+    Artifacts.path(dir, modelName("ivf_model", corpusOnly), iters, Emb)
 
   /** Disk tier of the model cache: (cell, centroid) rows, one file. The
     * write is deterministic (the training itself is bit-deterministic),
@@ -468,7 +467,7 @@ object Similarity {
       corpusOnly: Boolean = false)
       (train: => Array[Array[Double]]): Array[Array[Double]] = {
     val path = modelPath(dir, iters, corpusOnly)
-    if (graft.sources.Artifacts.isBuilt(spark, path)) {
+    if (Artifacts.isBuilt(spark, path)) {
       val cents = Array.ofDim[Array[Double]](NumCells)
       Tables.parquet(spark, path).collect().foreach { r =>
         cents(r.getInt(0)) = r.getSeq[Double](1).toArray
@@ -811,12 +810,8 @@ object Similarity {
     // q61 precedent: one-shot labeling job persisted per corpus
     // fingerprint, downstream consumers (and the bench steady state)
     // read it; the oracle re-derives the full chain regardless.
-    val path = graft.sources.Artifacts.Warehouse + "/semdedup_labels_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), (tau * 1000).toInt + 73)
-    if (!graft.sources.Artifacts.isBuilt(spark, path))
-      semanticDedupCompute(spark, dir, tau).write.mode("overwrite").parquet(path)
-    Tables.parquet(spark, path).orderBy("vec_id")
+    Artifacts.persisted(spark, dir, "semdedup_labels", (tau * 1000).toInt + 73, Emb)(
+      semanticDedupCompute(spark, dir, tau)).orderBy("vec_id")
   }
 
   private def semanticDedupCompute(spark: SparkSession, dir: String, tau: Double): DataFrame = {
@@ -1408,11 +1403,8 @@ object Similarity {
   def trainPqCodebooks(spark: SparkSession, dir: String, iters: Int = PqIters,
       corpusOnly: Boolean = false): Array[Array[Array[Double]]] =
     pqCache.getOrElseUpdate((dir, iters, corpusOnly), {
-      val path = graft.sources.Artifacts.Warehouse + "/pq_model_" +
-        (if (corpusOnly) s"corpus${BatchResidue}_" else "") +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-        graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 1500 + iters)
-      if (graft.sources.Artifacts.isBuilt(spark, path)) {
+      val path = Artifacts.path(dir, modelName("pq_model", corpusOnly), 1500 + iters, Emb)
+      if (Artifacts.isBuilt(spark, path)) {
         val cbs = Array.ofDim[Array[Double]](PqSubs, PqCodes)
         Tables.parquet(spark, path).collect().foreach { r =>
           cbs(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
@@ -1465,19 +1457,12 @@ object Similarity {
 
   /** The persisted PQ code table (vec_id, codes[PqSubs]) — encode-once
     * per corpus fingerprint; the 64×-compressed representation the ADC
-    * scan reads. Same check-then-write contract as the IVF model. */
-  private[graft] def pqCodesTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Artifacts.Warehouse + "/pq_codes_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 150)
-    if (!graft.sources.Artifacts.isBuilt(spark, path)) {
+    * scan reads. An [[Artifacts.persisted]] table. */
+  private[graft] def pqCodesTable(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(spark, dir, "pq_codes", 150, Emb) {
       val cbs = trainPqCodebooks(spark, dir)
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), pqAssignCol(cbs).as("codes"))
-        .write.mode("overwrite").parquet(path)
+      Tables.embeddings(spark, dir).select(col("vec_id"), pqAssignCol(cbs).as("codes"))
     }
-    Tables.parquet(spark, path)
-  }
 
   /** q150 — PQ/ADC top-k: each query (the q33 query set, vec_id ≤ 4)
     * builds its 128-entry LUT on the driver (a bounded model-sized
@@ -1647,13 +1632,11 @@ object Similarity {
 
   /** The persisted IVFPQ index: trained-IVF cell + PQ codes per vector,
     * written `partitionBy("cell")` (posting-list layout — probes prune
-    * partitions). Build-once per corpus fingerprint, the
-    * [[pqCodesTable]] contract. */
+    * partitions). Build-once per corpus fingerprint at an
+    * [[Artifacts.path]]. */
   private[graft] def ivfPqIndexTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Artifacts.Warehouse + "/ivfpq_index_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 151)
-    if (!graft.sources.Artifacts.isBuilt(spark, path)) {
+    val path = Artifacts.path(dir, "ivfpq_index", 151, Emb)
+    if (!Artifacts.isBuilt(spark, path)) {
       val cents = trainIvfCentroids(spark, dir)
       val cbs = trainPqCodebooks(spark, dir)
       ivfAssignments(spark, dir, cents)
@@ -1718,15 +1701,9 @@ object Similarity {
 
   /** Persisted [[ivfPqCandidates]] output per corpus fingerprint —
     * the shared input of the q153/q154/q155 audit & maintenance family
-    * (check-then-write, built by the q153 setup entry). */
-  private[graft] def ivfPqCandTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Artifacts.Warehouse + "/ivfpq_cand_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 153)
-    if (!graft.sources.Artifacts.isBuilt(spark, path))
-      ivfPqCandidates(spark, dir).write.mode("overwrite").parquet(path)
-    Tables.parquet(spark, path)
-  }
+    * (an [[Artifacts.persisted]] table, built by the q153 setup entry). */
+  private[graft] def ivfPqCandTable(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(spark, dir, "ivfpq_cand", 153, Emb)(ivfPqCandidates(spark, dir))
 
   def ivfPqTopK(spark: SparkSession, dir: String, nprobe: Int = 4, k: Int = 5): DataFrame = {
     val cand = ivfPqCandidates(spark, dir, nprobe)
@@ -1946,14 +1923,8 @@ object Similarity {
     * against (built once per corpus fingerprint by the q154 setup entry;
     * q33 itself stays live — it PRICES the brute baseline, the audits
     * only consume its result). */
-  private[graft] def knnTruthTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Artifacts.Warehouse + "/knn_truth_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 154)
-    if (!graft.sources.Artifacts.isBuilt(spark, path))
-      knnBrute(spark, dir).write.mode("overwrite").parquet(path)
-    Tables.parquet(spark, path)
-  }
+  private[graft] def knnTruthTable(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(spark, dir, "knn_truth", 154, Emb)(knnBrute(spark, dir))
 
   def ivfPqRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val truth = knnTruthTable(spark, dir).select(col("q_id"), col("n_id"))
@@ -2051,10 +2022,8 @@ object Similarity {
       .select(col("cell"), col("n_total"), col("n_dead"),
         (col("n_dead").cast("double") / col("n_total").cast("double")).as("dead_frac"))
       .withColumn("compacted", col("dead_frac") > tau)
-    val path = graft.sources.Artifacts.Warehouse + "/ivfpq_index_v2_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 159 + (tau * 100).toInt)
-    if (!graft.sources.Artifacts.isBuilt(spark, path)) {
+    val path = ivfPqIndexV2Path(dir, tau)
+    if (!Artifacts.isBuilt(spark, path)) {
       val flagged = report.where(col("compacted")).select("cell")
         .collect().map(_.getLong(0)) // bounded: ≤ NumCells rows
       idx.where(!(col("cell").isin(flagged.toSeq: _*) && dead))
@@ -2067,10 +2036,11 @@ object Similarity {
     * byte-level v1-minus-tombstones equivalence check. */
   private[graft] def ivfPqIndexV2(spark: SparkSession, dir: String, tau: Double = 0.05): DataFrame = {
     ivfPqCompaction(spark, dir, tau).count() // ensure built
-    Tables.parquet(spark, graft.sources.Artifacts.Warehouse + "/ivfpq_index_v2_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 159 + (tau * 100).toInt))
+    Tables.parquet(spark, ivfPqIndexV2Path(dir, tau))
   }
+
+  private def ivfPqIndexV2Path(dir: String, tau: Double): String =
+    Artifacts.path(dir, "ivfpq_index_v2", 159 + (tau * 100).toInt, Emb)
 
   /** DuckDB oracle for q159: cell populations from the trained-IVF
     * prefix, dead counts by the q155 tombstone rule, threshold literal. */
@@ -2099,12 +2069,8 @@ object Similarity {
   def cellRepresentatives(spark: SparkSession, dir: String, m: Int = 3): DataFrame = {
     // corpus-level derived table → persist once per corpus fingerprint
     // (the q61 label-table precedent); the live query reads + orders
-    val path = graft.sources.Artifacts.Warehouse + "/cell_reps_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      graft.sources.Bucketing.fingerprint(dir, Seq("embeddings"), 157 + m)
-    if (!graft.sources.Artifacts.isBuilt(spark, path))
-      cellRepresentativesCompute(spark, dir, m).write.mode("overwrite").parquet(path)
-    Tables.parquet(spark, path).orderBy("cell", "rep_rank")
+    Artifacts.persisted(spark, dir, "cell_reps", 157 + m, Emb)(
+      cellRepresentativesCompute(spark, dir, m)).orderBy("cell", "rep_rank")
   }
 
   private def cellRepresentativesCompute(spark: SparkSession, dir: String, m: Int): DataFrame = {

@@ -1,18 +1,26 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The build-once gate shared by every persisted derived artifact (LSH
   * band index, cluster labels, IVF model tables, span digests, portable
   * LSH pairs, clustered/partitioned layout copies, the CLF corpus).
   *
+  * The only way into the artifact tree:
+  *  - [[path]] names an artifact: `<Warehouse>/<name>_<dir key>_<fingerprint>`;
+  *  - [[persisted]] is the check-then-write step for a plain parquet
+  *    artifact at that path. An artifact with its own writer (several
+  *    tables, partitioned, collected to the driver) takes [[path]] and
+  *    gates on [[isBuilt]] itself;
+  *  - [[bucketedTables]] is the same step for bucketed catalog tables,
+  *    whose databases are located at [[Warehouse]];
+  *  - [[entries]] lists what is built for a source dir.
+  *
   * The probe resolves `path/_SUCCESS` through the Hadoop FileSystem API
   * with the session's Hadoop configuration, so it is correct on whatever
   * filesystem the warehouse actually lives on — `file://` locally,
   * `hdfs://` or an object store (`s3a://`, ...) in a cluster deployment.
-  * A `java.io.File` check (the pre-round-7 form) silently returns false
-  * on non-local paths, which would degrade build-once into
-  * build-every-call the moment the warehouse moves off local disk.
   *
   * Contract (single-writer check-then-write, documented once here for
   * all call sites):
@@ -39,24 +47,64 @@ object Artifacts {
     * whole artifact tree — e.g. onto `s3a://bucket/graft` — by changing
     * one constant; every probe/delete in this object already resolves
     * through the owning FileSystem, so nothing else assumes local disk.
+    * Read on every call, never copied.
     */
   val Warehouse = "/tmp/graft_warehouse"
 
-  /** Path of the artifact `name` derived from the `documents` table of
-    * `dir`: `<Warehouse>/<name>_<dir, sanitized>_<fingerprint>`, the
-    * fingerprint salted with `key`. [[Warehouse]] is read on every call. */
-  def path(dir: String, name: String, key: Int): String =
-    Warehouse + "/" + name + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      Bucketing.fingerprint(dir, Seq("documents"), key)
+  /** `dir` as it appears in artifact and table names: every character
+    * outside `[A-Za-z0-9]` becomes `_`. The fingerprint next to it keeps
+    * dirs that sanitize alike ('sf0.1' vs 'sf0_1') apart. */
+  def dirKey(dir: String): String = dir.replaceAll("[^A-Za-z0-9]", "_")
+
+  private def entry(dir: String, name: String, fp: String): String =
+    s"${name}_${dirKey(dir)}_$fp"
+
+  /** Path of the artifact `name` derived from `tables` of `dir`:
+    * `<Warehouse>/<name>_<dir key>_<fingerprint>`, the fingerprint salted
+    * with `key`. */
+  def path(dir: String, name: String, key: Int, tables: Seq[String] = Seq("documents")): String =
+    Warehouse + "/" + entry(dir, name, Bucketing.fingerprint(dir, tables, key))
 
   /** The build-once step for one parquet artifact at [[path]]: writes
     * `build` unless the artifact is built, then reads it. */
-  def persisted(spark: SparkSession, dir: String, name: String, key: Int)
-      (build: => DataFrame): DataFrame = {
-    val p = path(dir, name, key)
+  def persisted(spark: SparkSession, dir: String, name: String, key: Int,
+      tables: Seq[String] = Seq("documents"))(build: => DataFrame): DataFrame = {
+    val p = path(dir, name, key, tables)
     if (!isBuilt(spark, p)) build.write.mode("overwrite").parquet(p)
     Tables.parquet(spark, p)
   }
+
+  /** The build-once step for bucketed catalog tables in database `db`,
+    * located at [[Warehouse]]. Each `(name, keys, build)` becomes the
+    * table `db.<name>_<dir key>_<fingerprint>`, the fingerprint taken
+    * over `sources` of `dir` and salted with `numBuckets`, and `build` is
+    * written bucketed and sorted by `keys`, one sorted file per bucket.
+    * The in-memory catalog forgets tables between JVMs while their files
+    * persist, so a table missing from the catalog first has its stale
+    * directory cleared (the write is deterministic, so this is a cache
+    * rebuild). Returns the qualified table names in order. */
+  def bucketedTables(spark: SparkSession, db: String, dir: String, sources: Seq[String],
+      numBuckets: Int)(tables: (String, Seq[String], () => DataFrame)*): Seq[String] = {
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$Warehouse'")
+    val fp = Bucketing.fingerprint(dir, sources, numBuckets)
+    tables.map { case (name, keys, build) =>
+      val e = entry(dir, name, fp)
+      val table = s"$db.$e"
+      if (!spark.catalog.tableExists(table)) {
+        deleteIfExists(spark, s"$Warehouse/$e")
+        build().repartition(numBuckets, keys.map(col): _*)
+          .write.mode("overwrite").format("parquet")
+          .bucketBy(numBuckets, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
+          .saveAsTable(table)
+      }
+      table
+    }
+  }
+
+  /** The local warehouse entries whose names carry `dir`'s key. */
+  def entries(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(Warehouse).listFiles()).toSeq.flatten
+      .filter(_.getName.contains(dirKey(dir)))
 
   /** True iff `path/_SUCCESS` exists on the FileSystem owning `path`. */
   def isBuilt(spark: SparkSession, path: String): Boolean = {

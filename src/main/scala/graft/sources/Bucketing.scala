@@ -40,7 +40,6 @@ object Bucketing {
     math.max(cores, math.ceil(bytes.toDouble / TargetBucketBytes).toInt)
   }
 
-  private val Warehouse = Artifacts.Warehouse
   private val Db = "graft_bucketed"
 
   private[graft] def sourceFiles(dir: String, tables: Seq[String]): Seq[java.io.File] =
@@ -63,35 +62,16 @@ object Bucketing {
       .digest(sig.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
   }
 
-  private def tname(base: String, dir: String, fp: String): String =
-    s"$Db.${base}_b_" + dir.replaceAll("[^A-Za-z0-9]", "_") + s"_$fp"
-
   /** One-time (per session + source dir) bucketed copies of orders and
-    * lineitem, bucketed and sorted by their order key. `repartition` on
-    * the bucket key first so each bucket is a single sorted file — the
-    * layout that lets the join skip both Exchange AND Sort.
-    *
-    * The in-memory session catalog forgets tables between JVMs while
-    * their files persist under the warehouse; a fresh session clears the
-    * stale location and rewrites (the write is deterministic, so this is
-    * a cache rebuild, not a semantic change). */
+    * lineitem, bucketed and sorted by their order key: the
+    * [[Artifacts.bucketedTables]] layout that lets the join skip both
+    * Exchange AND Sort. */
   def ensureBucketed(spark: SparkSession, dir: String): (String, String) = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $Db LOCATION '$Warehouse'")
-    val numBuckets = numBucketsFor(spark, dir)
-    val fp = fingerprint(dir, Seq("orders", "lineitem"), numBuckets)
-    val o = tname("orders", dir, fp)
-    val l = tname("lineitem", dir, fp)
-    def write(table: String, df: => org.apache.spark.sql.DataFrame, key: String): Unit =
-      if (!spark.catalog.tableExists(table)) {
-        Artifacts.deleteIfExists(spark, s"$Warehouse/${table.stripPrefix(s"$Db.")}")
-        df.repartition(numBuckets, col(key))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(numBuckets, key).sortBy(key)
-          .saveAsTable(table)
-      }
-    write(o, Tables.orders(spark, dir), "o_orderkey")
-    write(l, Tables.lineitem(spark, dir)
-      .select("l_orderkey", "l_extendedprice", "l_quantity"), "l_orderkey")
+    val Seq(o, l) = Artifacts.bucketedTables(spark, Db, dir, Seq("orders", "lineitem"),
+        numBucketsFor(spark, dir))(
+      ("orders_b", Seq("o_orderkey"), () => Tables.orders(spark, dir)),
+      ("lineitem_b", Seq("l_orderkey"), () => Tables.lineitem(spark, dir)
+        .select("l_orderkey", "l_extendedprice", "l_quantity")))
     (o, l)
   }
 

@@ -48,8 +48,6 @@ object Clustering {
     math.max(cores, math.ceil(bytes.toDouble / TargetFileBytes).toInt)
   }
 
-  private val Warehouse = Artifacts.Warehouse
-
   /** Layout-code version — bump when the copy's schema or sort changes
     * (the content fingerprint only tracks the SOURCE data). */
   private val LayoutVersion = 2
@@ -59,8 +57,7 @@ object Clustering {
     * copy with the wrong granularity; [[LayoutVersion]] invalidates
     * copies written by older layout code. */
   private def loc(kind: String, dir: String, n: Int): String =
-    s"$Warehouse/lineitem_${kind}_v${LayoutVersion}_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Bucketing.fingerprint(dir, Seq("lineitem"), n)
+    Artifacts.path(dir, s"lineitem_${kind}_v$LayoutVersion", n, Seq("lineitem"))
 
   /** The Morton sort key as a Column (layout writes + specs). */
   def zorderCol(a: Column, b: Column): Column =

@@ -16,20 +16,11 @@ import graft.functions.Det
   * small-file explosion being the classic partitioned-sink mistake. */
 object Sinks {
 
-  private val Warehouse = Artifacts.Warehouse
-
-  /** Location keyed by the source's content fingerprint (see
-    * [[Bucketing.fingerprint]]) so sanitized dir names can't collide and
-    * an in-place change to events.parquet invalidates the copy. */
-  private def loc(dir: String): String =
-    s"$Warehouse/events_by_date_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Bucketing.fingerprint(dir, Seq("events"), 0)
-
-  /** One-time (per source dir) date-partitioned copy of events.
-    * Deterministic content — rebuilding from another JVM is a cache
-    * rebuild. A `_SUCCESS` marker gates reuse so a torn write rebuilds. */
+  /** One-time (per source dir) date-partitioned copy of events, at the
+    * [[Artifacts.path]] keyed by the events fingerprint and gated by the
+    * [[Artifacts]] contract. */
   def ensurePartitionedEvents(spark: SparkSession, dir: String): String = {
-    val path = loc(dir)
+    val path = Artifacts.path(dir, "events_by_date", 0, Seq("events"))
     if (!Artifacts.isBuilt(spark, path)) {
       Tables.events(spark, dir)
         .withColumn("event_date", to_date(col("ts")))

@@ -89,4 +89,21 @@ class ToolingSpec extends AnyFunSuite {
     assert(Bench.shouldDisplace("not json at all", cap(120.0, qs)),
       "unparseable prior must fail open")
   }
+
+  test("artifact paths: only sources/Artifacts.scala names the warehouse or sanitizes a dir") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), s"no ${root.toAbsolutePath}")
+    val walk = java.nio.file.Files.walk(root)
+    val sources = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(sources.exists(_.endsWith("sources/Artifacts.scala")))
+    val drift = for {
+      f <- sources if !f.endsWith("sources/Artifacts.scala")
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("Warehouse") || line.contains("[^A-Za-z0-9]")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    if (drift.nonEmpty) fail("build artifact paths with graft.sources.Artifacts.path/" +
+      s"persisted/bucketedTables, not by hand:\n${drift.mkString("\n")}")
+  }
 }
