@@ -63,11 +63,17 @@ object Probe {
     }
   }
 
-  /** `plan`'s text with every source line number masked: an RDD's name
-    * carries its call site (`at localCheckpoint at Multimodal.scala:830`),
-    * which any edit above that line moves. Written as `Multimodal.scala:_`,
-    * two plans differ only where the plans do. */
-  private[graft] def maskCallSites(plan: String): String = plan.replaceAll("""(\.scala):\d+""", "$1:_")
+  /** `plan`'s text with every source line number and JVM identity
+    * masked. An RDD's name carries its call site (`at localCheckpoint at
+    * Multimodal.scala:830`), which any edit above that line moves; an
+    * array literal or a lambda prints its class and identity hash
+    * (`[[D@188467fe`, `Multimodal$$$Lambda$5244/0x00007fe1f13edbe0@337a9406`),
+    * which every JVM numbers anew. Written as `Multimodal.scala:_`,
+    * `[[D@_` and `Lambda/_@_`, two plans differ only where the plans do. */
+  private[graft] def maskCallSites(plan: String): String = plan
+    .replaceAll("""(\.scala):\d+""", "$1:_")
+    .replaceAll("""(Lambda)(\$\d+)?/0x\p{XDigit}+""", "$1/_")
+    .replaceAll("""(?<=[\w$;\[])@\p{XDigit}+\b""", "@_")
 
   /** Writes `explain("formatted")` of each query, under `conf`, to
     * `<outDir>/<query><suffix>.txt` with [[maskCallSites]] applied, and

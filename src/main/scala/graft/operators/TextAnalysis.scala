@@ -1740,10 +1740,10 @@ object TextAnalysis {
   def shardChecksums(spark: SparkSession, dir: String): DataFrame =
     shardChecksumsOf(Tables.documents(spark, dir)).orderBy("shard")
 
-  /** [[shardChecksums]] over an arbitrary (doc_id, text) frame — the
-    * per-micro-batch partial the streaming export manifest
-    * ([[graft.streaming.StreamingAnalytics.shardManifestPerBatch]])
-    * folds into its running state. */
+  /** [[shardChecksums]] over an arbitrary (doc_id, text) frame — also
+    * the streaming aggregation of the export manifest
+    * ([[graft.streaming.StreamingAnalytics.shardManifestPerBatch]]),
+    * whose sum/min/max partials the state store keeps between batches. */
   private[graft] def shardChecksumsOf(docs: DataFrame): DataFrame =
     withShardKey(docs
       .select(col("doc_id"), size(expr(toksExpr)).cast("long").as("n_tokens"),
@@ -1754,19 +1754,6 @@ object TextAnalysis {
         sum("hv").as("content_checksum"),
         min("doc_id").as("min_doc_id"),
         max("doc_id").as("max_doc_id"))
-
-  /** Merge two shard manifests: every statistic q127 records is an
-    * order-free fold (sums, min, max), so incremental maintenance is
-    * one bounded groupBy over the union — the property that makes the
-    * manifest streamable at all. */
-  private[graft] def mergeShardManifests(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy("shard")
-      .agg(sum("n_docs").as("n_docs"),
-        sum("n_tokens").as("n_tokens"),
-        sum("content_checksum").as("content_checksum"),
-        min("min_doc_id").as("min_doc_id"),
-        max("max_doc_id").as("max_doc_id"))
 
   /** Per-source token budget for [[tokenBudgetQuota]]. */
   val QuotaTokens = 400L

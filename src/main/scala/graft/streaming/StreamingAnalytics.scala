@@ -23,22 +23,29 @@ import graft.sources.Tables
   *    single-window data results are identical, on out-of-order data
   *    Spark is strictly more permissive (documented divergence, §2.7).
   *
-  * All functions return unstarted DataFrames; callers pick the sink and
-  * output mode (update for running aggregates, append for watermarked
-  * windows) — the reference's labeled print sinks (:92,:96,:107) map to
-  * named console queries.
+  * The functions that return a DataFrame return it unstarted; callers
+  * pick the sink and output mode (update for running aggregates, append
+  * for watermarked windows) — the reference's labeled print sinks
+  * (:92,:96,:107) map to named console queries. The `*PerBatch`
+  * functions start a `foreachBatch` query and return it running, handing
+  * each micro-batch's result to their sink.
+  *
+  * Streaming state lives only in Spark's state store, under the query's
+  * checkpoint: this object writes no state file, caches no table and
+  * registers no listener of its own. The corpus indexes the `*PerBatch`
+  * probes read are the batch operators' artifacts.
   */
 object StreamingAnalytics {
 
   private def w31(ts: Column): Column = window(ts, "31 days")
 
-  /** A `foreachBatch` query over `input`: each micro-batch goes through
-    * `op` and its result to `sink`. A `checkpoint` location makes the
-    * source position durable, so a killed query restarts where it
-    * stopped. */
-  private def perBatch(input: DataFrame, checkpoint: Option[String])(op: DataFrame => DataFrame)
-      (sink: DataFrame => Unit): StreamingQuery = {
-    val writer = input.writeStream.outputMode("append")
+  /** A `foreachBatch` query over `input` in output `mode`: each
+    * micro-batch goes through `op` and its result to `sink`. A
+    * `checkpoint` location makes the source position and any operator
+    * state durable, so a killed query restarts where it stopped. */
+  private def perBatch(input: DataFrame, checkpoint: Option[String], mode: String = "append")
+      (op: DataFrame => DataFrame)(sink: DataFrame => Unit): StreamingQuery = {
+    val writer = input.writeStream.outputMode(mode)
     checkpoint.fold(writer)(writer.option("checkpointLocation", _))
       .foreachBatch { (batch: DataFrame, _: Long) => sink(op(batch)) }
       .start()
@@ -180,24 +187,15 @@ object StreamingAnalytics {
     * doc's rewrite depends only on itself + the frozen index, so any
     * micro-batching reproduces the batch q106 table exactly (spec'd in
     * StreamingSpec) — the ingest-side "don't re-admit boilerplate the
-    * corpus already has" scrub, run before tokenization. */
-  def spanDedupPerBatch(spark: SparkSession, dir: String, docs: DataFrame)
+    * corpus already has" scrub, run before tokenization. With a
+    * `checkpoint`, a killed scrubber restarts at the micro-batch where it
+    * stopped; a replayed row yields the IDENTICAL rewrite, so a sink
+    * keyed by doc_id converges to the batch q106 table (kill + restart
+    * leg spec'd in StreamingSpec). */
+  def spanDedupPerBatch(spark: SparkSession, dir: String, docs: DataFrame,
+      checkpoint: Option[String] = None)
       (sink: DataFrame => Unit): StreamingQuery =
-    perBatch(docs, None)(TextAnalysis.incrementalSpanDedupOf(spark, dir, _))(sink)
-
-  /** [[spanDedupPerBatch]] with a DURABLE source position: a killed
-    * scrubber restarts at the exact micro-batch where it stopped, rows
-    * arriving during the outage rewritten on restart. foreachBatch
-    * replays the last uncommitted batch at-least-once; the history index
-    * is frozen and the rewrite per-doc, so a replayed row yields the
-    * IDENTICAL rewrite — a sink keyed by doc_id converges to exactly the
-    * batch q106 table (the q90-scorer idempotence argument; kill +
-    * restart leg spec'd in StreamingSpec). */
-  def spanDedupPerBatchCheckpointed(spark: SparkSession, dir: String,
-      docs: DataFrame, checkpointLocation: String)
-      (sink: DataFrame => Unit): StreamingQuery =
-    perBatch(docs, Some(checkpointLocation))(
-      TextAnalysis.incrementalSpanDedupOf(spark, dir, _))(sink)
+    perBatch(docs, checkpoint)(TextAnalysis.incrementalSpanDedupOf(spark, dir, _))(sink)
 
   /** Streaming curation gate — the stream twin of q90
     * (`TextAnalysis.curationGate`): the quality model (token counts +
@@ -207,24 +205,15 @@ object StreamingAnalytics {
     * (retraining cadence is an offline decision, q87's drift signal the
     * trigger). Verdicts per batch go to `sink`; every signal is per-doc
     * and the model batch-independent, so any micro-batching reproduces
-    * the batch verdict table exactly (spec'd in StreamingSpec). */
-  def gateVerdictsPerBatch(spark: SparkSession, dir: String, docs: DataFrame)
+    * the batch verdict table exactly (spec'd in StreamingSpec). With a
+    * `checkpoint`, rows that arrive while the scorer is down are scored
+    * on restart rather than lost; re-scoring a replayed row yields the
+    * IDENTICAL verdict, so a sink keyed by doc_id converges to the batch
+    * q90 table (kill + restart leg spec'd in StreamingSpec). */
+  def gateVerdictsPerBatch(spark: SparkSession, dir: String, docs: DataFrame,
+      checkpoint: Option[String] = None)
       (sink: DataFrame => Unit): StreamingQuery =
-    perBatch(docs, None)(TextAnalysis.curationGateOf(spark, dir, _))(sink)
-
-  /** [[gateVerdictsPerBatch]] with a DURABLE source position:
-    * `checkpointLocation` makes a killed scorer restart at the exact
-    * micro-batch where it stopped, so rows that arrive while it is down
-    * are scored on restart rather than lost. foreachBatch replays the
-    * last uncommitted batch at-least-once; the model is frozen and every
-    * signal per-doc, so re-scoring a replayed row yields the IDENTICAL
-    * verdict — a sink keyed by doc_id converges to exactly the batch q90
-    * table (the q72 index-append idempotence argument, here for pure
-    * scoring). Kill + restart leg spec'd in StreamingSpec. */
-  def gateVerdictsPerBatchCheckpointed(spark: SparkSession, dir: String,
-      docs: DataFrame, checkpointLocation: String)
-      (sink: DataFrame => Unit): StreamingQuery =
-    perBatch(docs, Some(checkpointLocation))(TextAnalysis.curationGateOf(spark, dir, _))(sink)
+    perBatch(docs, checkpoint)(TextAnalysis.curationGateOf(spark, dir, _))(sink)
 
   /** Streaming drift monitor — the stream twin of q111's incremental
     * core (`TextAnalysis.tokenDriftOf`): each document micro-batch gets
@@ -236,24 +225,13 @@ object StreamingAnalytics {
     * IS the monitoring granularity, not an implementation detail; each
     * report is still a pure function of (batch, frozen model), so a
     * replayed batch yields the identical report (spec'd in
-    * StreamingSpec with the per-slice recompute). */
-  def driftReportPerBatch(spark: SparkSession, dir: String, docs: DataFrame)
+    * StreamingSpec with the per-slice recompute). With a `checkpoint`,
+    * increments arriving while the monitor is down still get their
+    * report on restart (kill + restart legs spec'd in StreamingSpec). */
+  def driftReportPerBatch(spark: SparkSession, dir: String, docs: DataFrame,
+      checkpoint: Option[String] = None)
       (sink: DataFrame => Unit): StreamingQuery =
-    perBatch(docs, None)(TextAnalysis.tokenDriftOf(spark, dir, _))(sink)
-
-  /** [[driftReportPerBatch]] with a DURABLE source position: a killed
-    * monitor restarts at the exact micro-batch where it stopped, so
-    * increments arriving during the outage still get their report.
-    * foreachBatch replays the last uncommitted batch at-least-once; the
-    * history histogram is frozen and each report a pure function of
-    * (batch, model), so a replayed batch yields the IDENTICAL report —
-    * a sink keyed by batch content converges (the q90-scorer
-    * idempotence argument, here for per-batch aggregates). Kill +
-    * restart leg spec'd in StreamingSpec. */
-  def driftReportPerBatchCheckpointed(spark: SparkSession, dir: String,
-      docs: DataFrame, checkpointLocation: String)
-      (sink: DataFrame => Unit): StreamingQuery =
-    perBatch(docs, Some(checkpointLocation))(TextAnalysis.tokenDriftOf(spark, dir, _))(sink)
+    perBatch(docs, checkpoint)(TextAnalysis.tokenDriftOf(spark, dir, _))(sink)
 
   /** Streaming IMAGE dedup — the multimodal column's ingest twin
     * (q137's per-batch core): each arriving (doc_id, payload) media
@@ -383,128 +361,25 @@ object StreamingAnalytics {
 
   /** Streaming EXPORT MANIFEST — the stream twin of q127's shard
     * integrity checksums: as documents are exported shard by shard, the
-    * per-shard rolling manifest (doc/token mass, order-free content
-    * checksum, id range) is maintained incrementally — every q127
-    * statistic is a sum/min/max fold, so merging a micro-batch costs one
-    * NumShards-bounded aggregate and any batching order converges to the
-    * batch manifest.
+    * per-shard manifest (doc/token mass, order-free content checksum, id
+    * range) is maintained incrementally. Every q127 statistic is a
+    * sum/min/max fold, so the manifest is a plain streaming aggregation
+    * (`TextAnalysis.shardChecksumsOf`) run in `complete` mode: its
+    * NumShards-bounded partials live in the checkpoint's state store, and
+    * each applied micro-batch hands `onUpdate` the full manifest of
+    * everything exported so far, which equals batch q127 over the same
+    * documents (kill + restart leg spec'd in StreamingSpec).
     *
-    * Exactly-once despite foreachBatch's at-least-once replay: a sum is
-    * NOT idempotent (unlike the per-doc twins above), so the state is
-    * versioned — each applied batch writes the merged manifest to
-    * `statePath/v=<batchId>` (parquet's _SUCCESS marks the version
-    * complete) and a replayed batchId at or below the newest complete
-    * version is SKIPPED. A crash after the state write but before the
-    * checkpoint commit therefore replays into a no-op, and a crash
-    * mid-write leaves no _SUCCESS, so the retry re-merges from the
-    * previous version. (Local-FS listing here; a cluster deployment
-    * swaps in the Hadoop FileSystem API, same protocol.) Kill + restart
-    * leg spec'd in StreamingSpec: converged state == batch q127.
-    *
-    * The skip rule is safe ONLY while statePath and checkpointLocation
-    * live and die together: a fresh checkpoint restarts batchIds at 0,
-    * and replaying those against surviving state would silently drop
-    * every batch as "already applied". The state directory therefore
-    * records the owning query's id (stable across restarts from the
-    * same checkpoint, regenerated with a fresh one) in `_QUERY_ID`,
-    * written BEFORE the first version so no crash window can leave
-    * unowned versions; an applied batch REFUSES to proceed on owner
-    * mismatch AND on versions-without-owner state (r13 + r14,
-    * advisories).
-    *
-    * Old versions are PRUNED after each successful write — the current
-    * version plus one fallback survive (the fallback covers a crash
-    * mid-write of the current), so a long-running export holds two
-    * manifest copies on disk instead of one per applied batch ever
-    * (r13, advisory). */
-  def shardManifestPerBatch(spark: SparkSession, docs: DataFrame,
-      statePath: String, checkpointLocation: String)
-      (onUpdate: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    def versionDirs(): Seq[(Long, java.io.File, Boolean)] = {
-      val d = new java.io.File(statePath)
-      if (!d.exists()) Seq.empty
-      else d.listFiles().toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith("v="))
-        .map(f => (f.getName.stripPrefix("v=").toLong, f,
-          new java.io.File(f, "_SUCCESS").exists()))
-    }
-    def completeVersions(): Seq[Long] = versionDirs().collect { case (v, _, true) => v }
-    // the query id lives in the checkpoint's metadata file from the
-    // moment the stream starts; read it per batch (cheap, tiny file)
-    def checkpointQueryId(): Option[String] = {
-      val f = new java.io.File(checkpointLocation, "metadata")
-      if (!f.exists()) None
-      else "\"id\"\\s*:\\s*\"([^\"]+)\"".r
-        .findFirstMatchIn(new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-        .map(_.group(1))
-    }
-    def deleteRecursively(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-      f.delete(): Unit
-    }
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new java.io.File(statePath, "_QUERY_ID")
-        val qid = checkpointQueryId()
-        if (marker.exists()) {
-          val owner = new String(
-            java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").trim
-          qid.filter(_ != owner).foreach { id =>
-            throw new IllegalStateException(
-              s"shardManifestPerBatch: state at $statePath belongs to query " +
-                s"$owner but this stream's checkpoint is query $id - a fresh " +
-                "checkpoint restarts batchIds at 0 and its replays would be " +
-                "silently dropped against this state. statePath and " +
-                "checkpointLocation must live and die together: wipe the " +
-                "state directory or restore the original checkpoint.")
-          }
-        } else if (versionDirs().nonEmpty) {
-          // marker-absent-but-versions-present is a REFUSAL, not a pass
-          // (r14, advisory): such state was written either by pre-marker
-          // code or by a crash inside the old write-version-then-marker
-          // window — exactly the unowned state the guard exists to refuse,
-          // and silently adopting it would let a fresh checkpoint's
-          // batchId-0 replays skip-drop against it.
-          throw new IllegalStateException(
-            s"shardManifestPerBatch: state at $statePath has manifest " +
-              "versions but no _QUERY_ID owner marker - it predates this " +
-              "stream (or a crash interrupted its adoption) and cannot be " +
-              "proven to share this checkpoint's batchId sequence. Wipe the " +
-              "state directory or restore its original checkpoint.")
-        }
-        val vs = completeVersions()
-        if (vs.isEmpty || batchId > vs.max) {
-          // claim ownership BEFORE the first version write (r14, advisory):
-          // marker-then-version means a crash between the two leaves an
-          // owned-but-empty state dir (harmless — next run re-merges from
-          // nothing), whereas the old version-then-marker order left
-          // unowned versions the refusal above would then reject forever.
-          if (!marker.exists())
-            qid.foreach { id =>
-              java.nio.file.Files.createDirectories(marker.toPath.getParent)
-              java.nio.file.Files.write(marker.toPath, id.getBytes("UTF-8")): Unit
-            }
-          val partial = graft.operators.TextAnalysis.shardChecksumsOf(batch)
-          val merged = vs.sorted.lastOption match {
-            case Some(v) => graft.operators.TextAnalysis.mergeShardManifests(
-              Tables.parquet(spark, s"$statePath/v=$v"), partial)
-            case None => partial
-          }
-          merged.coalesce(1).write.mode("overwrite").parquet(s"$statePath/v=$batchId")
-          // prune: keep the just-written version and the newest prior
-          // complete one (mid-write crash fallback); everything older —
-          // complete or abandoned — is dead state
-          val keep = Set(batchId) ++ vs.sorted.lastOption.toSet
-          versionDirs().filter { case (v, _, _) => !keep(v) }
-            .foreach { case (_, f, _) => deleteRecursively(f) }
-          onUpdate(Tables.parquet(spark, s"$statePath/v=$batchId"))
-        }
-      }
-      .start()
-  }
+    * Exactly-once comes from the state store, which commits each batch's
+    * state version with the batch: a batch replayed after a crash is
+    * applied to the state version before it, so no sum counts a document
+    * twice. A replayed batch may hand `onUpdate` the same full manifest
+    * again, so `onUpdate` must overwrite its copy, not append to it. A
+    * fresh checkpoint starts from empty state, and a source replayed into
+    * it rebuilds the manifest from the first document. */
+  def shardManifestPerBatch(docs: DataFrame, checkpoint: String)
+      (onUpdate: DataFrame => Unit): StreamingQuery =
+    perBatch(TextAnalysis.shardChecksumsOf(docs), Some(checkpoint), "complete")(identity)(onUpdate)
 
   /** Streaming ingest SAMPLER — the stream twin of q122's annealed
     * mixture: the (epoch, source) rate table is trained ONCE on the
@@ -514,57 +389,25 @@ object StreamingAnalytics {
     * is a pure function of (doc_id, epoch, rate), so ANY micro-batching
     * reproduces the batch sample exactly — ingest-time sampling without
     * a second pass over the corpus (spec'd in StreamingSpec: union of
-    * per-batch samples == the batch sampler's draw, per epoch). */
+    * per-batch samples == the batch sampler's draw, per epoch). The
+    * frozen table, one row per source, is collected before the query
+    * starts and held as a local relation, so the query caches nothing. */
   def annealedSamplePerBatch(spark: SparkSession, dir: String, epoch: Long,
       docs: DataFrame)
-      (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+      (sink: DataFrame => Unit): StreamingQuery = {
     // an out-of-range epoch would filter the rate table to zero rows and
     // silently sample NOTHING forever — fail loudly instead (the q112
     // count-guard convention)
     require(epoch >= 1L && epoch <= 3L,
       s"annealedSamplePerBatch: epoch must be 1..3 (the schedule's rungs), got $epoch")
-    val rates = graft.operators.TextAnalysis
-      .annealedRatesOf(Tables.documents(spark, dir))
+    val trained = TextAnalysis.annealedRatesOf(Tables.documents(spark, dir))
       .where(col("epoch") === epoch)
       .select(col("source"), col("epoch"), col("rate_permille"))
-      .persist() // frozen: train once, sample every batch against THIS table
-    rates.count(): Unit
-    val query = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(batch
-          .join(broadcast(rates), Seq("source"))
-          .where(graft.operators.TextAnalysis.annealKeep)
-          .select(col("doc_id"), col("source"), lit(epoch).as("epoch")))
-      }
-      .start()
-    // release the frozen table when THIS query terminates — a long-lived
-    // ingest service that restarts samplers must not leak one cached
-    // DataFrame per launch for the life of the session
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == query.id) {
-          rates.unpersist()
-          spark.streams.removeListener(this)
-        }
-    }
-    spark.streams.addListener(listener)
-    // the query can die between start() and addListener — its terminated
-    // event then fired before anyone was listening, and the cleanup above
-    // would never run; close that window by checking liveness AFTER
-    // registration (unpersist/removeListener are both idempotent, so a
-    // double-fire with a racing event is harmless)
-    if (!query.isActive) {
-      rates.unpersist()
-      spark.streams.removeListener(listener)
-    }
-    query
+    val rates = spark.createDataFrame(trained.collectAsList(), trained.schema)
+    perBatch(docs, None)(_
+      .join(broadcast(rates), Seq("source"))
+      .where(TextAnalysis.annealKeep)
+      .select(col("doc_id"), col("source"), lit(epoch).as("epoch")))(sink)
   }
 
   /** Stream-stream interval join: each "view" event joins the same

@@ -28,6 +28,16 @@ class ProbeSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  test("Probe.plan masks the JVM identities of array literals and lambdas") {
+    assert(Probe.maskCallSites("graft_ivf_assign(embedding#12, [[D@188467fe)") ===
+      "graft_ivf_assign(embedding#12, [[D@_)")
+    assert(Probe.maskCallSites(
+      "MapPartitions graft.operators.Multimodal$$$Lambda$5244/0x00007fe1f13edbe0@337a9406") ===
+      "MapPartitions graft.operators.Multimodal$$$Lambda/_@_")
+    // expression ids and a literal with no class before its @ stay as written
+    assert(Probe.maskCallSites("doc_id#42L, user @1f") === "doc_id#42L, user @1f")
+  }
+
   test("Probe.ab reports row-identical sides and restores the session's settings") {
     val before = spark.conf.getOption("spark.graft.bnljBarrier")
     val r = Probe.ab(spark, sf0001, "q33_knn_brute",

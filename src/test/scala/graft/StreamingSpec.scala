@@ -362,8 +362,8 @@ class StreamingSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-spanrestart-ckpt").toString
     val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, String)]
     val input = MemoryStream[(Long, String)](spark)
-    def start() = StreamingAnalytics.spanDedupPerBatchCheckpointed(spark, sf0001,
-      input.toDF().toDF("doc_id", "text"), ckpt) { rewrites =>
+    def start() = StreamingAnalytics.spanDedupPerBatch(spark, sf0001,
+      input.toDF().toDF("doc_id", "text"), Some(ckpt)) { rewrites =>
       collected ++= rewrites.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     }
@@ -393,77 +393,50 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     val base = java.nio.file.Files.createTempDirectory("graft-manifest").toString
-    val (ckpt, state) = (s"$base/ckpt", s"$base/state")
     val input = MemoryStream[(Long, String)](spark)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5))).sortBy(_._1).toSeq
     var updates = 0
-    def start() = StreamingAnalytics.shardManifestPerBatch(spark,
-      input.toDF().toDF("doc_id", "text"), state, ckpt) { _ => updates += 1 }
+    var manifest = Seq.empty[(Long, Long, Long, Long, Long, Long)]
+    def start(ckpt: String, in: MemoryStream[(Long, String)] = input) =
+      StreamingAnalytics.shardManifestPerBatch(in.toDF().toDF("doc_id", "text"), ckpt) { m =>
+        updates += 1; manifest = rows(m)
+      }
     // export a third of the corpus in two micro-batches, then KILL
     val third = batchDocs.length / 3
-    val q1 = start()
+    val q1 = start(s"$base/ckpt")
     input.addData(batchDocs.take(third).toSeq); q1.processAllAvailable()
     input.addData(batchDocs.slice(third, 2 * third).toSeq); q1.processAllAvailable()
     assert(q1.exception.isEmpty, s"q1 died: ${q1.exception}")
     q1.stop()
     // rows arriving during the outage; restart folds them in
     input.addData(batchDocs.drop(2 * third).toSeq)
-    val q2 = start()
+    val q2 = start(s"$base/ckpt")
     q2.processAllAvailable()
     assert(q2.exception.isEmpty, s"q2 died: ${q2.exception}")
     q2.stop()
-    // the newest complete version IS the manifest of everything exported:
-    // it must equal batch q127 over the same corpus, row for row
-    val versions = new java.io.File(state).listFiles()
-      .filter(f => f.getName.startsWith("v=") && new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getName.stripPrefix("v=").toLong).sorted
-    // pruning (r13): current + one mid-write-crash fallback survive; the
-    // three applied batches must NOT have left three manifest copies
-    assert(versions.length === 2,
-      s"pruned state keeps current + one fallback, found ${versions.toSeq}")
-    assert(updates === 3, "one state update per applied batch")
-    val got = spark.read.parquet(s"$state/v=${versions.last}")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5))).sortBy(_._1)
-    val expect = graft.operators.TextAnalysis.shardChecksums(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5))).sortBy(_._1)
-    assert(got.toSeq === expect.toSeq,
+    assert(updates === 3, "one manifest update per applied batch")
+    // the last manifest handed over covers everything exported: it must
+    // equal batch q127 over the same corpus, row for row
+    val expect = rows(graft.operators.TextAnalysis.shardChecksums(spark, sf0001))
+    assert(expect.nonEmpty)
+    assert(manifest === expect,
       "incrementally maintained manifest must converge to the batch q127 table")
-    // a replayed batchId must be a no-op: restart the drained query and
-    // confirm no state version appears beyond the last applied one
-    val q3 = start()
+    // a restart with no new data runs no batch
+    val q3 = start(s"$base/ckpt")
     q3.processAllAvailable(); q3.stop()
-    val versionsAfter = new java.io.File(state).listFiles()
-      .filter(_.getName.startsWith("v=")).map(_.getName.stripPrefix("v=").toLong).sorted
-    assert(versionsAfter.toSeq === versions.toSeq, "no new state from a drained restart")
-    // checkpoint-identity guard (r13): reusing the state directory with a
-    // FRESH checkpoint (batchIds restart at 0) must refuse loudly instead
-    // of silently dropping every replayed batch as already-applied
-    val input2 = MemoryStream[(Long, String)](spark)
-    val q4 = StreamingAnalytics.shardManifestPerBatch(spark,
-      input2.toDF().toDF("doc_id", "text"), state, s"$base/ckpt-fresh") { _ => updates += 1 }
-    input2.addData(batchDocs.take(2).toSeq)
-    val died = intercept[Exception] { q4.processAllAvailable() }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(died).exists(_.contains("live and die together")),
-      s"fresh-checkpoint reuse must name the contract: ${messages(died).take(3)}")
-    assert(updates === 3, "the refused batch must not have touched state")
-    // unowned-state refusal (r14, advisory): versions WITHOUT an owner
-    // marker (pre-marker state, or a crash in the old write-version-
-    // then-marker window) must refuse too — such state cannot be proven
-    // to share any checkpoint's batchId sequence, and silently adopting
-    // it is exactly the skip-drop the guard exists to prevent
-    java.nio.file.Files.delete(java.nio.file.Paths.get(state, "_QUERY_ID"))
-    val input3 = MemoryStream[(Long, String)](spark)
-    val q5 = StreamingAnalytics.shardManifestPerBatch(spark,
-      input3.toDF().toDF("doc_id", "text"), state, s"$base/ckpt-fresh-2") { _ => updates += 1 }
-    input3.addData(batchDocs.take(2).toSeq)
-    val died2 = intercept[Exception] { q5.processAllAvailable() }
-    assert(messages(died2).exists(_.contains("no _QUERY_ID owner marker")),
-      s"unowned state must refuse by name: ${messages(died2).take(3)}")
-    assert(updates === 3, "the unowned-state refusal must not have touched state")
+    assert(updates === 3, "a drained restart must not apply a batch")
+    // a FRESH checkpoint starts from empty state: the corpus replayed
+    // into it rebuilds the whole manifest, so nothing is silently dropped
+    val replay = MemoryStream[(Long, String)](spark)
+    val q4 = start(s"$base/ckpt-fresh", replay)
+    replay.addData(batchDocs.take(third).toSeq); q4.processAllAvailable()
+    replay.addData(batchDocs.drop(third).toSeq); q4.processAllAvailable()
+    assert(q4.exception.isEmpty, s"q4 died: ${q4.exception}")
+    q4.stop()
+    assert(updates === 5, "one manifest update per replayed batch")
+    assert(manifest === expect, "a fresh checkpoint must rebuild the full q127 manifest")
   }
 
   test("streaming PQ encode converges to the batch q152 table under any micro-batching") {
@@ -872,8 +845,8 @@ class StreamingSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-gaterestart-ckpt").toString
     val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Boolean)]
     val input = MemoryStream[(Long, String)](spark)
-    def start() = StreamingAnalytics.gateVerdictsPerBatchCheckpointed(spark, sf0001,
-      input.toDF().toDF("doc_id", "text"), ckpt) { verdicts =>
+    def start() = StreamingAnalytics.gateVerdictsPerBatch(spark, sf0001,
+      input.toDF().toDF("doc_id", "text"), Some(ckpt)) { verdicts =>
       collected ++= verdicts.collect().map(r =>
         (r.getLong(0), r.getAs[Long]("fail_mask"), r.getAs[Boolean]("keep")))
     }
@@ -965,8 +938,8 @@ class StreamingSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-driftrestart-ckpt").toString
     val reports = scala.collection.mutable.ArrayBuffer.empty[Set[(String, Long, Long, BigInt)]]
     val input = MemoryStream[(Long, String)](spark)
-    def start() = StreamingAnalytics.driftReportPerBatchCheckpointed(spark, sf0001,
-      input.toDF().toDF("doc_id", "text"), ckpt) { report =>
+    def start() = StreamingAnalytics.driftReportPerBatch(spark, sf0001,
+      input.toDF().toDF("doc_id", "text"), Some(ckpt)) { report =>
       reports += report.collect().map(r =>
         (r.getString(0), r.getLong(1), r.getLong(2), BigInt(r.getString(5)))).toSet
     }
@@ -1019,8 +992,8 @@ class StreamingSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-driftoutage-ckpt").toString
     val reports = scala.collection.mutable.ArrayBuffer.empty[Set[(String, Long, Long, BigInt)]]
     val input = MemoryStream[(Long, String)](spark)
-    def start() = StreamingAnalytics.driftReportPerBatchCheckpointed(spark, sf0001,
-      input.toDF().toDF("doc_id", "text"), ckpt) { report =>
+    def start() = StreamingAnalytics.driftReportPerBatch(spark, sf0001,
+      input.toDF().toDF("doc_id", "text"), Some(ckpt)) { report =>
       reports += report.collect().map(r =>
         (r.getString(0), r.getLong(1), r.getLong(2), BigInt(r.getString(5)))).toSet
     }
@@ -1071,6 +1044,8 @@ class StreamingSpec extends SparkSpec {
     assert(expect.nonEmpty, "epoch-3 rates must draw something from the fixture")
     val sampled = scala.collection.mutable.ArrayBuffer.empty[Long]
     val input = MemoryStream[(Long, String)](spark)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val listenersBefore = spark.streams.listListeners().toSeq
     val q = StreamingAnalytics.annealedSamplePerBatch(spark, sf0001, epoch,
       input.toDF().toDF("doc_id", "source")) { batch =>
       sampled ++= batch.collect().map(_.getLong(0))
@@ -1083,6 +1058,10 @@ class StreamingSpec extends SparkSpec {
     assert(sampled.toSet === expect,
       "union of per-batch draws must equal the batch sampler's draw")
     assert(sampled.length === sampled.distinct.length, "no doc sampled twice")
+    // a stopped sampler leaves no cached table and no listener behind
+    val cachedAfter = spark.sparkContext.getPersistentRDDs.keySet
+    assert((cachedAfter -- cachedBefore).isEmpty, s"cached RDDs left: ${cachedAfter -- cachedBefore}")
+    assert(spark.streams.listListeners().toSeq === listenersBefore)
   }
 
   test("streaming session windows split on the 30-minute gap") {

@@ -90,20 +90,39 @@ class ToolingSpec extends AnyFunSuite {
       "unparseable prior must fail open")
   }
 
-  test("artifact paths: only sources/Artifacts.scala names the warehouse or sanitizes a dir") {
+  /** Every `.scala` file under `dir`, as (file, its lines). */
+  private def scalaSources(dir: String): List[(java.nio.file.Path, Seq[String])] = {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main")
+    val root = java.nio.file.Paths.get(dir)
     assert(java.nio.file.Files.isDirectory(root), s"no ${root.toAbsolutePath}")
     val walk = java.nio.file.Files.walk(root)
-    val sources = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
-    assert(sources.exists(_.endsWith("sources/Artifacts.scala")))
+    files.map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toSeq)
+  }
+
+  test("artifact paths: only sources/Artifacts.scala names the warehouse or sanitizes a dir") {
+    val sources = scalaSources("src/main")
+    assert(sources.exists(_._1.endsWith("sources/Artifacts.scala")))
     val drift = for {
-      f <- sources if !f.endsWith("sources/Artifacts.scala")
-      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      (f, lines) <- sources if !f.endsWith("sources/Artifacts.scala")
+      (line, i) <- lines.zipWithIndex
       if line.contains("Warehouse") || line.contains("[^A-Za-z0-9]")
     } yield s"$f:${i + 1}: ${line.trim}"
     if (drift.nonEmpty) fail("build artifact paths with graft.sources.Artifacts.path/" +
       s"persisted/bucketedTables, not by hand:\n${drift.mkString("\n")}")
+  }
+
+  test("streaming state: src/main/scala/graft/streaming touches no file and adds no listener") {
+    val sources = scalaSources("src/main/scala/graft/streaming")
+    assert(sources.nonEmpty)
+    val banned = Seq("java.io.File", "java.nio.file", "streams.addListener")
+    val drift = for {
+      (f, lines) <- sources
+      (line, i) <- lines.zipWithIndex
+      if banned.exists(line.contains)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    if (drift.nonEmpty) fail("keep streaming state in the query's checkpoint (Spark's state " +
+      s"store), not in files or listeners of its own:\n${drift.mkString("\n")}")
   }
 }
