@@ -107,8 +107,7 @@ object Probe {
         println(s"[probe] dropping ${f.getName}")
         org.apache.commons.io.FileUtils.deleteDirectory(f)
       }
-    Similarity.clearTrainedMemory()
-    Similarity.clearPqMemory()
+    graft.sources.Tables.forget(Similarity.IvfModels, Similarity.PqModels)
     def time(label: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime(); f
       println(f"[probe] $label%-24s ${(System.nanoTime() - t0) / 1e9}%.3f s")

@@ -83,19 +83,11 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Serialized Bloom filters over the corpus index's content hashes,
-    * keyed by source dir — built once per corpus ("index build" step,
-    * like [[graft.operators.Similarity.trainIvfCentroids]]'s model) and
-    * frozen into probe plans. ~1.2 bytes/key at 3% fpp, so even a 10⁹-key
-    * index is a ~1.2 GB filter; past that a production deployment shards
-    * the filter by the index's hash-bucket (one small filter per bucket,
-    * loaded by the task probing that bucket) rather than growing one
-    * monolith. */
-  private val bloomCache =
-    new scala.collection.concurrent.TrieMap[String, Array[Byte]]
-
-  /** Test hook: forget built filters so a rebuild is exercised. */
-  private[graft] def clearBloomCache(): Unit = bloomCache.clear()
+  /** Bloom filters over the corpus index's content hashes, built once per
+    * documents file set and [[Tables.remember]]ed under this name. ~1.2
+    * bytes/key at 3% fpp (a 10⁹-key index is ~1.2 GB); past that a
+    * deployment shards the filter by the index's hash bucket. */
+  private[graft] final val BloomFilters = "bloom_filter"
 
   private def hashedDocs(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(
@@ -108,7 +100,7 @@ object Dedup {
     * corpus (count for sizing + the filter build) — the documented
     * eager "index build" step, NOT part of any per-batch probe plan. */
   def corpusBloomBytes(spark: SparkSession, dir: String): Array[Byte] =
-    bloomCache.getOrElseUpdate(dir, {
+    Tables.remember(spark, BloomFilters, Nil, Seq(Tables.path(dir, "documents"))) {
       val index = hashedDocs(spark, dir)
         .where(pmod(col("doc_id"), lit(10)) =!= 9)
         .select("content_md5").distinct()
@@ -122,7 +114,7 @@ object Dedup {
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
       bos.toByteArray
-    })
+    }
 
   /** q74 — BLOOM-PRUNED incremental exact dedup: q68's batch-vs-corpus
     * probe, with a Bloom filter over the index's hashes deciding—on the
@@ -426,14 +418,14 @@ object Dedup {
     * a batch never re-prices corpus document frequencies, which is what
     * keeps the probe batch-proportional. One [[graft.sources.Artifacts]]
     * path, gated on the postings table. */
-  private[graft] def containmentIndexPaths(dir: String): (String, String, String) = {
-    val base = Artifacts.path(dir, "containment_idx", MaxShingleDf)
+  private[graft] def containmentIndexPaths(spark: SparkSession, dir: String): (String, String, String) = {
+    val base = Artifacts.path(spark, dir, "containment_idx", MaxShingleDf)
     (base + "/postings", base + "/stop", base + "/sizes")
   }
 
   private[graft] def containmentIndex(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val (pPath, sPath, zPath) = containmentIndexPaths(dir)
+    val (pPath, sPath, zPath) = containmentIndexPaths(spark, dir)
     if (!Artifacts.isBuilt(spark, pPath)) {
       val corpus = shingleDigests(spark, dir)
         .where(pmod(col("doc_id"), lit(10)) =!= 9)
@@ -1135,11 +1127,8 @@ object Dedup {
     * is local to the join. Buckets keep their [[MaxBucket]] smallest
     * doc_ids (the q29c cap — bounds any probe row's fanout). A
     * [[graft.sources.Artifacts.bucketedTables]] table. */
-  private def indexBuckets(spark: SparkSession, dir: String): Int = {
-    val bytes = graft.sources.Bucketing.sourceFiles(dir, Seq("documents")).map(_.length).sum
-    math.max(spark.sparkContext.defaultParallelism,
-      math.ceil(bytes.toDouble / graft.sources.Bucketing.TargetBucketBytes).toInt)
-  }
+  private def indexBuckets(spark: SparkSession, dir: String): Int =
+    Tables.partsFor(spark, dir, Seq("documents"), graft.sources.Bucketing.TargetBucketBytes)
 
   def ensureLshBandIndex(spark: SparkSession, dir: String): String = {
     import org.apache.spark.sql.expressions.Window

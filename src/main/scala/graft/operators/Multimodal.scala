@@ -715,7 +715,7 @@ object Multimodal {
   /** A chain's frozen index over the corpus split: (`bands`, the dense
     * corpus table), built once per fingerprint. */
   private def prefixIndex(spark: SparkSession, c: SeqChain, dir: String): (DataFrame, DataFrame) = {
-    val base = Artifacts.path(dir, c.index, c.indexKey)
+    val base = Artifacts.path(spark, dir, c.index, c.indexKey)
     val (bPath, tPath) = (base + "/bands", base + "/" + c.unit.name)
     if (!Artifacts.isBuilt(spark, bPath)) {
       val corpus = prefixTable(spark, c, dir)

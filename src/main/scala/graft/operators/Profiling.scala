@@ -118,7 +118,7 @@ object Profiling {
     val docs = Tables.documents(spark, dir)
     val batchFilter = pmod(col("doc_id"), lit(10)) === 9
     ProfiledColumns.map { c =>
-      val hist = TextAnalysis.memoPersist(spark, s"profile_hist:$dir:$c") {
+      val hist = TextAnalysis.memoPersist(spark, dir, s"profile_hist:$c") {
         docs.where(!batchFilter).groupBy(col(c).as("v")).agg(count(lit(1)).as("cnt"))
       }.select(col("v").as("hv"), col("cnt").as("hcnt"))
       val batch = docs.where(batchFilter)

@@ -435,18 +435,10 @@ object Similarity {
     math.sqrt(acc.setScale(12, RoundingMode.HALF_UP).doubleValue)
   }
 
-  /** Frozen trained models, keyed by (dir, iters): train once per corpus,
-    * search many — the 100 TB shape. Two tiers: this session-memory map,
-    * and a parquet MODEL TABLE at an [[Artifacts.path]] (content-
-    * fingerprinted) so the model survives the
-    * session — a fresh JVM's first q60 loads k×64 doubles from parquet
-    * instead of paying the 3 sample-training passes again. */
-  private val trainedCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, Boolean), Array[Array[Double]]]
-
-  /** Test hook: forget the in-memory tier so a reload exercises the
-    * persisted model table. */
-  private[graft] def clearTrainedMemory(): Unit = trainedCache.clear()
+  /** Trained models are frozen in two tiers: [[Tables.remember]]ed under
+    * this name, and a parquet MODEL TABLE at an [[Artifacts.path]], so a
+    * fresh JVM's first q60 loads k×64 doubles instead of retraining. */
+  private[graft] final val IvfModels = "ivf_centroids"
 
   /** Batch residue for the q87 incremental convention (vec_id % 10 ==
     * [[BatchResidue]] is "the new batch"); encoded in the corpus-only
@@ -457,16 +449,13 @@ object Similarity {
   private def modelName(model: String, corpusOnly: Boolean): String =
     if (corpusOnly) s"${model}_corpus$BatchResidue" else model
 
-  private def modelPath(dir: String, iters: Int, corpusOnly: Boolean): String =
-    Artifacts.path(dir, modelName("ivf_model", corpusOnly), iters, Emb)
-
   /** Disk tier of the model cache: (cell, centroid) rows, one file. The
     * write is deterministic (the training itself is bit-deterministic),
     * so a rebuild from another JVM is a cache rebuild, not a change. */
   private def loadOrTrainPersisted(spark: SparkSession, dir: String, iters: Int,
       corpusOnly: Boolean = false)
       (train: => Array[Array[Double]]): Array[Array[Double]] = {
-    val path = modelPath(dir, iters, corpusOnly)
+    val path = Artifacts.path(spark, dir, modelName("ivf_model", corpusOnly), iters, Emb)
     if (Artifacts.isBuilt(spark, path)) {
       val cents = Array.ofDim[Array[Double]](NumCells)
       Tables.parquet(spark, path).collect().foreach { r =>
@@ -499,10 +488,10 @@ object Similarity {
     * decimal norm ([[decNorm]]), so the trained model is bit-deterministic
     * across partitionings, runs, AND engines — the q60 oracle re-derives
     * the same model in DuckDB SQL. Empty cells keep their previous
-    * centroid. The result is memoized in [[trainedCache]]. */
+    * centroid. The result is remembered under [[IvfModels]]. */
   def trainIvfCentroids(spark: SparkSession, dir: String, iters: Int = 3,
       corpusOnly: Boolean = false): Array[Array[Double]] =
-    trainedCache.getOrElseUpdate((dir, iters, corpusOnly),
+    Tables.remember(spark, IvfModels, Seq(iters, corpusOnly), Seq(Tables.path(dir, "embeddings")))(
       loadOrTrainPersisted(spark, dir, iters, corpusOnly) {
       val sample = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
@@ -578,7 +567,7 @@ object Similarity {
   /** [[annIvfTopK]] with k-means-trained centroids — the production IVF
     * (train once on a sample, freeze, search many). Same plan shape as
     * q47; only the 16 centroid values change, and after the first call
-    * the frozen model comes from [[trainedCache]] so the query itself is
+    * the frozen model comes from the memo ([[IvfModels]]) so the query is
     * assignment-only. Oracle-gated end-to-end: the DuckDB oracle
     * re-derives the identical trained model (the training math is
     * decimal-exact — see [[trainIvfCentroids]]) and replays the same
@@ -1383,11 +1372,7 @@ object Similarity {
     ColumnBridge.of(graft.functions.PqAssignCodes(
       ColumnBridge.expr(col("embedding")), cbs))
 
-  private val pqCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, Boolean), Array[Array[Array[Double]]]]
-
-  /** Test hook: forget trained PQ models so retrain/reload is exercised. */
-  private[graft] def clearPqMemory(): Unit = pqCache.clear()
+  private[graft] final val PqModels = "pq_codebooks"
 
   /** Train the [[PqSubs]] per-subspace codebooks: plain Lloyd k-means on
     * the deterministic [[SampleMult]] hash sample, one distributed pass
@@ -1397,13 +1382,14 @@ object Similarity {
     * rounded-decimal sum ÷ count, an IEEE double division both engines
     * share). Empty codes keep their previous codeword. Bit-deterministic
     * across partitionings, runs, AND engines — the q150 oracle re-derives
-    * the identical model with unrolled Lloyd SQL. Memoized per (dir,
-    * iters) and persisted as a (sub, code, centroid) parquet table, the
+    * the identical model with unrolled Lloyd SQL. Remembered under
+    * [[PqModels]], (iters, corpusOnly) and the embeddings file set, and
+    * persisted as a (sub, code, centroid) parquet table, the
     * [[trainIvfCentroids]] contract. */
   def trainPqCodebooks(spark: SparkSession, dir: String, iters: Int = PqIters,
       corpusOnly: Boolean = false): Array[Array[Array[Double]]] =
-    pqCache.getOrElseUpdate((dir, iters, corpusOnly), {
-      val path = Artifacts.path(dir, modelName("pq_model", corpusOnly), 1500 + iters, Emb)
+    Tables.remember(spark, PqModels, Seq(iters, corpusOnly), Seq(Tables.path(dir, "embeddings"))) {
+      val path = Artifacts.path(spark, dir, modelName("pq_model", corpusOnly), 1500 + iters, Emb)
       if (Artifacts.isBuilt(spark, path)) {
         val cbs = Array.ofDim[Array[Double]](PqSubs, PqCodes)
         Tables.parquet(spark, path).collect().foreach { r =>
@@ -1453,7 +1439,7 @@ object Similarity {
           .coalesce(1).write.mode("overwrite").parquet(path)
         cbs
       }
-    })
+    }
 
   /** The persisted PQ code table (vec_id, codes[PqSubs]) — encode-once
     * per corpus fingerprint; the 64×-compressed representation the ADC
@@ -1635,7 +1621,7 @@ object Similarity {
     * partitions). Build-once per corpus fingerprint at an
     * [[Artifacts.path]]. */
   private[graft] def ivfPqIndexTable(spark: SparkSession, dir: String): DataFrame = {
-    val path = Artifacts.path(dir, "ivfpq_index", 151, Emb)
+    val path = Artifacts.path(spark, dir, "ivfpq_index", 151, Emb)
     if (!Artifacts.isBuilt(spark, path)) {
       val cents = trainIvfCentroids(spark, dir)
       val cbs = trainPqCodebooks(spark, dir)
@@ -2022,7 +2008,7 @@ object Similarity {
       .select(col("cell"), col("n_total"), col("n_dead"),
         (col("n_dead").cast("double") / col("n_total").cast("double")).as("dead_frac"))
       .withColumn("compacted", col("dead_frac") > tau)
-    val path = ivfPqIndexV2Path(dir, tau)
+    val path = ivfPqIndexV2Path(spark, dir, tau)
     if (!Artifacts.isBuilt(spark, path)) {
       val flagged = report.where(col("compacted")).select("cell")
         .collect().map(_.getLong(0)) // bounded: ≤ NumCells rows
@@ -2036,11 +2022,11 @@ object Similarity {
     * byte-level v1-minus-tombstones equivalence check. */
   private[graft] def ivfPqIndexV2(spark: SparkSession, dir: String, tau: Double = 0.05): DataFrame = {
     ivfPqCompaction(spark, dir, tau).count() // ensure built
-    Tables.parquet(spark, ivfPqIndexV2Path(dir, tau))
+    Tables.parquet(spark, ivfPqIndexV2Path(spark, dir, tau))
   }
 
-  private def ivfPqIndexV2Path(dir: String, tau: Double): String =
-    Artifacts.path(dir, "ivfpq_index_v2", 159 + (tau * 100).toInt, Emb)
+  private def ivfPqIndexV2Path(spark: SparkSession, dir: String, tau: Double): String =
+    Artifacts.path(spark, dir, "ivfpq_index_v2", 159 + (tau * 100).toInt, Emb)
 
   /** DuckDB oracle for q159: cell populations from the trained-IVF
     * prefix, dead counts by the q155 tombstone rule, threshold literal. */

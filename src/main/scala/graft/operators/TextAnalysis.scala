@@ -24,29 +24,19 @@ object TextAnalysis {
     * twins (q114) so the tokenization definition lives in one place. */
   private[operators] val toksExpr = "split(text, '\\\\s+')"
 
-  /** Session-scoped memo of persisted MODEL tables (unigram counts, df
-    * model, Misra–Gries summaries). Train-then-apply operators persist
-    * their vocab-bounded model so the scalar-total branch doesn't re-scan
-    * the corpus; without memoization every invocation (bench reps,
-    * streaming foreachBatch) re-persisted a fresh copy — either a
-    * CacheManager "already cached" warning (equal plans) or an unbounded
-    * pile of cached DataFrames (closures make mapPartitions plans unequal
-    * per call). One persisted model per (session, key); entries die with
-    * the session (keys hold the session reference only as cache identity,
-    * mirroring [[Diagnostics]]'s installed-set). */
-  private val persistedModels =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]
+  /** A persisted MODEL table (unigram counts, df model, Misra–Gries
+    * summary, histogram) of `dir`'s documents, persisted once per
+    * (`model`, session, documents file set) under [[PersistedModels]]:
+    * the scalar-total branch and repeat calls (bench reps, streaming
+    * batches) reuse it instead of re-scanning the corpus or stacking
+    * fresh cached copies, and a changed documents table builds a new one
+    * and unpersists the old ([[Tables.remember]]). */
+  private[graft] def memoPersist(spark: SparkSession, dir: String, model: String)
+      (build: => DataFrame): DataFrame =
+    Tables.remember(spark, PersistedModels, Seq(model), Seq(Tables.path(dir, "documents")),
+      inSession = true)(build.persist())
 
-  private[operators] def memoPersist(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    persistedModels.getOrElseUpdate((spark, key), build.persist())
-
-  /** Test hook: unpersist and forget every memoized model (e.g. to prove
-    * re-derivation works, or to bound test-session storage). */
-  private[graft] def clearModelCache(): Unit = {
-    persistedModels.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    persistedModels.clear()
-    unigramModels.clear()
-  }
+  private[graft] final val PersistedModels = "persisted_model"
 
   /** Per-document quality metrics: token count, mean token length,
     * stopword ratio, vocabulary diversity, composite score. */
@@ -1050,7 +1040,7 @@ object TextAnalysis {
     * `SUM() OVER (ORDER BY doc_id)` and must hash-match exactly. */
   def sequencePacking(spark: SparkSession, dir: String): DataFrame = {
     val estDocs = math.max(1L,
-      graft.sources.Bucketing.sourceFiles(dir, Seq("documents")).map(_.length).sum / 16)
+      Tables.bytes(spark, dir, Seq("documents")) / 16)
     sequencePackingWith(spark, dir, PackBucket, estDocs)
   }
 
@@ -1103,7 +1093,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val width = PackBucket
     val estDocs = math.max(1L,
-      graft.sources.Bucketing.sourceFiles(dir, Seq("documents")).map(_.length).sum / 16)
+      Tables.bytes(spark, dir, Seq("documents")) / 16)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), size(expr(toksExpr)).cast("long").as("tok"),
         floor(col("doc_id") / width).as("bkt"))
@@ -1260,12 +1250,10 @@ object TextAnalysis {
     // ONE pass emits the MG candidates AND the partition's token total
     // (is_total = true rows), so the exact phase is the only other corpus
     // scan — two passes total, the theoretical minimum for exact heavy
-    // hitters. The summary is ≤ (HhK+1) × partitions rows; persisted once
-    // per (session, corpus) so its two consumers don't re-run the scan
-    // and repeat calls don't stack fresh cache entries (each call's
-    // mapPartitions closure is a distinct plan — unmemoized, every bench
-    // rep added one more cached copy).
-    val summary = memoPersist(spark, s"mg_summary:$dir") { toks.as[String].mapPartitions { it =>
+    // hitters. The summary is ≤ (HhK+1) × partitions rows, persisted once
+    // per (session, documents file set) for its two consumers and every
+    // repeat call (each call's mapPartitions closure is a distinct plan).
+    val summary = memoPersist(spark, dir, "mg_summary") { toks.as[String].mapPartitions { it =>
       // Misra–Gries with HhK counters: increment if present or space
       // free, else decrement all (deleting zeros). Survivors ⊇ items
       // with partition frequency > n_p/(HhK+1).
@@ -1818,10 +1806,9 @@ object TextAnalysis {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(expr(toksExpr)).as("t"))
     val isTrain = pmod(col("doc_id") * lit(2654435761L), lit(100)) >= 20
-    // vocab-bounded; persisted ONCE per (session, corpus) so the
-    // scalar-total branch doesn't re-scan the corpus and repeat callers
-    // (q85 reps, q94's sweep) reuse the same cached model
-    val model = memoPersist(spark, s"lm_unigram:$dir") {
+    // vocab-bounded, persisted once per (session, documents file set) for
+    // the scalar-total branch and repeat callers (q85 reps, q94's sweep)
+    val model = memoPersist(spark, dir, "lm_unigram") {
       toks.where(isTrain).groupBy("t").agg(count(lit(1)).as("cnt"))
     }
     val total = model.agg(sum(col("cnt")).as("n_train"))
@@ -1885,11 +1872,10 @@ object TextAnalysis {
     val toks = docs.select(col("doc_id"), explode(expr(toksExpr)).as("t"))
     val isTrain = pmod(col("doc_id") * lit(2654435761L), lit(100)) >= 20
     // one vocab-bounded model with BOTH signals (occurrence count for
-    // surprisal, document frequency for OOV); persisted ONCE per
-    // (session, corpus) — the frozen-model contract the streaming twin
-    // depends on: every micro-batch scores against THIS cached table
-    // instead of retraining and re-persisting per batch
-    val model = memoPersist(spark, s"gate_model:$dir") {
+    // surprisal, document frequency for OOV), persisted once per (session,
+    // documents file set): every micro-batch of the streaming twin scores
+    // against this frozen model instead of retraining it
+    val model = memoPersist(spark, dir, "gate_model") {
       corpusToks.where(isTrain).groupBy("t")
         .agg(count(lit(1)).as("cnt"), countDistinct(col("doc_id")).as("df"))
     }
@@ -2108,34 +2094,16 @@ object TextAnalysis {
     out.select(cols: _*).orderBy("doc_id")
   }
 
-  /** The merges [[bpeLearn]] learns from `dir`'s documents, remembered
-    * per documents file set: q103, q104 and q117 train once, and a warm
-    * construction runs no Spark job. The key is the one
-    * [[graft.sources.Tables.parquet]] remembers the file set's schema
-    * under (path, file listing with lengths and mtimes, parquet confs),
-    * plus `iters`, so a rewritten or changed documents table retrains.
+  /** The merges [[bpeLearn]] learns from `dir`'s documents,
+    * [[Tables.remember]]ed under [[BpeMerges]], `iters` and the documents
+    * file set: q103, q104 and q117 train once, and a warm construction
+    * runs no Spark job; a rewritten or changed documents table retrains.
     * A path that cannot be listed is learned afresh on every call. */
-  private[graft] def bpeMerges(spark: SparkSession, dir: String, iters: Int): Seq[(String, Long)] = {
-    def learn() = bpeLearn(Tables.documents(spark, dir), iters)
-    Tables.fileSetKey(spark, Tables.path(dir, "documents")) match {
-      case None => learn()
-      case Some(k) => Option(bpeMemo.get((k, iters))).getOrElse {
-        val learned = learn()
-        if (bpeMemo.size >= MaxBpeModels) bpeMemo.clear()
-        bpeMemo.put((k, iters), learned)
-        learned
-      }
-    }
-  }
+  private[graft] def bpeMerges(spark: SparkSession, dir: String, iters: Int): Seq[(String, Long)] =
+    Tables.remember(spark, BpeMerges, Seq(iters), Seq(Tables.path(dir, "documents")))(
+      bpeLearn(Tables.documents(spark, dir), iters))
 
-  /** Entries [[bpeMerges]] keeps before it starts over. */
-  private val MaxBpeModels = 64
-  private val bpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Tables.FileSetKey, Int), Seq[(String, Long)]]()
-
-  /** Test hook: forget every learned merge table, so the next
-    * construction trains again. */
-  private[graft] def clearBpeMemory(): Unit = bpeMemo.clear()
+  private[graft] final val BpeMerges = "bpe_merges"
 
   /** The training loop of [[bpeTrain]], [[bpeEncode]] and [[bpeFertility]]:
     * learns up to `iters` merges over the `text` column of `docs`.
@@ -2514,22 +2482,19 @@ object TextAnalysis {
     * fetches are vocabulary-bounded driver collects (the q103 take(1)
     * analog); per-iteration work is one segmentation aggregate — job
     * count is linear in `emIters` (spec-pinned). */
-  /** Session-scoped memo of trained unigram models: q130/q131/q136 all
-    * start from the same training run, and the model is a bounded
-    * driver-side value (≤ charset + UniSeedK pieces), so one (session,
-    * dir, iters) training pays for all three — the [[persistedModels]]
-    * contract for a driver-side model. The memoized `used` DataFrame
-    * rides the memoized histogram, so it stays replayable. */
-  private val unigramModels =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, Int), UniModel]
-
+  /** The trained unigram model q130/q131/q136 all start from, one
+    * training per (session, iters, documents file set) under
+    * [[UnigramModels]]; per session because its `used` DataFrame rides
+    * the session's persisted histogram ([[memoPersist]]). */
   private[graft] def unigramLearn(spark: SparkSession, dir: String, emIters: Int): UniModel =
-    unigramModels.getOrElseUpdate((spark, dir, emIters),
-      unigramLearnUncached(spark, dir, emIters))
+    Tables.remember(spark, UnigramModels, Seq(emIters), Seq(Tables.path(dir, "documents")),
+      inSession = true)(unigramLearnUncached(spark, dir, emIters))
+
+  private[graft] final val UnigramModels = "unigram_model"
 
   private def unigramLearnUncached(spark: SparkSession, dir: String, emIters: Int): UniModel = {
     require(emIters >= 1, "unigramLearn: at least one EM iteration")
-    val hist = memoPersist(spark, s"uni_hist_$dir")(uniTokenHist(spark, dir))
+    val hist = memoPersist(spark, dir, "uni_hist")(uniTokenHist(spark, dir))
     val seed = uniSeedStats(hist)
     val singles = seed.where(length(col("p")) === 1)
       .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
@@ -2572,7 +2537,7 @@ object TextAnalysis {
   def unigramTrain(spark: SparkSession, dir: String, emIters: Int = 1): DataFrame = {
     val m = unigramLearn(spark, dir, emIters)
     val bt0 = uniBits(m.vocab0.map(_._2).sum)
-    val hist = memoPersist(spark, s"uni_hist_$dir")(uniTokenHist(spark, dir))
+    val hist = memoPersist(spark, dir, "uni_hist")(uniTokenHist(spark, dir))
     uniSeedStats(hist)
       .where(col("p").isin(m.vocab0.map(_._1): _*))
       .join(m.used.select(col("p"), col("seg_cnt")), Seq("p"), "left")
@@ -2594,7 +2559,7 @@ object TextAnalysis {
     * persisted histogram. */
   def unigramEncode(spark: SparkSession, dir: String, emIters: Int = 1): DataFrame = {
     val m = unigramLearn(spark, dir, emIters)
-    val hist = memoPersist(spark, s"uni_hist_$dir")(uniTokenHist(spark, dir))
+    val hist = memoPersist(spark, dir, "uni_hist")(uniTokenHist(spark, dir))
     val enc = uniSegmentCounts(hist, m.costsF)
     val costMap = map(m.costsF.flatMap { case (p, c) => Seq(lit(p), lit(c)) }: _*)
     uniSeedStats(hist)
@@ -2700,7 +2665,7 @@ object TextAnalysis {
     * with map-side partials; windows nowhere. */
   def unigramFertility(spark: SparkSession, dir: String, emIters: Int = 1): DataFrame = {
     val m = unigramLearn(spark, dir, emIters)
-    val hist = memoPersist(spark, s"uni_hist_$dir")(uniTokenHist(spark, dir))
+    val hist = memoPersist(spark, dir, "uni_hist")(uniTokenHist(spark, dir))
     val pieces = uniPieceCounts(hist, m.costsF)
     val allt = Tables.documents(spark, dir)
       .select(col("source"), explode(expr(toksExpr)).as("w"))
@@ -3090,7 +3055,7 @@ object TextAnalysis {
     * spec'd in ProfilingSpec — while an arriving crawl increment gets
     * the same monitor without rescanning history. */
   def tokenDriftOf(spark: SparkSession, dir: String, batch: DataFrame): DataFrame = {
-    val hist = memoPersist(spark, s"drift_hist:$dir") {
+    val hist = memoPersist(spark, dir, "drift_hist") {
       Tables.documents(spark, dir)
         .where(pmod(col("doc_id"), lit(10)) =!= 9)
         .select(explode(expr(toksExpr)).as("tok"))

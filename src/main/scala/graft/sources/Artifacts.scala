@@ -17,10 +17,12 @@ import org.apache.spark.sql.functions.col
   *    whose databases are located at [[Warehouse]];
   *  - [[entries]] lists what is built for a source dir.
   *
-  * The probe resolves `path/_SUCCESS` through the Hadoop FileSystem API
-  * with the session's Hadoop configuration, so it is correct on whatever
-  * filesystem the warehouse actually lives on — `file://` locally,
+  * The probe resolves `path/_SUCCESS`, and [[fingerprint]] lists the
+  * inputs ([[Tables.fileSetKey]]), through the Hadoop FileSystem API with
+  * the session's Hadoop configuration, so both hold on whatever
+  * filesystem the warehouse and inputs live on — `file://` locally,
   * `hdfs://` or an object store (`s3a://`, ...) in a cluster deployment.
+  * [[entries]], a listing for tools and specs, reads local disk only.
   *
   * Contract (single-writer check-then-write, documented once here for
   * all call sites):
@@ -32,10 +34,12 @@ import org.apache.spark.sql.functions.col
   *    write (crash mid-build) leaves no marker and the next caller
   *    rebuilds;
   *  - staleness is handled by the PATH, not the marker:
-  *    [[Bucketing.fingerprint]] keys the path by source-file identity
-  *    (length+mtime) and the operator's shape constants, so changed
+  *    [[fingerprint]] keys the path by source-file identity (name,
+  *    length, mtime) and the operator's shape constants, so changed
   *    inputs land at a new path and the orphaned old artifact is never
-  *    read again. Changed CODE with unchanged constants would serve the
+  *    read again. The one input change it misses is an in-place rewrite
+  *    that keeps a file's name, length and mtime to the millisecond.
+  *    Changed CODE with unchanged constants would serve the
   *    old artifact — the DuckDB oracle re-derives every query from
   *    scratch each verify run, so a stale artifact fails the hash gate
   *    loudly instead of passing silently.
@@ -62,14 +66,30 @@ object Artifacts {
   /** Path of the artifact `name` derived from `tables` of `dir`:
     * `<Warehouse>/<name>_<dir key>_<fingerprint>`, the fingerprint salted
     * with `key`. */
-  def path(dir: String, name: String, key: Int, tables: Seq[String] = Seq("documents")): String =
-    Warehouse + "/" + entry(dir, name, Bucketing.fingerprint(dir, tables, key))
+  def path(spark: SparkSession, dir: String, name: String, key: Int,
+      tables: Seq[String] = Seq("documents")): String =
+    Warehouse + "/" + entry(dir, name, fingerprint(spark, dir, tables, key))
+
+  /** Fingerprint of `tables` of `dir`, salted with `key`: 6 bytes of the
+    * MD5 of `name:length:mtime` of each table's files (a missing table is
+    * `<table>.parquet:0:0`) joined by `|`, then `|b=<key>`. It keeps dirs
+    * that sanitize alike ('sf0.1' vs 'sf0_1') apart, and never reads the
+    * session's confs, so a path does not depend on session history. */
+  private[graft] def fingerprint(spark: SparkSession, dir: String, tables: Seq[String],
+      key: Int): String = {
+    val sig = tables.flatMap(t => Tables.fileSetKey(spark, Tables.path(dir, t))
+        .fold(Seq((s"$t.parquet", 0L, 0L)))(_.files))
+      .map { case (name, len, mtime) => s"$name:$len:$mtime" }
+      .mkString("|") + s"|b=$key"
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(sig.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+  }
 
   /** The build-once step for one parquet artifact at [[path]]: writes
     * `build` unless the artifact is built, then reads it. */
   def persisted(spark: SparkSession, dir: String, name: String, key: Int,
       tables: Seq[String] = Seq("documents"))(build: => DataFrame): DataFrame = {
-    val p = path(dir, name, key, tables)
+    val p = path(spark, dir, name, key, tables)
     if (!isBuilt(spark, p)) build.write.mode("overwrite").parquet(p)
     Tables.parquet(spark, p)
   }
@@ -86,7 +106,7 @@ object Artifacts {
   def bucketedTables(spark: SparkSession, db: String, dir: String, sources: Seq[String],
       numBuckets: Int)(tables: (String, Seq[String], () => DataFrame)*): Seq[String] = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$Warehouse'")
-    val fp = Bucketing.fingerprint(dir, sources, numBuckets)
+    val fp = fingerprint(spark, dir, sources, numBuckets)
     tables.map { case (name, keys, build) =>
       val e = entry(dir, name, fp)
       val table = s"$db.$e"

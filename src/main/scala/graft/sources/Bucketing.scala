@@ -34,33 +34,10 @@ object Bucketing {
     * count so small inputs still use every core. At 100 TB of lineitem
     * this yields ~400k buckets — fine for parquet (one file per bucket)
     * and exactly the task granularity a 1000-executor scan wants. */
-  def numBucketsFor(spark: SparkSession, dir: String): Int = {
-    val bytes = sourceFiles(dir, Seq("lineitem")).map(_.length).sum
-    val cores = spark.sparkContext.defaultParallelism
-    math.max(cores, math.ceil(bytes.toDouble / TargetBucketBytes).toInt)
-  }
+  def numBucketsFor(spark: SparkSession, dir: String): Int =
+    Tables.partsFor(spark, dir, Seq("lineitem"), TargetBucketBytes)
 
   private val Db = "graft_bucketed"
-
-  private[graft] def sourceFiles(dir: String, tables: Seq[String]): Seq[java.io.File] =
-    tables.flatMap { t =>
-      val f = new java.io.File(s"$dir/$t.parquet")
-      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName) else Seq(f)
-    }
-
-  /** Content fingerprint of the source tables (name+size+mtime of every
-    * file, plus the bucket count): baked into the warehouse table name so
-    * (a) distinct source dirs can never collide after sanitization
-    * ('sf0.1' vs 'sf0_1') and (b) in-place source changes or a different
-    * bucket sizing invalidate the cached copies instead of silently
-    * serving stale rows. */
-  private[graft] def fingerprint(dir: String, tables: Seq[String], numBuckets: Int): String = {
-    val sig = sourceFiles(dir, tables)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString("|") + s"|b=$numBuckets"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-  }
 
   /** One-time (per session + source dir) bucketed copies of orders and
     * lineitem, bucketed and sorted by their order key: the

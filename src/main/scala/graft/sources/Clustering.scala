@@ -42,11 +42,8 @@ object Clustering {
   /** Output files for a copy of `tables` under `dir`: data bytes over
     * [[TargetFileBytes]], floored at the core count so small local inputs
     * still exercise a multi-file layout (and every core, at write time). */
-  def numFilesFor(spark: SparkSession, dir: String, tables: Seq[String]): Int = {
-    val bytes = Bucketing.sourceFiles(dir, tables).map(_.length).sum
-    val cores = spark.sparkContext.defaultParallelism
-    math.max(cores, math.ceil(bytes.toDouble / TargetFileBytes).toInt)
-  }
+  def numFilesFor(spark: SparkSession, dir: String, tables: Seq[String]): Int =
+    Tables.partsFor(spark, dir, tables, TargetFileBytes)
 
   /** Layout-code version — bump when the copy's schema or sort changes
     * (the content fingerprint only tracks the SOURCE data). */
@@ -56,8 +53,8 @@ object Clustering {
     * session with a different core floor rebuilds instead of reusing a
     * copy with the wrong granularity; [[LayoutVersion]] invalidates
     * copies written by older layout code. */
-  private def loc(kind: String, dir: String, n: Int): String =
-    Artifacts.path(dir, s"lineitem_${kind}_v$LayoutVersion", n, Seq("lineitem"))
+  private def loc(spark: SparkSession, kind: String, dir: String, n: Int): String =
+    Artifacts.path(spark, dir, s"lineitem_${kind}_v$LayoutVersion", n, Seq("lineitem"))
 
   /** The Morton sort key as a Column (layout writes + specs). */
   def zorderCol(a: Column, b: Column): Column =
@@ -122,7 +119,7 @@ object Clustering {
     * torn write rebuilds. */
   def ensureRangeClustered(spark: SparkSession, dir: String): String = {
     val n = numFilesFor(spark, dir, Seq("lineitem"))
-    val path = loc("by_shipdate", dir, n)
+    val path = loc(spark, "by_shipdate", dir, n)
     if (!Artifacts.isBuilt(spark, path))
       writeClustered(
         Tables.lineitem(spark, dir)
@@ -139,7 +136,7 @@ object Clustering {
     * plain schema. */
   def ensureZOrdered(spark: SparkSession, dir: String): String = {
     val n = numFilesFor(spark, dir, Seq("lineitem"))
-    val path = loc("zorder", dir, n)
+    val path = loc(spark, "zorder", dir, n)
     if (!Artifacts.isBuilt(spark, path)) {
       val zv = zorderScaledCol(Tables.lineitem(spark, dir), "l_partkey", "l_suppkey")
       Tables.lineitem(spark, dir)

@@ -20,7 +20,7 @@ object Sinks {
     * [[Artifacts.path]] keyed by the events fingerprint and gated by the
     * [[Artifacts]] contract. */
   def ensurePartitionedEvents(spark: SparkSession, dir: String): String = {
-    val path = Artifacts.path(dir, "events_by_date", 0, Seq("events"))
+    val path = Artifacts.path(spark, dir, "events_by_date", 0, Seq("events"))
     if (!Artifacts.isBuilt(spark, path)) {
       Tables.events(spark, dir)
         .withColumn("event_date", to_date(col("ts")))

@@ -59,72 +59,133 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
   /** The one parquet read path: a read of the parquet file set at `path`
-    * that runs the schema-inference job only on the first call. Inference
-    * reads a footer in a Spark job (about 40 ms locally) while the
-    * DataFrame is still being built; a read with a known schema lists the
-    * files and starts no job. Only the inferred schema is remembered, never a
-    * DataFrame: each call gets a fresh file listing and fresh column ids,
-    * so two reads of one path can still be self-joined.
-    *
-    * The memo key holds everything inference reads:
-    *  - the qualified path;
-    *  - the recursive file listing as (relative name, length, mtime),
-    *    taken through the Hadoop FileSystem (no job; about 0.01 ms for one
-    *    local file, 1.6 ms for a 30-partition directory);
-    *  - the session's explicitly set `spark.sql.parquet.*` and
-    *    `spark.sql.legacy.parquet.*` confs (binaryAsString,
-    *    int96AsTimestamp, inferTimestampNTZ.enabled, nanosAsLong,
-    *    mergeSchema, ...), `spark.sql.caseSensitive` and
-    *    `spark.sql.files.ignoreCorruptFiles`.
-    * A footer lives inside its file, so a changed schema needs a changed
-    * file. Spark's writers name every part file after the write job, so a
-    * rewrite at the same path lists new names; any other writer changes a
-    * length or an mtime. The one case served stale is an in-place rewrite
-    * of a file that keeps its name, its length and its mtime to the
-    * millisecond. A path that cannot be listed is read as before, so a
-    * missing path fails with Spark's own error. */
+    * that runs the schema-inference job (a footer read, about 40 ms
+    * locally) only on the first call. Only the schema is remembered, never
+    * a DataFrame, so each call gets fresh column ids and two reads of one
+    * path can be self-joined. It is [[remember]]ed under the file set and
+    * what else inference reads: the session's explicitly set
+    * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` confs,
+    * `spark.sql.caseSensitive` and `spark.sql.files.ignoreCorruptFiles`.
+    * A path that cannot be listed is read as before, so a missing path
+    * fails with Spark's own error. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    val key = fileSetKey(spark, path)
-    key.flatMap(k => Option(schemas.get(k))) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        key.foreach { k =>
-          if (schemas.size >= MaxSchemas) schemas.clear()
-          schemas.put(k, df.schema)
-        }
-        df
-    }
-  }
-
-  /** What a read of a parquet file set depends on: the key of [[parquet]]'s
-    * schema memo, and of anything else derived once per file set (q103's
-    * learned BPE merges). */
-  private[graft] final case class FileSetKey(path: String, files: Seq[(String, Long, Long)],
-      conf: Seq[(String, String)])
-
-  /** `path`'s [[FileSetKey]], or None for a path that cannot be listed. */
-  private[graft] def fileSetKey(spark: SparkSession, path: String): Option[FileSetKey] = try {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val prefix = root.toUri.getPath
-    // getFileStatus/listStatus, not listFiles: a LocatedFileStatus reads
-    // each file's permissions, which the local FileSystem gets by forking
-    // a process per file
-    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[(String, Long, Long)] =
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
-      else Seq((st.getPath.toUri.getPath.stripPrefix(prefix), st.getLen, st.getModificationTime))
     val conf = spark.conf.getAll.toSeq.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
         k == "spark.sql.caseSensitive" || k == "spark.sql.files.ignoreCorruptFiles"
     }.sorted
-    Some(FileSetKey(root.toString, walk(fs.getFileStatus(root)).sorted, conf))
+    var inferred: DataFrame = null
+    val schema = remember(spark, "schema", conf, Seq(path)) {
+      inferred = spark.read.parquet(path)
+      inferred.schema
+    }
+    if (inferred != null) inferred else spark.read.schema(schema).parquet(path)
+  }
+
+  /** The identity of a file set: its qualified path and its files as
+    * (name, length, mtime in ms), sorted — a single file under its own
+    * name, a directory's files, recursively, under their paths relative
+    * to it. */
+  private[graft] final case class FileSetKey(path: String, files: Seq[(String, Long, Long)])
+
+  /** `path`'s [[FileSetKey]], listed through the Hadoop FileSystem that
+    * owns `path` without a Spark job (about 0.01 ms for one local file,
+    * 1.6 ms for a 30-partition directory); None for a path that cannot
+    * be listed. */
+  private[graft] def fileSetKey(spark: SparkSession, path: String): Option[FileSetKey] = try {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val root = fs.makeQualified(p)
+    val prefix = root.toUri.getPath.stripSuffix("/") + "/"
+    // getFileStatus/listStatus, not the located-status listing: a
+    // LocatedFileStatus reads each file's permissions, which the local
+    // FileSystem gets by forking a process per file
+    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else Seq((st.getPath.toUri.getPath.stripPrefix(prefix), st.getLen, st.getModificationTime))
+    val top = fs.getFileStatus(root)
+    Some(FileSetKey(root.toString, if (top.isDirectory) walk(top).sorted
+      else Seq((root.getName, top.getLen, top.getModificationTime))))
   } catch { case _: java.io.FileNotFoundException => None }
 
-  /** Entries kept before the memo starts over; a streaming job that reads
-    * one new path per batch would otherwise grow it without end. */
-  private val MaxSchemas = 1024
-  private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[FileSetKey, org.apache.spark.sql.types.StructType]()
+  /** How many parts a layout copy of `tables` of `dir` is cut into: their
+    * bytes (a missing table counts 0) over `targetBytes`, floored at the
+    * core count so small inputs still use every core. */
+  def partsFor(spark: SparkSession, dir: String, tables: Seq[String], targetBytes: Long): Int =
+    math.max(spark.sparkContext.defaultParallelism,
+      math.ceil(bytes(spark, dir, tables).toDouble / targetBytes).toInt)
+
+  /** The bytes of `tables` of `dir`, by their [[FileSetKey]]s. */
+  def bytes(spark: SparkSession, dir: String, tables: Seq[String]): Long =
+    tables.flatMap(t => fileSetKey(spark, path(dir, t)).toSeq.flatMap(_.files)).map(_._2).sum
+
+  /** The one memo of values derived from input tables (schemas, BPE
+    * merges, persisted text models, unigram, IVF and PQ models, Bloom
+    * filters). A value is kept under `name`, the caller's `params` and the
+    * [[FileSetKey]]s of the `paths` it was read from, never the session's
+    * confs; `inSession` adds the session that built it, for a value that
+    * holds a DataFrame only that session may run.
+    *
+    * A changed file set (new part names, as every Spark write leaves, or
+    * a new length or mtime) changes the key, so the value is derived
+    * again — but first every entry read from an earlier listing of one of
+    * its paths is dropped and its persisted DataFrame unpersisted, since
+    * Spark's cache matches a plan over a path by the path alone. The one
+    * case served stale is an in-place rewrite that keeps a file's name,
+    * length and mtime to the millisecond. A path that cannot be listed is
+    * derived afresh on every call. The [[MaxRemembered]] most recently
+    * used entries (and the sessions in their keys) are kept; an evicted
+    * persisted DataFrame is unpersisted. `build` runs outside the lock, so
+    * two threads that miss together both build, and the first is kept. */
+  private[graft] def remember[V](spark: SparkSession, name: String, params: Seq[Any],
+      paths: Seq[String], inSession: Boolean = false)(build: => V): V = {
+    val sources = paths.map(fileSetKey(spark, _))
+    if (sources.contains(None)) build
+    else {
+      val key = MemoKey(name, params, sources.flatten, Option.when(inSession)(spark))
+      memo.synchronized(Option(memo.get(key))) match {
+        case Some(v) => v.asInstanceOf[V]
+        case None =>
+          val now = key.sources.map(s => s.path -> s.files).toMap
+          drop(_.sources.exists(s => now.get(s.path).exists(_ != s.files)))
+          val v = build
+          memo.synchronized(Option(memo.putIfAbsent(key, v))) match {
+            case Some(first) => release(v); first.asInstanceOf[V]
+            case None => v
+          }
+      }
+    }
+  }
+
+  /** Drops every remembered value of the kinds `names`, so the next call
+    * derives it again. */
+  private[graft] def forget(names: String*): Unit = drop(k => names.contains(k.name))
+
+  private final case class MemoKey(name: String, params: Seq[Any], sources: Seq[FileSetKey],
+      session: Option[SparkSession])
+
+  /** Entries [[remember]] keeps. */
+  private val MaxRemembered = 1024
+  private val memo = new java.util.LinkedHashMap[MemoKey, Any](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[MemoKey, Any]): Boolean =
+      size > MaxRemembered && { release(e.getValue); true }
+  }
+
+  private def drop(which: MemoKey => Boolean): Unit = {
+    val dropped = memo.synchronized {
+      val it = memo.entrySet.iterator
+      val out = Seq.newBuilder[Any]
+      while (it.hasNext) {
+        val e = it.next()
+        if (which(e.getKey)) { out += e.getValue; it.remove() }
+      }
+      out.result()
+    }
+    dropped.foreach(release)
+  }
+
+  private def release(v: Any): Unit = v match {
+    case df: org.apache.spark.sql.Dataset[_] =>
+      try df.unpersist() catch { case scala.util.control.NonFatal(_) => () }
+    case _ =>
+  }
 }

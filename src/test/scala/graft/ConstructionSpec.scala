@@ -28,7 +28,7 @@ class ConstructionSpec extends SparkSpec {
     val q103 = SparkEntry.queries("q103_bpe_train")
     q103(spark, sf0001)
     val (collect, _) = jobsOf(TextAnalysis.bpeLearn(graft.sources.Tables.documents(spark, sf0001), 1))
-    def cold[T](body: => T): Seq[Int] = { TextAnalysis.clearBpeMemory(); jobsOf(body)._1 }
+    def cold[T](body: => T): Seq[Int] = { graft.sources.Tables.forget(TextAnalysis.BpeMerges); jobsOf(body)._1 }
     val entry = cold(q103(spark, sf0001))
     val runs = Seq(1, 3, 18).map(n => cold(TextAnalysis.bpeTrain(spark, sf0001, n)))
     assert(collect.nonEmpty)

@@ -291,7 +291,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("bloom-pruned incremental dedup matches the exact probe and actually prunes") {
-    Dedup.clearBloomCache()
+    graft.sources.Tables.forget(Dedup.BloomFilters)
     val exact = Dedup.incrementalDedup(spark, sf0001).collect()
     // a caller-owned Observation binds the probe metrics to THIS action:
     // the global Diagnostics name-keyed capture can race with a parallel
@@ -803,7 +803,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("k-means IVF model persists to parquet: a cold session loads it instead of retraining") {
     val m1 = Similarity.trainIvfCentroids(spark, sf0001)
-    Similarity.clearTrainedMemory() // simulate a fresh JVM's empty memory tier
+    graft.sources.Tables.forget(Similarity.IvfModels) // simulate a fresh JVM's empty memory tier
     spark.sparkContext.setJobGroup("ivf-reload", "model reload probe", interruptOnCancel = false)
     val m2 = try Similarity.trainIvfCentroids(spark, sf0001)
     finally spark.sparkContext.clearJobGroup()
@@ -867,7 +867,7 @@ class DedupSimilaritySpec extends SparkSpec {
       cbs.forall(_.length === Similarity.PqCodes) &&
       cbs.forall(_.forall(_.length === Similarity.PqSubDim)))
     // model persistence: a fresh memory must RELOAD the identical model
-    Similarity.clearPqMemory()
+    graft.sources.Tables.forget(Similarity.PqModels)
     val reloaded = Similarity.trainPqCodebooks(spark, sf0001)
     assert(reloaded.flatten.flatten.toSeq === cbs.flatten.flatten.toSeq,
       "persisted PQ model must reload bit-identically")

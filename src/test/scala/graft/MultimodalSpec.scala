@@ -779,10 +779,8 @@ class MultimodalSpec extends SparkSpec {
         Multimodal.audioPrefixIncrementalNormalized,
         Multimodal.videoPrefixIncrementalTimeNormalized)
         .foreach(q => q(spark, dir.toString).collect())
-      val dirKey = dir.toString.replaceAll("[^A-Za-z0-9]", "_")
       expected.foreach { case (name, key, sub, ddl) =>
-        val path = s"${graft.sources.Artifacts.Warehouse}/${name}_${dirKey}_" +
-          graft.sources.Bucketing.fingerprint(dir.toString, Seq("documents"), key) + sub
+        val path = FingerprintReference.path(dir.toString, name, key) + sub
         assert(new java.io.File(path, "_SUCCESS").exists(), s"$path was not built")
         assert(spark.read.parquet(path).schema.toDDL === ddl, path)
       }

@@ -1036,11 +1036,11 @@ class PipelineOpsSpec extends SparkSpec {
     }
     // clear the memoized histogram before EACH run so every measurement
     // pays the same fixed setup and only the per-iteration delta varies
-    TextAnalysis.clearModelCache()
+    graft.sources.Tables.forget(TextAnalysis.PersistedModels, TextAnalysis.UnigramModels)
     val j1 = jobsFor("uni-1") { TextAnalysis.unigramLearn(spark, sf0001, 1) }
-    TextAnalysis.clearModelCache()
+    graft.sources.Tables.forget(TextAnalysis.PersistedModels, TextAnalysis.UnigramModels)
     val j2 = jobsFor("uni-2") { TextAnalysis.unigramLearn(spark, sf0001, 2) }
-    TextAnalysis.clearModelCache()
+    graft.sources.Tables.forget(TextAnalysis.PersistedModels, TextAnalysis.UnigramModels)
     val j3 = jobsFor("uni-3") { TextAnalysis.unigramLearn(spark, sf0001, 3) }
     assert(j2 - j1 === j3 - j2,
       s"per-EM-iteration job count must be flat: $j1/$j2/$j3")
@@ -1212,14 +1212,24 @@ class PipelineOpsSpec extends SparkSpec {
     // checkpoint job), and nothing is left persisted (a localCheckpoint
     // would be)
     val persisted = spark.sparkContext.getPersistentRDDs.size
-    val tracker = spark.sparkContext.statusTracker
+    // each job's stages as its start event lists them, skipped ones
+    // included: the status tracker drops skipped stages first once more
+    // than spark.ui.retainedStages have run in the JVM
+    val tasksByJob = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        tasksByJob.put(e.jobId, e.stageInfos.map(_.numTasks))
+    }
     def shape(iters: Int): (Int, Seq[Int]) = {
       val (jobs, learned) = jobsOf(TextAnalysis.bpeLearn(graft.sources.Tables.documents(spark, sf0001), iters))
       assert(learned.length === iters)
-      val stages = jobs.flatMap(j => tracker.getJobInfo(j).map(_.stageIds().toSeq).getOrElse(Nil))
-      (jobs.length, stages.flatMap(st => tracker.getStageInfo(st).map(_.numTasks())).sorted)
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (!jobs.forall(tasksByJob.containsKey) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.forall(tasksByJob.containsKey), "the listener did not see every job start")
+      (jobs.length, jobs.flatMap(tasksByJob.get).sorted)
     }
-    val shapes = Seq(1, 3, deep).map(shape)
+    spark.sparkContext.addSparkListener(listener)
+    val shapes = try Seq(1, 3, deep).map(shape) finally spark.sparkContext.removeSparkListener(listener)
     assert(shapes.distinct.length === 1, s"(jobs, tasks per stage) for budgets 1/3/$deep: $shapes")
     assert(shapes.head._1 >= 1 && shapes.head._1 <= 2, s"one histogram collect expected: ${shapes.head}")
     assert(spark.sparkContext.getPersistentRDDs.size === persisted, "learning left an RDD persisted")
@@ -1229,7 +1239,7 @@ class PipelineOpsSpec extends SparkSpec {
     TextAnalysis.bpeTrain(spark, sf0001, iters = 1) // warm table metadata
     // each budget's merges are remembered once learned; forget them, so
     // every construction below trains
-    def cold[T](body: => T): (Seq[Int], T) = { TextAnalysis.clearBpeMemory(); jobsOf(body) }
+    def cold[T](body: => T): (Seq[Int], T) = { graft.sources.Tables.forget(TextAnalysis.BpeMerges); jobsOf(body) }
     val (j1, df1) = cold(TextAnalysis.bpeTrain(spark, sf0001, iters = 1))
     val (j2, _) = cold(TextAnalysis.bpeTrain(spark, sf0001, iters = 2))
     val (j3, df3) = cold(TextAnalysis.bpeTrain(spark, sf0001, iters = 3))

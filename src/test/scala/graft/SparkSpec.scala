@@ -69,15 +69,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * never-read-again artifacts into /tmp/graft_warehouse — exactly the
     * accumulation the bench artifact-read adjudication watches for. */
   protected def cleanupWarehouseFor(dir: String): Unit = {
-    val sanitized = dir.replaceAll("[^A-Za-z0-9]", "_")
+    import graft.sources.Artifacts
     if (spark.catalog.databaseExists("graft_lsh"))
       spark.sql("SHOW TABLES IN graft_lsh").collect()
-        .map(_.getString(1)).filter(_.contains(sanitized.toLowerCase))
+        .map(_.getString(1)).filter(_.contains(Artifacts.dirKey(dir).toLowerCase))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_lsh.`$t`"))
-    val wh = new java.io.File(graft.sources.Artifacts.Warehouse)
-    Option(wh.list()).getOrElse(Array.empty[String]).filter(_.contains(sanitized))
-      .foreach(e => graft.sources.Artifacts.deleteIfExists(
-        spark, s"${graft.sources.Artifacts.Warehouse}/$e"))
+    Artifacts.entries(dir).foreach(e => Artifacts.deleteIfExists(spark, e.getPath))
   }
 }
 

@@ -113,6 +113,23 @@ class ToolingSpec extends AnyFunSuite {
       s"persisted/bucketedTables, not by hand:\n${drift.mkString("\n")}")
   }
 
+  test("derived values: only sources/Tables.scala memoizes, only Artifacts.entries lists java.io.File") {
+    val sources = scalaSources("src/main")
+    assert(sources.exists(_._1.endsWith("sources/Tables.scala")))
+    def drift(allowed: Seq[String], banned: Seq[String]) = for {
+      (f, lines) <- sources if !allowed.exists(f.endsWith)
+      (line, i) <- lines.zipWithIndex
+      if banned.exists(line.contains)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    val maps = drift(Seq("sources/Tables.scala", "operators/Diagnostics.scala"),
+      Seq("TrieMap", "ConcurrentHashMap"))
+    if (maps.nonEmpty) fail("remember values derived from input tables with " +
+      s"graft.sources.Tables.remember, not in a map of their own:\n${maps.mkString("\n")}")
+    val listings = drift(Seq("sources/Artifacts.scala"), Seq("listFiles", ".list()", "lastModified"))
+    if (listings.nonEmpty) fail("list input files with graft.sources.Tables.fileSetKey (the Hadoop " +
+      s"FileSystem), not java.io.File:\n${listings.mkString("\n")}")
+  }
+
   test("streaming state: src/main/scala/graft/streaming touches no file and adds no listener") {
     val sources = scalaSources("src/main/scala/graft/streaming")
     assert(sources.nonEmpty)
